@@ -34,16 +34,10 @@ object Hits {
   /** Returns (vid, name, hub, auth). */
   def run(g: LinkGraph, iterCount: Int = 20, ctx: RunContext = RunContext.none,
           tol: Double = 0.01, mode: String = "auto"): DataFrame = {
-    val maxVid = g.nodes.agg(max("vid")).head() match {
-      case r if r.isNullAt(0) => -1L
-      case r => r.getLong(0)
-    }
-    if (maxVid < 0)
+    if (g.nodeFacts.maxVid < 0)
       return g.nodes.select(col("vid"), col("name"),
         lit(0.0).as("hub"), lit(0.0).as("auth")).limit(0)
-    val useCsr = mode == "csr" ||
-      (mode == "auto" && graft.graph.CsrGraph.inMemFits(g, maxVid, InMemMaxIds))
-    if (useCsr) runCsr(g, iterCount, tol, ctx)
+    if (graft.graph.CsrGraph.useCsr(g, mode, InMemMaxIds)) runCsr(g, iterCount, tol, ctx)
     else graft.bsp.IterativeConf.withStablePartitioning(g.spark) {
       runDf(g, iterCount, tol, ctx)
     }

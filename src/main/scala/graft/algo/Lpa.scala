@@ -106,15 +106,10 @@ object Lpa {
     * path records metrics only (driver-bounded arrays, re-run on resume). */
   def runSync(g: LinkGraph, maxSweeps: Int = 100, mode: String = "auto",
               ctx: graft.bsp.RunContext = graft.bsp.RunContext.none): DataFrame = {
-    val maxVid = g.nodes.agg(max("vid")).head() match {
-      case r if r.isNullAt(0) => -1L
-      case r => r.getLong(0)
-    }
-    if (maxVid < 0)
+    if (g.nodeFacts.maxVid < 0)
       return g.nodes.select(col("vid"), col("name"), col("name").as("label")).limit(0)
-    val useCsr = mode == "csr" ||
-      (mode == "auto" && g.namesAreNumeric &&
-        graft.graph.CsrGraph.inMemFits(g, maxVid, InMemMaxIds))
+    val useCsr = (mode != "auto" || g.namesAreNumeric) &&
+      graft.graph.CsrGraph.useCsr(g, mode, InMemMaxIds)
     if (useCsr) runSyncCsr(g, maxSweeps, ctx)
     else graft.bsp.IterativeConf.withStablePartitioning(g.spark) { runSync0(g, maxSweeps, ctx) }
   }
@@ -126,13 +121,11 @@ object Lpa {
         "use mode=\"df\" for string-named graphs")
     val spark = g.spark
     import spark.implicits._
-    val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val csr = graft.graph.CsrGraph.undirectedFromLinkGraph(g, p)
+    val csr = g.undirectedCsr
     val nodes = g.nodes.select($"vid", $"name").as[(Long, String)].collect()
     val nameVal = new Array[Long](csr.n)
     nodes.foreach { case (v, nm) => nameVal(v.toInt) = java.lang.Long.parseUnsignedLong(nm) }
     val labels = graft.bsp.CsrSuperstep.lpaSync(csr, nameVal, maxSweeps, ctx)
-    csr.unpersist()
     val rows = nodes.map { case (v, nm) => (v, nm, java.lang.Long.toUnsignedString(labels(v.toInt))) }
     spark.createDataset(rows.toSeq).toDF("vid", "name", "label")
   }

@@ -38,14 +38,10 @@ object PageRank {
 
   /** Returns (vid, name, score). */
   def run(g: LinkGraph, cfg: Config = Config(), ctx: RunContext = RunContext.none): DataFrame = {
-    val maxVid = g.nodes.agg(max("vid")).head() match {
-      case r if r.isNullAt(0) => -1L
-      case r => r.getLong(0)
-    }
-    if (maxVid < 0) return g.nodes.select(col("vid"), col("name"), lit(0.0).as("score")).limit(0)
-    val useCsr = cfg.mode == "csr" ||
-      (cfg.mode == "auto" && graft.graph.CsrGraph.inMemFits(g, maxVid, cfg.inMemMaxIds))
-    if (useCsr) runCsr(g, cfg, ctx) else runDf(g, cfg, ctx)
+    if (g.nodeFacts.maxVid < 0)
+      return g.nodes.select(col("vid"), col("name"), lit(0.0).as("score")).limit(0)
+    if (graft.graph.CsrGraph.useCsr(g, cfg.mode, cfg.inMemMaxIds)) runCsr(g, cfg, ctx)
+    else runDf(g, cfg, ctx)
   }
 
   /** One Spark job per superstep: broadcast state, gather over dst-range

@@ -29,25 +29,17 @@ object Wcc {
     * (id space fits memory) and the shuffle-based DataFrame supersteps. */
   def run(g: LinkGraph, iterCount: Long = Long.MaxValue, ctx: RunContext = RunContext.none,
           mode: String = "auto"): DataFrame = {
-    val maxVid = g.nodes.agg(max("vid")).head() match {
-      case r if r.isNullAt(0) => -1L
-      case r => r.getLong(0)
-    }
-    if (maxVid < 0)
+    if (g.nodeFacts.maxVid < 0)
       return g.nodes.select(col("vid"), col("name"), col("vid").as("component_vid"),
         col("name").as("component")).limit(0)
-    val useCsr = mode == "csr" ||
-      (mode == "auto" && graft.graph.CsrGraph.inMemFits(g, maxVid, InMemMaxIds))
-    if (useCsr) runCsr(g, iterCount, ctx) else runDf(g, iterCount, ctx)
+    if (graft.graph.CsrGraph.useCsr(g, mode, InMemMaxIds)) runCsr(g, iterCount, ctx)
+    else runDf(g, iterCount, ctx)
   }
 
   private def runCsr(g: LinkGraph, iterCount: Long, ctx: RunContext): DataFrame = {
     val spark = g.spark
     import spark.implicits._
-    val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val csr = graft.graph.CsrGraph.undirectedFromLinkGraph(g, p)
-    val labels = graft.bsp.CsrSuperstep.wcc(csr, iterCount, ctx)
-    csr.unpersist()
+    val labels = graft.bsp.CsrSuperstep.wcc(g.undirectedCsr, iterCount, ctx)
     val nodes = g.nodes.select($"vid", $"name").as[(Long, String)].collect()
     val names = nodes.toMap
     val rows = nodes.map { case (v, nm) =>

@@ -107,7 +107,11 @@ final class Catalog(rootDir: String) extends Serializable {
   def latestSnapshot(table: String): Option[Long] = snapshots(table).lastOption
 
   def readSnapshot(spark: SparkSession, table: String, id: Long): DataFrame =
-    spark.read.parquet(dataDir(table, id).toString)
+    spark.read.parquet(literal(dataDir(table, id)))
+
+  /** `p` for a Spark reader, which globs its paths: glob metacharacters in
+    * a table name (a run id) are escaped so they match literally. */
+  private def literal(p: HPath): String = p.toString.replaceAll("""([\\{}\[\]*?])""", """\\$1""")
 
   /** Append rows to a log-style table (each append = one new snapshot). */
   def append(df: DataFrame, table: String): Unit =
@@ -127,6 +131,6 @@ final class Catalog(rootDir: String) extends Serializable {
     val ids = snapshots(table)
     if (ids.isEmpty) None
     else Some(spark.read.schema(schema)
-      .json(ids.map(dataDir(table, _).toString): _*))
+      .json(ids.map(id => literal(dataDir(table, id))): _*))
   }
 }

@@ -3,6 +3,7 @@ package graft.ckpt
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.bsp.{RunContext, StepStat}
+import CatalogRunContext.jsonString
 import scala.collection.mutable.ArrayBuffer
 
 /** Durable superstep bookkeeping (north rule: "every superstep checkpoints
@@ -66,9 +67,17 @@ final class CatalogRunContext(
   // flush for superstep N overlap with superstep N+1's compute instead of
   // serialising into the loop. Single-threaded => manifests commit in step
   // order, and a kill leaves max-committed-step as the resume point exactly
-  // as in the synchronous design. Algorithms call finish() after the loop.
-  private val writer = java.util.concurrent.Executors.newSingleThreadExecutor(
-    (r: Runnable) => { val t = new Thread(r, s"graft-ckpt-$runId"); t.setDaemon(true); t })
+  // as in the synchronous design. Algorithms call finish() after the loop;
+  // finish() shuts the thread down, and a later commit starts a new one.
+  private var writerPool: java.util.concurrent.ExecutorService = null
+  private var writerThread: Thread = null
+  private def writer: java.util.concurrent.ExecutorService = {
+    if (writerPool == null)
+      writerPool = java.util.concurrent.Executors.newSingleThreadExecutor { (r: Runnable) =>
+        writerThread = new Thread(r, s"graft-ckpt-$runId"); writerThread.setDaemon(true); writerThread
+      }
+    writerPool
+  }
   private var inflight: java.util.concurrent.Future[_] = null
 
   private var pendingCommit: Option[(DataFrame, Int)] = None
@@ -139,12 +148,20 @@ final class CatalogRunContext(
 
   override def stats: Seq[StepStat] = stepStats.toSeq
 
+  /** Barrier: commits and queued metric flushes are durable, the writer
+    * thread has exited, and any async failure is rethrown. Idempotent. */
   override def finish(): Unit = {
-    pendingCommit.foreach { case (df, st) => submitCommit(df, st) } // defensive
-    pendingCommit = None
-    awaitInflight()
-    // drain queued metric flushes
-    writer.submit(new Runnable { override def run(): Unit = () }).get()
+    try {
+      pendingCommit.foreach { case (df, st) => submitCommit(df, st) } // defensive
+      pendingCommit = None
+      awaitInflight()
+    } finally if (writerPool != null) {
+      // shutdown() still runs the queued metric flushes before the thread exits
+      writerPool.shutdown()
+      writerPool.awaitTermination(Long.MaxValue, java.util.concurrent.TimeUnit.NANOSECONDS)
+      if (writerThread != null) writerThread.join() // the pool terminates just before its thread exits
+      writerPool = null; writerThread = null
+    }
     val err = asyncError.get()
     if (err != null) throw err
   }
@@ -159,7 +176,8 @@ final class CatalogRunContext(
       // writer thread cannot race on the log table's next snapshot id.
       def num(d: Double) = if (d.isNaN || d.isInfinite) "null" else d.toString
       val lines = pending.toSeq.map(m =>
-        s"""{"run_id":"$runId","algo":"${m.algo}","step":${m.step},"partition":${m.partition},""" +
+        s"""{"run_id":${jsonString(runId)},"algo":${jsonString(m.algo)},""" +
+          s""""step":${m.step},"partition":${m.partition},""" +
           s""""rows":${m.rows},"edges_scattered":${m.edgesScattered},"messages":${m.messages},""" +
           s""""delta":${num(m.delta)},"wall_ms":${num(m.wallMs)}}""")
       catalog.appendJsonRows(metricsTable, lines)
@@ -176,6 +194,19 @@ final class CatalogRunContext(
 
 object CatalogRunContext {
   import org.apache.spark.sql.types._
+
+  /** `s` as a quoted JSON string literal. */
+  private def jsonString(s: String): String = {
+    val b = new StringBuilder("\"")
+    s.foreach {
+      case '"' => b ++= "\\\""
+      case '\\' => b ++= "\\\\"
+      case c if c < ' ' => b ++= "\\u%04x".format(c.toInt)
+      case c => b += c
+    }
+    (b += '"').toString
+  }
+
   val metricsSchema: StructType = StructType(Seq(
     StructField("run_id", StringType), StructField("algo", StringType),
     StructField("step", IntegerType), StructField("partition", IntegerType),

@@ -41,25 +41,26 @@ class CsrGraph(
 
 object CsrGraph {
 
-  /** CSR auto-mode fit test shared by PageRank/Wcc/Hits/Lpa: the dense id
-    * space is bounded AND the total node-name payload — which the fast
-    * path collects once to mint the result — stays under `maxNameBytes`
-    * (the id bound alone would admit 32M url-length names ≈ several GB of
-    * driver strings). One cheap agg over the node table; the supersteps
-    * it gates cost orders of magnitude more. */
-  def inMemFits(g: LinkGraph, maxVid: Long, maxIds: Long,
-                maxNameBytes: Long = 2L * 1024 * 1024 * 1024): Boolean =
-    maxVid >= 0 && maxVid < math.min(maxIds, Int.MaxValue.toLong) && {
-      val r = g.nodes.agg(sum(length(col("name")))).head()
-      r.isNullAt(0) || r.getLong(0) <= maxNameBytes
-    }
+  /** The CSR/DF dispatch rule shared by PageRank, WCC, HITS, sync-LPA and
+    * triangles: "csr" / "df" force an engine; "auto" takes CSR when the
+    * dense id space is below `maxIds` AND the total node-name payload —
+    * which the fast path collects once to mint the result — stays under
+    * 2 GiB (the id bound alone would admit 32M url-length names ≈ several
+    * GB of driver strings). Reads the graph's memoized NodeFacts. */
+  def useCsr(g: LinkGraph, mode: String, maxIds: Long): Boolean = mode == "csr" || mode == "auto" && {
+    val f = g.nodeFacts
+    f.maxVid >= 0 && f.maxVid < math.min(maxIds, Int.MaxValue.toLong) &&
+      f.nameBytes <= 2L * 1024 * 1024 * 1024
+  }
+
+  /** The block owning vertex `v` of an `n`-id space split into `parts`
+    * dst ranges: floor(v·parts/n). */
+  private[graft] def blockOf(v: Int, parts: Int, n: Int): Int =
+    math.min(((v.toLong * parts) / n).toInt, parts - 1)
 
   private class RangeByDst(parts: Int, n: Int) extends Partitioner {
     override def numPartitions: Int = parts
-    override def getPartition(key: Any): Int = {
-      val d = key.asInstanceOf[Int]
-      math.min(((d.toLong * parts) / n).toInt, parts - 1)
-    }
+    override def getPartition(key: Any): Int = blockOf(key.asInstanceOf[Int], parts, n)
   }
 
   private def rangeBounds(parts: Int, n: Int, p: Int): (Int, Int) = {
@@ -101,26 +102,30 @@ object CsrGraph {
     }, preservesPartitioning = true).persist(storage)
   }
 
-  /** Shared builder body: maxVid bound check, present-bitmap collect,
-    * pack, edge count. One implementation — the three public builders
-    * differ only in the (gatherKey, neighbour) pair projection. An empty
-    * graph (no nodes, e.g. a window view over a dead time range) packs to
-    * a valid zero-vertex CsrGraph instead of NPE-ing on the null max. */
+  /** Shared builder body: vid bound check, present bitmap, pack, edge
+    * count. One implementation — the three public builders differ only in
+    * the (gatherKey, neighbour) pair projection. An empty graph (no nodes,
+    * e.g. a window view over a dead time range) packs to a valid
+    * zero-vertex CsrGraph. Dense vids (node count = max vid + 1, every
+    * minted graph) need no bitmap collect. */
   private def build(g: LinkGraph, parts: Int,
                     pairsDf: org.apache.spark.sql.DataFrame): CsrGraph = {
     val spark = g.spark
     import spark.implicits._
-    val maxRow = g.nodes.agg(max("vid")).head()
-    val maxVid = if (maxRow.isNullAt(0)) -1L else maxRow.getLong(0)
-    require(maxVid < Int.MaxValue, s"CSR fast path requires vid < 2^31, got $maxVid")
-    val n = (maxVid + 1).toInt
-    val presentVids = g.nodes.select("vid").as[Long].collect()
-    val present = new Array[Boolean](n)
-    presentVids.foreach(v => present(v.toInt) = true)
+    val f = g.nodeFacts
+    require(f.maxVid < Int.MaxValue, s"CSR fast path requires vid < 2^31, got ${f.maxVid}")
+    val n = (f.maxVid + 1).toInt
+    val present =
+      if (f.count == n) Array.fill(n)(true)
+      else {
+        val a = new Array[Boolean](n)
+        g.nodes.select("vid").as[Long].collect().foreach(v => a(v.toInt) = true)
+        a
+      }
     val pairs = pairsDf.as[(Int, Int)].rdd
     val blocks = pack(pairs, n, parts)
     val m = blocks.map(_.srcs.length.toLong).fold(0L)(_ + _)
-    new CsrGraph(n, presentVids.length, present, blocks, m)
+    new CsrGraph(n, f.count.toInt, present, blocks, m)
   }
 
   /** Directed gather CSR (in-neighbours per dst) from deduped edges. */
@@ -133,8 +138,9 @@ object CsrGraph {
   def reversedFromLinkGraph(g: LinkGraph, parts: Int): CsrGraph =
     build(g, parts, g.dedupEdges.select(col("src").cast("int"), col("dst").cast("int")))
 
-  /** Undirected gather CSR (distinct BOTH-neighbours per vertex). */
-  def undirectedFromLinkGraph(g: LinkGraph, parts: Int): CsrGraph =
+  /** Undirected gather CSR (distinct BOTH-neighbours per vertex). Built
+    * once per graph by LinkGraph.undirectedCsr. */
+  private[graph] def undirectedFromLinkGraph(g: LinkGraph, parts: Int): CsrGraph =
     build(g, parts, g.undirectedPairs.select(col("a").cast("int"), col("b").cast("int")))
 
   /** Per-source distinct out-degree as a dense array (gather blocks count

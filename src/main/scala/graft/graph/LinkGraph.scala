@@ -229,6 +229,8 @@ class LinkGraph(
   // adjacency lists (node_store.rs:176-199).
   @transient private var dedupCache: DataFrame = _
   @transient private var undirectedCache: DataFrame = _
+  @transient private var factsCache: NodeFacts = _
+  @transient private var csrCache: CsrGraph = _
 
   /** Distinct directed (src, dst) pairs — the adjacency after multi-edge
     * collapse (node_store.rs:176-199: one adjacency entry per neighbour).
@@ -253,6 +255,30 @@ class LinkGraph(
         .persist(StorageLevel.MEMORY_AND_DISK)
     }
     undirectedCache
+  }
+
+  /** Max vid, node count and total name bytes in one pass over the node
+    * table — the facts every CSR/DF dispatch reads (CsrGraph.useCsr).
+    * An RDD fold, because a global DataFrame aggregate runs as two jobs
+    * (map stage, then final stage) under AQE. Computed once per graph;
+    * reset by unpersist(). */
+  def nodeFacts: NodeFacts = synchronized {
+    if (factsCache == null)
+      factsCache = nodes.select(col("vid"), coalesce(length(col("name")), lit(0)).cast("long")).rdd
+        .aggregate(NodeFacts(-1L, 0L, 0L))(
+          (f, r) => NodeFacts(math.max(f.maxVid, r.getLong(0)), f.count + 1, f.nameBytes + r.getLong(1)),
+          (a, b) => NodeFacts(math.max(a.maxVid, b.maxVid), a.count + b.count, a.nameBytes + b.nameBytes))
+    factsCache
+  }
+
+  /** The undirected gather CSR (one block per shuffle partition at the
+    * first call) that WCC, CSR sync-LPA and the triangle count share.
+    * Packed once per graph; released by unpersist(). */
+  def undirectedCsr: CsrGraph = synchronized {
+    if (csrCache == null)
+      csrCache = CsrGraph.undirectedFromLinkGraph(this,
+        spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    csrCache
   }
 
   /** Distinct out-neighbour count per node; nodes with none get 0.
@@ -303,8 +329,13 @@ class LinkGraph(
     edges.unpersist(); nodes.unpersist()
     if (dedupCache != null) { dedupCache.unpersist(); dedupCache = null }
     if (undirectedCache != null) { undirectedCache.unpersist(); undirectedCache = null }
+    if (csrCache != null) { csrCache.unpersist(); csrCache = null }
+    factsCache = null
   }
 }
+
+/** Node-table facts: `maxVid` is -1 when no node has a vid ≥ 0. */
+final case class NodeFacts(maxVid: Long, count: Long, nameBytes: Long)
 
 object LinkGraph {
 

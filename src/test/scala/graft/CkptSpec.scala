@@ -91,10 +91,43 @@ class CkptSpec extends AnyFunSuite {
     // catalog root nested under a plain FILE: every mkdirs/create fails
     val f = Files.createTempFile("graft-ckpt-block", "")
     val ctx = new CatalogRunContext(new Catalog(f.toString + "/sub"), "run-e", spark)
-    ctx.record(graft.bsp.StepStat("pagerank", 1, 1L, 1L, 0.0, 1.0))
-    val e = intercept[Throwable] { ctx.finish() }
+    // record() rethrows the failure when the flush has already failed by
+    // then, finish() otherwise: either barrier may surface it
+    val e = intercept[Throwable] {
+      ctx.record(graft.bsp.StepStat("pagerank", 1, 1L, 1L, 0.0, 1.0))
+      ctx.finish()
+    }
     assert(e.getMessage != null)
     Files.delete(f)
+  }
+
+  test("finish() stops the writer thread and stays idempotent") {
+    val cat = new Catalog(Files.createTempDirectory("graft-ckpt-thr").toString)
+    val g = LinkGraph.fromNumericEdgeList(spark, edges)
+    val ctx = new CatalogRunContext(cat, "run-thr", spark)
+    def writers = Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread])
+      .filter(t => t.getName == "graft-ckpt-run-thr" && t.isAlive)
+    pr(g, ctx)
+    assert(writers.isEmpty, "writer thread still alive after finish()")
+    ctx.finish()
+    assert(ctx.metrics().get.count() > 0)
+    assert(writers.isEmpty)
+  }
+
+  test("a runId with quotes and backslashes round-trips through the metrics JSONL") {
+    val cat = new Catalog(Files.createTempDirectory("graft-ckpt-esc").toString)
+    val runId = "run \"q\" \\x*"
+    val g = LinkGraph.fromNumericEdgeList(spark, edges)
+    val ctx = new CatalogRunContext(cat, runId, spark)
+    val full = pr(g, ctx)
+    ctx.record(graft.bsp.StepStat("alg\"o\\", 13, 3L, 3L, 0.5, 1.0))
+    val rows = ctx.metrics().get.collect()
+    assert(rows.length > 13)
+    assert(rows.forall(r => r.getAs[String]("run_id") == runId && r.getAs[String]("algo") != null))
+    assert(rows.exists(r => r.getAs[String]("algo") == "alg\"o\\" && r.getAs[Int]("step") == 13))
+    // the resume path reads the committed snapshot back under the same id
+    val ctx2 = new CatalogRunContext(cat, runId, spark)
+    assert(pr(g, ctx2) == full && ctx2.resumedFromStep == 12L)
   }
 
   test("metrics table carries global and per-partition lineage rows") {
