@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import graft.graph.{CsrGraph, LinkGraph}
-import graft.bsp.{CsrSuperstep, LocalRunContext}
+import graft.bsp.LocalRunContext
 import graft.algo.{PageRank, Triangles, Wcc}
 import graft.io.Corpus
 
@@ -88,7 +88,7 @@ object Bench {
       def prLeg(): (Double, Int) = {
         val ctx = new LocalRunContext
         val (_, t) = time {
-          CsrSuperstep.pageRank(csr, outDeg, 20, 0.0, 0.85, true, ctx)
+          PageRank.csrScores(csr, outDeg, PageRank.Config(iterCount = 20, tol = 0.0), ctx)
         }
         (t, ctx.stats.count(_.algo == "pagerank-csr"))
       }

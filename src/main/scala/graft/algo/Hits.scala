@@ -3,8 +3,8 @@ package graft.algo
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import graft.graph.LinkGraph
-import graft.bsp.{RunContext, StepStat}
+import graft.graph.{CsrGraph, LinkGraph}
+import graft.bsp.{CsrSuperstep, RunContext, StepStat, Superstep}
 
 /** HITS hubs & authorities with the reference's semantics
   * (raphtory/src/algorithms/centrality/hits.rs:51-160):
@@ -29,27 +29,60 @@ import graft.bsp.{RunContext, StepStat}
   * directions in one broadcast job per superstep. */
 object Hits {
 
-  val InMemMaxIds: Long = 32L * 1000 * 1000
-
   /** Returns (vid, name, hub, auth). */
   def run(g: LinkGraph, iterCount: Int = 20, ctx: RunContext = RunContext.none,
           tol: Double = 0.01, mode: String = "auto"): DataFrame = {
     if (g.nodeFacts.maxVid < 0)
       return g.nodes.select(col("vid"), col("name"),
         lit(0.0).as("hub"), lit(0.0).as("auth")).limit(0)
-    if (graft.graph.CsrGraph.useCsr(g, mode, InMemMaxIds)) runCsr(g, iterCount, tol, ctx)
+    if (CsrGraph.useCsr(g, mode)) runCsr(g, iterCount, tol, ctx)
     else graft.bsp.IterativeConf.withStablePartitioning(g.spark) {
       runDf(g, iterCount, tol, ctx)
     }
   }
 
+  /** Forward CSR (in-neighbours per dst, gathers hub→recv_hub) and
+    * reversed CSR (out-neighbours per src, gathers auth→recv_auth): both
+    * gathers run in the same superstep, one broadcast each. */
   private def runCsr(g: LinkGraph, iterCount: Int, tol: Double, ctx: RunContext): DataFrame = {
     val spark = g.spark
     import spark.implicits._
     val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val fwd = graft.graph.CsrGraph.fromLinkGraph(g, p)             // in-nbrs per dst
-    val rev = graft.graph.CsrGraph.reversedFromLinkGraph(g, p)     // out-nbrs per src
-    val (hub, auth) = graft.bsp.CsrSuperstep.hits(fwd, rev, iterCount, tol, ctx)
+    val fwd = CsrGraph.fromLinkGraph(g, p)             // in-nbrs per dst
+    val rev = CsrGraph.reversedFromLinkGraph(g, p)     // out-nbrs per src
+    val n = fwd.n
+    val present = fwd.present
+    val ones = Array.tabulate(n)(v => if (present(v)) 1.0 else 0.0)
+    val (hub, auth) = Superstep.loop("hits-csr", ctx, 2 * fwd.edgeCount, 1, iterCount,
+        (ones, ones)) { case ((hub, auth), _) =>
+      val (recvHub, _) = CsrSuperstep.gather(fwd, hub, new Array[Double](_))(CsrSuperstep.sum)
+      val (recvAuth, _) = CsrSuperstep.gather(rev, auth, new Array[Double](_))(CsrSuperstep.sum)
+      var totH = 0.0
+      var totA = 0.0
+      var i = 0
+      while (i < n) {
+        if (present(i)) { totH += recvHub(i); totA += recvAuth(i) }
+        i += 1
+      }
+      var dH = 0.0
+      var dA = 0.0
+      val newHub = new Array[Double](n)
+      val newAuth = new Array[Double](n)
+      i = 0
+      while (i < n) {
+        if (present(i)) {
+          newHub(i) = if (totA == 0.0) 0.0 else recvAuth(i) / totA
+          newAuth(i) = if (totH == 0.0) 0.0 else recvHub(i) / totH
+          val ddH = math.abs(newHub(i) - hub(i))
+          val ddA = math.abs(newAuth(i) - auth(i))
+          if (ddH > dH) dH = ddH
+          if (ddA > dA) dA = ddA
+        }
+        i += 1
+      }
+      // tol = 0 disables early stopping
+      Superstep.Next((newHub, newAuth), math.max(dH, dA), tol > 0 && dH <= tol && dA <= tol)
+    }
     fwd.unpersist(); rev.unpersist()
     val rows = g.nodes.select($"vid").as[Long].collect().sorted
       .map(v => (v, hub(v.toInt), auth(v.toInt)))

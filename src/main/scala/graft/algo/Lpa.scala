@@ -2,7 +2,8 @@ package graft.algo
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.graph.LinkGraph
+import graft.graph.{CsrGraph, LinkGraph}
+import graft.bsp.{CsrSuperstep, RunContext, Superstep}
 import graft.rng.Rand08
 
 /** Community label propagation with the reference's semantics
@@ -24,7 +25,7 @@ import graft.rng.Rand08
   *    bounded by driver memory, intended for ≤ ~10^7-edge (sub)graphs.
   *  - `runSync`: a scalable deterministic red/black synchronous variant for
   *    arbitrary scale: nodes update in two colour phases per sweep (by vid
-  *    parity) so each phase is one shuffle-based DataFrame program; same
+  *    parity), each phase one superstep on either engine; same
   *    majority + largest-GID tie-break. Community *quality* matches LPA;
   *    the per-node assignment is deterministic but not stream-identical.
   */
@@ -91,31 +92,37 @@ object Lpa {
     spark.createDataset(rows).toDF("vid", "name", "label")
   }
 
-  val InMemMaxIds: Long = 32L * 1000 * 1000
-
   /** Scalable deterministic synchronous LPA (red/black by vid parity).
     * Numeric-GID graphs below the in-memory id bound take the CSR fast
     * path (identical labels; one broadcast gather per colour phase);
     * string-GID or huge graphs run the shuffle-based supersteps.
     *
+    * Each colour phase is one superstep, colour = step parity, at most
+    * 2·maxSweeps phases. Both engines halt after two consecutive phases
+    * that change nothing: that state is a fixed point of both colours, so
+    * the labels equal those of any longer run.
+    *
     * `ctx` (north rule): the DF path checkpoints state once per colour
-    * phase (superstep = half-sweep) and resumes from the max committed
-    * half-sweep; a mid-sweep resume cannot see the first colour phase's
-    * changed count, so that sweep never declares convergence — at worst
-    * one extra no-op sweep, labels identical (CkptSpec). The CSR fast
-    * path records metrics only (driver-bounded arrays, re-run on resume). */
+    * phase and resumes from the max committed phase; a resumed run starts
+    * its quiet-phase count afresh — at worst one extra no-op phase, labels
+    * identical (CkptSpec). The CSR fast path records metrics only
+    * (driver-bounded arrays, re-run on resume). */
   def runSync(g: LinkGraph, maxSweeps: Int = 100, mode: String = "auto",
-              ctx: graft.bsp.RunContext = graft.bsp.RunContext.none): DataFrame = {
+              ctx: RunContext = RunContext.none): DataFrame = {
     if (g.nodeFacts.maxVid < 0)
       return g.nodes.select(col("vid"), col("name"), col("name").as("label")).limit(0)
-    val useCsr = (mode != "auto" || g.namesAreNumeric) &&
-      graft.graph.CsrGraph.useCsr(g, mode, InMemMaxIds)
-    if (useCsr) runSyncCsr(g, maxSweeps, ctx)
-    else graft.bsp.IterativeConf.withStablePartitioning(g.spark) { runSync0(g, maxSweeps, ctx) }
+    val useCsr = (mode != "auto" || g.namesAreNumeric) && CsrGraph.useCsr(g, mode)
+    if (useCsr) runSyncCsr(g, maxSweeps, ctx) else runSyncDf(g, maxSweeps, ctx)
   }
 
-  private def runSyncCsr(g: LinkGraph, maxSweeps: Int,
-                         ctx: graft.bsp.RunContext): DataFrame = {
+  /** The halting rule both engines share: true once two consecutive phases
+    * (one of each colour) changed nothing. */
+  private def twoQuietPhases(): Long => Boolean = {
+    var quiet = 0
+    changed => { quiet = if (changed == 0) quiet + 1 else 0; quiet >= 2 }
+  }
+
+  private def runSyncCsr(g: LinkGraph, maxSweeps: Int, ctx: RunContext): DataFrame = {
     require(g.namesAreNumeric,
       "LPA CSR mode needs numeric GID names (labels are packed as u64); " +
         "use mode=\"df\" for string-named graphs")
@@ -123,60 +130,67 @@ object Lpa {
     import spark.implicits._
     val csr = g.undirectedCsr
     val nodes = g.nodes.select($"vid", $"name").as[(Long, String)].collect()
-    val nameVal = new Array[Long](csr.n)
-    nodes.foreach { case (v, nm) => nameVal(v.toInt) = java.lang.Long.parseUnsignedLong(nm) }
-    val labels = graft.bsp.CsrSuperstep.lpaSync(csr, nameVal, maxSweeps, ctx)
+    val init = Array.fill(csr.n)(Long.MinValue) // absent ids = Long.MinValue
+    nodes.foreach { case (v, nm) => init(v.toInt) = java.lang.Long.parseUnsignedLong(nm) }
+    val halt = twoQuietPhases()
+    // phases count from 0 on this engine: colour = phase % 2
+    val labels = Superstep.loop("lpa-csr", ctx, csr.edgeCount, 0, 2L * maxSweeps - 1, init) {
+      (l, phase) =>
+        val color = phase % 2
+        val (next, changed) = CsrSuperstep.gather(csr, l, new Array[Long](_)) { (b, prev, seg) =>
+          var changed = 0L
+          val counts = new scala.collection.mutable.LongMap[Long]()
+          var i = 0
+          while (i < seg.length) {
+            val w = b.lo + i
+            seg(i) = prev(w)
+            if (prev(w) != Long.MinValue && (w & 1) == color) {
+              counts.clear()
+              var k = b.offsets(i)
+              val end = b.offsets(i + 1)
+              while (k < end) {
+                val c = prev(b.srcs(k))
+                counts(c) = counts.getOrElse(c, 0L) + 1L
+                k += 1
+              }
+              if (counts.nonEmpty) {
+                var bestLabel = 0L
+                var bestCount = -1L
+                counts.foreachEntry { (lab, c) =>
+                  // GIDs are u64 stored in signed longs: ties break by
+                  // UNSIGNED order (Lpa.gidLt), not the wrapped sign
+                  if (c > bestCount ||
+                      (c == bestCount && java.lang.Long.compareUnsigned(lab, bestLabel) > 0)) {
+                    bestLabel = lab; bestCount = c
+                  }
+                }
+                if (bestLabel != seg(i)) { seg(i) = bestLabel; changed += 1 }
+              }
+            }
+            i += 1
+          }
+          changed
+        }
+        Superstep.Next(next, changed.toDouble, halt(changed))
+    }
     val rows = nodes.map { case (v, nm) => (v, nm, java.lang.Long.toUnsignedString(labels(v.toInt))) }
     spark.createDataset(rows.toSeq).toDF("vid", "name", "label")
   }
 
-  private def runSync0(g: LinkGraph, maxSweeps: Int,
-                       ctx: graft.bsp.RunContext): DataFrame = {
-    val spark = g.spark
-    import spark.implicits._
-    val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val pairs = g.undirectedPairs.repartition(p, $"a")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val pairCount = pairs.count()
+  private def runSyncDf(g: LinkGraph, maxSweeps: Int, ctx: RunContext): DataFrame = {
+    val halt = twoQuietPhases()
     // label ordering key: numeric GIDs by value, strings lexicographically
-    val nodes = g.nodes
-    var state = ctx.restoreOrInit(
-      nodes.select($"vid", $"name".as("label")).repartition(p, $"vid"))
-
-    // superstep = half-sweep (one colour phase); resume restarts at the
-    // max committed half-sweep. A mid-sweep resume (odd halfStep) cannot
-    // know the first phase's changed count, so that first resumed sweep
-    // never declares done — at worst one extra converged (no-op) sweep,
-    // labels unchanged.
-    var halfStep = ctx.startStep
-    var sweep = halfStep / 2
-    var startColor = halfStep % 2
-    var firstSweepPartial = startColor == 1
-    var done = false
-    while (!done && sweep < maxSweeps) {
-      var changedTotal = if (firstSweepPartial) 1L else 0L
-      for (color <- startColor to 1) {
-        val t0 = System.nanoTime()
-        val newState = lpaPhase(state, pairs, color, g.namesAreNumeric)
-        halfStep += 1
-        val ck = ctx.checkpoint(newState, halfStep)
-        // the changed aggregate materialises the lazy checkpoint — one job
-        // per colour phase (previously an eager localCheckpoint + agg, two)
-        val changed = ck.agg(coalesce(sum(when($"changed", 1L).otherwise(0L)), lit(0L)))
-          .head().getLong(0)
-        changedTotal += changed
-        state = ck.drop("changed")
-        ctx.record(graft.bsp.StepStat("lpa", halfStep, pairCount, pairCount,
-          changed.toDouble, (System.nanoTime() - t0) / 1e6))
-      }
-      startColor = 0
-      firstSweepPartial = false
-      done = changedTotal == 0
-      sweep += 1
+    val state = Superstep.dataFrame("lpa", ctx, g.undirectedPairs, "a") { (pairs, _) =>
+      Superstep.Dense(
+        init = g.nodes.select(col("vid"), col("name").as("label")),
+        maxSteps = 2L * maxSweeps,
+        // phases count from 1 on this engine: colour = (phase - 1) % 2
+        step = (state, phase, _) => lpaPhase(state, pairs, (phase - 1) % 2, g.namesAreNumeric),
+        aggs = Seq(coalesce(sum(when(col("changed"), 1L).otherwise(0L)), lit(0L))),
+        halt = (r, _) => halt(r.getLong(0)),
+        flags = Seq("changed"))
     }
-    ctx.finish() // barrier: async snapshot commits durable before returning
-    pairs.unpersist()
-    state.join(nodes, Seq("vid")).select($"vid", $"name", $"label")
+    state.join(g.nodes, Seq("vid")).select(col("vid"), col("name"), col("label"))
   }
 
   /** One red/black colour phase as a DataFrame program (PlanSpec audits

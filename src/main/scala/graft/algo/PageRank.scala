@@ -1,10 +1,9 @@
 package graft.algo
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
-import graft.graph.LinkGraph
-import graft.bsp.{RunContext, StepStat}
+import graft.graph.{CsrGraph, LinkGraph}
+import graft.bsp.{CsrSuperstep, RunContext, Superstep}
 
 /** Unweighted PageRank with the exact semantics of the reference
   * (raphtory/src/algorithms/centrality/pagerank.rs:55-183):
@@ -31,17 +30,15 @@ object PageRank {
       damping: Double = 0.85,
       useL2Norm: Boolean = true,
       /** "auto" picks the CSR fast path when the id space fits in memory
-        * (≤ inMemMaxIds), else the shuffle-based DataFrame supersteps;
+        * (CsrGraph.useCsr), else the shuffle-based DataFrame supersteps;
         * "df" / "csr" force a mode. Both modes share exact semantics. */
-      mode: String = "auto",
-      inMemMaxIds: Long = 32L * 1000 * 1000)
+      mode: String = "auto")
 
   /** Returns (vid, name, score). */
   def run(g: LinkGraph, cfg: Config = Config(), ctx: RunContext = RunContext.none): DataFrame = {
     if (g.nodeFacts.maxVid < 0)
       return g.nodes.select(col("vid"), col("name"), lit(0.0).as("score")).limit(0)
-    if (graft.graph.CsrGraph.useCsr(g, cfg.mode, cfg.inMemMaxIds)) runCsr(g, cfg, ctx)
-    else runDf(g, cfg, ctx)
+    if (CsrGraph.useCsr(g, cfg.mode)) runCsr(g, cfg, ctx) else runDf(g, cfg, ctx)
   }
 
   /** One Spark job per superstep: broadcast state, gather over dst-range
@@ -50,86 +47,113 @@ object PageRank {
     val spark = g.spark
     import spark.implicits._
     val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val csr = graft.graph.CsrGraph.fromLinkGraph(g, p)
-    val outDeg = graft.graph.CsrGraph.outDegrees(csr)
-    val score = graft.bsp.CsrSuperstep.pageRank(
-      csr, outDeg, cfg.iterCount, cfg.tol, cfg.damping, cfg.useL2Norm, ctx)
+    val csr = CsrGraph.fromLinkGraph(g, p)
+    val score = csrScores(csr, CsrGraph.outDegrees(csr), cfg, ctx)
     csr.unpersist()
     val rows = g.nodes.select($"vid", $"name").as[(Long, String)].collect()
       .map { case (v, nm) => (v, nm, score(v.toInt)) }
     spark.createDataset(rows.toSeq).toDF("vid", "name", "score")
   }
 
-  /** Shuffle-based supersteps — the arbitrary-scale path. */
-  private def runDf(g: LinkGraph, cfg: Config, ctx: RunContext): DataFrame =
-    graft.bsp.IterativeConf.withStablePartitioning(g.spark) { runDf0(g, cfg, ctx) }
+  /** The CSR supersteps over a packed gather CSR and its dense out-degree
+    * array; returns the dense score array (absent ids hold 0.0). */
+  private[graft] def csrScores(csr: CsrGraph, outDeg: Array[Int], cfg: Config,
+                               ctx: RunContext): Array[Double] = {
+    val n = csr.n
+    val nP = csr.nPresent
+    if (nP == 0) return new Array[Double](n)
+    val teleport = (1.0 - cfg.damping) / nP
+    val factor = cfg.damping / nP
+    val present = csr.present
+    val init = new Array[Double](n)
+    var v = 0
+    while (v < n) { if (present(v)) init(v) = 1.0 / nP; v += 1 }
 
-  private def runDf0(g: LinkGraph, cfg: Config, ctx: RunContext): DataFrame = {
-    val spark = g.spark
-    import spark.implicits._
-    val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    Superstep.loop("pagerank-csr", ctx, csr.edgeCount, 1, cfg.iterCount, init) { (score, _) =>
+      // contrib[u] = prev(u) / outdeg(u); sink mass from prev scores
+      val contrib = new Array[Double](n)
+      var sinkMass = 0.0
+      var u = 0
+      while (u < n) {
+        if (present(u)) {
+          if (outDeg(u) > 0) contrib(u) = score(u) / outDeg(u)
+          else sinkMass += score(u)
+        }
+        u += 1
+      }
+      val sinkContrib = factor * sinkMass
+      val (next, _) = CsrSuperstep.gather(csr, contrib, new Array[Double](_))(CsrSuperstep.sum)
+      var delta = 0.0
+      var w = 0
+      while (w < n) {
+        if (present(w)) {
+          next(w) = cfg.damping * next(w) + teleport + sinkContrib
+          val d = score(w) - next(w)
+          delta += (if (cfg.useL2Norm) d * d else math.abs(d))
+        } else next(w) = 0.0
+        w += 1
+      }
+      val normed = if (cfg.useL2Norm) math.sqrt(delta) else delta
+      Superstep.Next(next, normed, normed <= cfg.tol * nP)
+    }
+  }
 
-    val n = g.nodeCount
-    if (n == 0) return g.nodes.select($"vid", $"name", lit(0.0).as("score")).limit(0)
+  /** Initial DataFrame state (vid, out_degree, score = 1/n) over the
+    * src-partitioned deduped edge table. */
+  private[graft] def initState(nodes: DataFrame, edges: DataFrame, n: Long): DataFrame = {
+    val outDeg = edges.groupBy(col("src")).agg(count("*").as("out_degree"))
+    nodes.select(col("vid"))
+      .join(outDeg, col("vid") === col("src"), "left")
+      .select(col("vid"), coalesce(col("out_degree"), lit(0L)).as("out_degree"),
+        lit(1.0 / n).as("score"))
+  }
 
+  /** One DataFrame superstep (PlanSpec audits this fragment): scatter
+    * score/out_degree along the cached edge table, ONE shuffle to
+    * aggregate per dst, apply; `sinkContrib` is the dangling-mass term.
+    * Returns (vid, out_degree, score, prev_score).
+    *
+    * shuffle_hash hints: post-checkpoint state has unknown stats, so Spark
+    * would fall back to SMJ and re-sort the m-row cached edge table every
+    * superstep; SHJ builds the n-row state map instead. */
+  private[graft] def superstep(state: DataFrame, edges: DataFrame, damping: Double,
+                               teleport: Double, sinkContrib: Double): DataFrame = {
+    val contrib = state.hint("shuffle_hash").join(edges, state("vid") === edges("src"))
+      .groupBy(col("dst")).agg(sum(col("score") / col("out_degree")).as("gather"))
+    state.join(contrib.hint("shuffle_hash"), state("vid") === contrib("dst"), "left")
+      .select(state("vid"), state("out_degree"),
+        (lit(damping) * coalesce(col("gather"), lit(0.0)) + teleport + sinkContrib).as("score"),
+        state("score").as("prev_score"))
+  }
+
+  /** Shuffle-based supersteps — the arbitrary-scale path. State and edges
+    * are co-hash-partitioned on the vertex id; the per-step aggregate is
+    * (delta, next sink mass). */
+  private def runDf(g: LinkGraph, cfg: Config, ctx: RunContext): DataFrame = {
+    val n = g.nodeFacts.count
     val teleport = (1.0 - cfg.damping) / n
     val factor = cfg.damping / n
+    val diff = col("prev_score") - col("score")
+    val delta =
+      if (cfg.useL2Norm) sqrt(sum(pow(diff, 2.0))) else sum(abs(diff))
+    val sink = sum(when(col("out_degree") === 0, col("score")).otherwise(lit(0.0)))
+    def orZero(r: Row, i: Int) = if (r.isNullAt(i)) 0.0 else r.getDouble(i)
 
-    // static per-run structures: deduped edges and distinct out-degrees,
-    // hash-partitioned once and reused every superstep
-    val edges = g.dedupEdges.repartition(p, $"src").sortWithinPartitions($"src").persist(StorageLevel.MEMORY_AND_DISK)
-    val edgesScattered = edges.count() // also materialises the cache
-
-    val outDeg = edges.groupBy($"src").agg(count("*").as("out_degree"))
-    val init = g.nodes.select($"vid")
-      .join(outDeg, $"vid" === $"src", "left")
-      .select($"vid", coalesce($"out_degree", lit(0L)).as("out_degree"),
-        lit(1.0 / n).as("score"))
-
-    var state = ctx.restoreOrInit(init.repartition(p, $"vid"))
-    var step = ctx.startStep
-    // sink mass of the current state (Σ prev.score over out_degree == 0)
-    var sinkMass = {
-      val r = state.filter($"out_degree" === 0).agg(sum($"score")).head()
-      if (r.isNullAt(0)) 0.0 else r.getDouble(0)
+    val state = Superstep.dataFrame("pagerank", ctx, g.dedupEdges, "src") { (edges, _) =>
+      Superstep.Dense(
+        init = initState(g.nodes, edges, n),
+        maxSteps = cfg.iterCount,
+        // the first step of a run (or resume) reads the sink mass off the
+        // state; later ones take it from the previous step's aggregate
+        step = (state, _, last) => {
+          val sinkMass = last.fold(orZero(state.filter(col("out_degree") === 0)
+            .agg(sum(col("score"))).head(), 0))(orZero(_, 1))
+          superstep(state, edges, cfg.damping, teleport, factor * sinkMass)
+        },
+        aggs = Seq(delta, sink),
+        halt = (r, _) => orZero(r, 0) <= cfg.tol * n,
+        flags = Seq("prev_score"))
     }
-    var converged = false
-
-    while (!converged && step < cfg.iterCount) {
-      step += 1
-      val t0 = System.nanoTime()
-      val sinkContrib = factor * sinkMass
-
-      // shuffle_hash hints: post-checkpoint state has unknown stats, so
-      // Spark would fall back to SMJ and re-sort the m-row cached edge
-      // table every superstep; SHJ builds the n-row state map instead
-      val contrib = state.hint("shuffle_hash").join(edges, state("vid") === edges("src"))
-        .groupBy($"dst").agg(sum($"score" / $"out_degree").as("gather"))
-
-      val newState = state.join(contrib.hint("shuffle_hash"), state("vid") === contrib("dst"), "left")
-        .select(state("vid"), state("out_degree"),
-          (lit(cfg.damping) * coalesce($"gather", lit(0.0)) + teleport + sinkContrib).as("score"),
-          state("score").as("prev_score"))
-
-      val ck = ctx.checkpoint(newState, step)
-      val deltaExpr =
-        if (cfg.useL2Norm) sum(pow($"prev_score" - $"score", 2.0))
-        else sum(abs($"prev_score" - $"score"))
-      val row = ck.agg(deltaExpr.as("delta"),
-        sum(when($"out_degree" === 0, $"score").otherwise(lit(0.0))).as("sink")).head()
-      val rawDelta = if (row.isNullAt(0)) 0.0 else row.getDouble(0)
-      sinkMass = if (row.isNullAt(1)) 0.0 else row.getDouble(1)
-
-      val delta = if (cfg.useL2Norm) math.sqrt(rawDelta) else rawDelta
-      converged = delta <= cfg.tol * n
-
-      state.unpersist()
-      state = ck.drop("prev_score")
-      ctx.record(StepStat("pagerank", step, edgesScattered, edgesScattered, delta,
-        (System.nanoTime() - t0) / 1e6))
-    }
-    ctx.finish() // barrier: all async snapshot commits durable before we return
-    edges.unpersist()
-    state.join(g.nodes, Seq("vid")).select($"vid", $"name", $"score")
+    state.join(g.nodes, Seq("vid")).select(col("vid"), col("name"), col("score"))
   }
 }

@@ -48,7 +48,6 @@ object Pathing {
     var frontier = reached
     var level = 0L
     var done = frontier.isEmpty
-    val dbg = sys.env.contains("GRAFT_SSSP_DEBUG")
     // NOTE: this loop deliberately keeps EAGER checkpoints. The lazy-
     // checkpoint fusion that pays off in Components.reach and
     // temporallyReachableNodes was measured here too (interleaved sf0.1
@@ -59,16 +58,12 @@ object Pathing {
     // RDDs) are near-free at any frontier size.
     while (!done && level < cutoff) {
       level += 1
-      val t0 = System.nanoTime()
       val next = ssspStep(frontier, reached, pairs, level).localCheckpoint(true)
-      val t1 = System.nanoTime()
       done = next.isEmpty
-      val t2 = System.nanoTime()
       if (!done) {
         reached = reached.union(next).localCheckpoint(true)
         frontier = next
       }
-      if (dbg) println(f"[sssp] level $level step=${(t1 - t0) / 1e9}%.2f isEmpty=${(t2 - t1) / 1e9}%.2f union=${(System.nanoTime() - t2) / 1e9}%.2f")
     }
     pairs.unpersist()
     if (!withPaths) reached.join(g.nodes, Seq("vid")).select($"vid", $"name", $"dist")
@@ -212,7 +207,6 @@ object Pathing {
     light.count()
     edges.unpersist()
 
-    val dbg = sys.env.contains("GRAFT_SSSP_DEBUG")
     var state = g.nodes.filter($"name" === source)
       .select($"vid", lit(0.0).as("dist")).localCheckpoint(false)
     var bucket = if (state.count() == 0) -1L else 0L
@@ -220,7 +214,6 @@ object Pathing {
     try {
     while (bucket >= 0) {
       outer += 1
-      val tB = System.nanoTime()
       var inner = 0L
       if (outer > maxBuckets) throw new IllegalStateException(
         s"deltaStepping exceeded $maxBuckets buckets (delta=$d0 too small for the weight range)")
@@ -261,8 +254,6 @@ object Pathing {
         state = deltaRelax(bNodes, heavy, state).select($"vid", $"dist").localCheckpoint(false)
       }
       val nextRow = state.agg(min(when($"dist" >= hi, floor($"dist" / d0).cast("long")))).head()
-      if (dbg) println(f"[delta] bucket=$bucket relaxations=$inner " +
-        f"wall=${(System.nanoTime() - tB) / 1e9}%.2f")
       // max(_, bucket+1): dist/d0 can round down across the hi boundary
       bucket = if (nextRow.isNullAt(0)) -1L else math.max(nextRow.getLong(0), bucket + 1)
     }

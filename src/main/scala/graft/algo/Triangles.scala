@@ -28,8 +28,6 @@ import graft.graph.{CsrBlock, CsrGraph, LinkGraph}
   */
 object Triangles {
 
-  val InMemMaxIds: Long = 32L * 1000 * 1000
-
   /** Dispatches by the shared CSR/DF fit rule: a graph that fits is counted
     * on its shared undirected CSR (countCsr), a larger one by the
     * DataFrame wedge join (enumerate). Both give the same exact count. */
@@ -42,7 +40,7 @@ object Triangles {
 
   private def countOn(g: LinkGraph): Long =
     if (g.nodeFacts.maxVid < 0) 0L
-    else if (CsrGraph.useCsr(g, "auto", InMemMaxIds)) countCsr(g.undirectedCsr)
+    else if (CsrGraph.useCsr(g, "auto")) countCsr(g.undirectedCsr)
     else triangleCountOf(undirectedSimple(g))
 
   /** Triangle count by sorted-adjacency intersection (HERO, SIGMOD'24)

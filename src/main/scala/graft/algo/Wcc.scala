@@ -3,8 +3,8 @@ package graft.algo
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import graft.graph.LinkGraph
-import graft.bsp.{RunContext, StepStat}
+import graft.graph.{CsrGraph, LinkGraph}
+import graft.bsp.{CsrSuperstep, RunContext, Superstep}
 
 /** Weakly connected components — min-label (HashMin) propagation with the
   * exact semantics of the reference
@@ -22,8 +22,6 @@ import graft.bsp.{RunContext, StepStat}
   */
 object Wcc {
 
-  val InMemMaxIds: Long = 32L * 1000 * 1000
-
   /** Returns (vid, name, component_vid, component) where `component` is the
     * representative's GID (name). Auto-dispatches between the CSR fast path
     * (id space fits memory) and the shuffle-based DataFrame supersteps. */
@@ -32,14 +30,39 @@ object Wcc {
     if (g.nodeFacts.maxVid < 0)
       return g.nodes.select(col("vid"), col("name"), col("vid").as("component_vid"),
         col("name").as("component")).limit(0)
-    if (graft.graph.CsrGraph.useCsr(g, mode, InMemMaxIds)) runCsr(g, iterCount, ctx)
-    else runDf(g, iterCount, ctx)
+    if (CsrGraph.useCsr(g, mode)) runCsr(g, iterCount, ctx)
+    else hashMin("wcc", g.nodes.select(col("vid")), "label", g.undirectedPairs, iterCount, ctx)
+      .join(g.nodes, Seq("vid"))
+      .join(g.nodes.select(col("vid").as("label"), col("name").as("component")), Seq("label"))
+      .select(col("vid"), col("name"), col("label").as("component_vid"), col("component"))
   }
 
   private def runCsr(g: LinkGraph, iterCount: Long, ctx: RunContext): DataFrame = {
     val spark = g.spark
     import spark.implicits._
-    val labels = graft.bsp.CsrSuperstep.wcc(g.undirectedCsr, iterCount, ctx)
+    val csr = g.undirectedCsr
+    val present = csr.present
+    val init = Array.tabulate(csr.n)(v => if (present(v)) v else -1) // absent ids = -1
+    // step 0 is the init min-neighbour pass, so the loop runs to iterCount
+    // inclusive; a vertex adopts its least neighbour label when smaller
+    val labels = Superstep.loop("wcc-csr", ctx, csr.edgeCount, 0, iterCount, init) { (l, step) =>
+      val (next, changed) = CsrSuperstep.gather(csr, l, new Array[Int](_)) { (b, prev, out) =>
+        var changed = 0L
+        var i = 0
+        while (i < out.length) {
+          val cur = prev(b.lo + i)
+          var m = cur
+          var k = b.offsets(i)
+          val end = b.offsets(i + 1)
+          while (k < end) { val c = prev(b.srcs(k)); if (c < m) m = c; k += 1 }
+          if (m < cur) changed += 1
+          out(i) = m
+          i += 1
+        }
+        changed
+      }
+      Superstep.Next(next, changed.toDouble, changed == 0 && step > 0)
+    }
     val nodes = g.nodes.select($"vid", $"name").as[(Long, String)].collect()
     val names = nodes.toMap
     val rows = nodes.map { case (v, nm) =>
@@ -49,52 +72,49 @@ object Wcc {
     spark.createDataset(rows.toSeq).toDF("vid", "name", "component_vid", "component")
   }
 
-  private def runDf(g: LinkGraph, iterCount: Long, ctx: RunContext): DataFrame =
-    graft.bsp.IterativeConf.withStablePartitioning(g.spark) { runDf0(g, iterCount, ctx) }
-
-  private def runDf0(g: LinkGraph, iterCount: Long, ctx: RunContext): DataFrame = {
-    val spark = g.spark
-    import spark.implicits._
-    val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
-
-    val pairs = g.undirectedPairs.repartition(p, $"a").sortWithinPartitions($"a").persist(StorageLevel.MEMORY_AND_DISK)
-    val pairCount = pairs.count()
-
-    // init: least(vid, min neighbour vid)
-    val nbrMin = pairs.groupBy($"a").agg(min($"b").as("nbr_min"))
-    val init = g.nodes.select($"vid")
-      .join(nbrMin, $"vid" === $"a", "left")
-      .select($"vid", least($"vid", coalesce($"nbr_min", $"vid")).as("label"))
-
-    var state = ctx.restoreOrInit(init.repartition(p, $"vid"))
-    var step = ctx.startStep
-    var done = false
-
-    while (!done && step < iterCount) {
-      step += 1
-      val t0 = System.nanoTime()
-      val msgs = state.hint("shuffle_hash").join(pairs, state("vid") === pairs("a"))
-        .groupBy($"b").agg(min($"label").as("cand"))
-
-      val newState = state.join(msgs.hint("shuffle_hash"), state("vid") === msgs("b"), "left")
-        .select(state("vid"),
-          least($"label", coalesce($"cand", $"label")).as("label"),
-          (coalesce($"cand", $"label") < $"label").as("changed"))
-
-      val ck = ctx.checkpoint(newState, step)
-      val changed = ck.agg(sum(when($"changed", 1L).otherwise(0L))).head().getLong(0)
-      state.unpersist()
-      state = ck.drop("changed")
-      done = changed == 0
-      ctx.record(StepStat("wcc", step, pairCount, pairCount, changed.toDouble,
-        (System.nanoTime() - t0) / 1e6))
+  /** HashMin min-label propagation on the DataFrame driver, shared by WCC
+    * and Dedup.clustersFromPairs. `ids` is the one-column key table, `pairs`
+    * a symmetric (a, b) neighbour table; init label = least(key, min
+    * neighbour key), already final when there are no pairs, so then no
+    * superstep runs. Returns the (key, `label`) state. */
+  private[graft] def hashMin(algo: String, ids: DataFrame, label: String, pairs: DataFrame,
+                             maxSteps: Long, ctx: RunContext): DataFrame = {
+    Superstep.dataFrame(algo, ctx, pairs, "a") { (pairs, m) =>
+      Superstep.Dense(
+        init = hashMinInit(ids, pairs, label),
+        maxSteps = if (m == 0) 0 else maxSteps,
+        step = (state, _, _) => hashMinStep(state, pairs),
+        // sum() over an EMPTY state is NULL (ids can be empty while pairs
+        // reference absent ids): coalesce keeps the exit exact
+        aggs = Seq(coalesce(sum(when(col("changed"), 1L).otherwise(0L)), lit(0L))),
+        halt = (r, _) => r.getLong(0) == 0,
+        flags = Seq("changed"))
     }
-    ctx.finish() // barrier: async snapshot commits durable before returning
-    pairs.unpersist()
-    state
-      .join(g.nodes, Seq("vid"))
-      .join(g.nodes.select($"vid".as("label"), $"name".as("component")), Seq("label"))
-      .select($"vid", $"name", $"label".as("component_vid"), $"component")
+  }
+
+  /** HashMin init state: (key, `label` = least(key, min neighbour key)). */
+  private[graft] def hashMinInit(ids: DataFrame, pairs: DataFrame, label: String): DataFrame = {
+    val key = ids.columns.head
+    val nbrMin = pairs.groupBy(col("a")).agg(min(col("b")).as("nbr_min"))
+    ids.join(nbrMin, col(key) === col("a"), "left")
+      .select(col(key), least(col(key), coalesce(col("nbr_min"), col(key))).as(label))
+  }
+
+  /** One HashMin superstep (PlanSpec audits this fragment): every key takes
+    * the least label among itself and its neighbours. `state` is (key,
+    * label) hash-partitioned on the key, `pairs` the cached (a, b) table
+    * partitioned on a; ONE shuffle (the min-message aggregation), both
+    * joins shuffled-hash. Returns (key, label, changed); a state restored
+    * from a snapshot still carries the last step's `changed` column,
+    * which is ignored. */
+  private[graft] def hashMinStep(state: DataFrame, pairs: DataFrame): DataFrame = {
+    val Array(key, label) = state.columns.take(2)
+    val msgs = state.hint("shuffle_hash").join(pairs, state(key) === pairs("a"))
+      .groupBy(col("b")).agg(min(col(label)).as("cand"))
+    state.join(msgs.hint("shuffle_hash"), state(key) === msgs("b"), "left")
+      .select(state(key),
+        least(col(label), coalesce(col("cand"), col(label))).as(label),
+        (coalesce(col("cand"), col(label)) < col(label)).as("changed"))
   }
 
   /** Largest connected component: the induced subgraph of the biggest WCC

@@ -1,289 +1,51 @@
 package graft.bsp
 
+import scala.reflect.ClassTag
 import graft.graph.{CsrGraph, CsrBlock}
 
-/** Superstep drivers over the CSR fast path (SURVEY §4.3): one Spark job
-  * per superstep — broadcast the previous dense state, gather per CSR
-  * block, stitch the returned dense segments on the driver. Semantics are
-  * identical to the shuffle-based DataFrame supersteps; only the physical
-  * plan differs. */
+/** The gather primitive of the CSR fast path (SURVEY §4.3): one Spark job
+  * per call — broadcast the previous dense state, run a per-block kernel
+  * over every CSR block, stitch the returned dense segments on the driver.
+  * The superstep loops themselves run on bsp.Superstep.loop; semantics
+  * are identical to the shuffle-based DataFrame supersteps, only the
+  * physical plan differs. */
 object CsrSuperstep {
 
-  /** PageRank with the reference semantics (pagerank.rs:55-183); returns the
-    * dense score array (absent ids hold 0.0). */
-  def pageRank(csr: CsrGraph, outDeg: Array[Int], iterCount: Int, tol: Double,
-               damping: Double, useL2Norm: Boolean,
-               ctx: RunContext = RunContext.none): Array[Double] = {
-    val sc = csr.blocks.sparkContext
-    val n = csr.n
-    val nP = csr.nPresent
-    if (nP == 0) return new Array[Double](n)
-    val teleport = (1.0 - damping) / nP
-    val factor = damping / nP
-    val present = csr.present
-
-    var score = new Array[Double](n)
-    var v = 0
-    while (v < n) { if (present(v)) score(v) = 1.0 / nP; v += 1 }
-
-    var step = 0
-    var converged = false
-    while (!converged && step < iterCount) {
-      step += 1
-      val t0 = System.nanoTime()
-      // contrib[u] = prev(u) / outdeg(u); sink mass from prev scores
-      val contrib = new Array[Double](n)
-      var sinkMass = 0.0
-      var u = 0
-      while (u < n) {
-        if (present(u)) {
-          if (outDeg(u) > 0) contrib(u) = score(u) / outDeg(u)
-          else sinkMass += score(u)
-        }
-        u += 1
-      }
-      val sinkContrib = factor * sinkMass
-      val bc = sc.broadcast(contrib)
-      val segments = csr.blocks.map { b =>
-        val c = bc.value
-        val out = new Array[Double](b.hi - b.lo)
-        var i = 0
-        while (i < out.length) {
-          var acc = 0.0
-          var k = b.offsets(i)
-          val end = b.offsets(i + 1)
-          while (k < end) { acc += c(b.srcs(k)); k += 1 }
-          out(i) = acc
-          i += 1
-        }
-        (b.lo, out)
-      }.collect()
-      bc.destroy()
-      val next = new Array[Double](n)
-      for ((lo, seg) <- segments) System.arraycopy(seg, 0, next, lo, seg.length)
-      var delta = 0.0
-      var w = 0
-      while (w < n) {
-        if (present(w)) {
-          next(w) = damping * next(w) + teleport + sinkContrib
-          val d = score(w) - next(w)
-          delta += (if (useL2Norm) d * d else math.abs(d))
-        } else next(w) = 0.0
-        w += 1
-      }
-      score = next
-      val normed = if (useL2Norm) math.sqrt(delta) else delta
-      converged = normed <= tol * nP
-      ctx.record(StepStat("pagerank-csr", step, csr.edgeCount, csr.edgeCount, normed,
-        (System.nanoTime() - t0) / 1e6))
+  /** Broadcasts `state`; for each block, `kernel(block, state, segment)`
+    * fills `segment` (a `newArray(hi - lo)` covering the block's dst range
+    * [lo, hi)) and returns a per-block count (e.g. changed vertices).
+    * Returns the stitched `newArray(n)` result and the summed count. The
+    * kernel's inner loops run over primitive arrays, unboxed. */
+  def gather[S: ClassTag, T <: AnyRef](csr: CsrGraph, state: S, newArray: Int => T)(
+      kernel: (CsrBlock, S, T) => Long): (T, Long) = {
+    val bc = csr.blocks.sparkContext.broadcast(state)
+    val segments = csr.blocks.map { b =>
+      val seg = newArray(b.hi - b.lo)
+      val count = kernel(b, bc.value, seg)
+      (b.lo, b.hi - b.lo, seg, count)
+    }.collect()
+    bc.destroy()
+    val out = newArray(csr.n)
+    var total = 0L
+    for ((lo, len, seg, count) <- segments) {
+      System.arraycopy(seg, 0, out, lo, len)
+      total += count
     }
-    ctx.finish()
-    score
+    (out, total)
   }
 
-  /** HITS (hits.rs:51-160) over a forward CSR (in-neighbours per dst,
-    * gathers hub→recv_hub) and a reversed CSR (out-neighbours per src,
-    * gathers auth→recv_auth). Both gathers run in the same superstep with
-    * one broadcast each; tol = 0 disables early stopping. Returns
-    * (hub, auth) dense arrays. */
-  def hits(fwd: CsrGraph, rev: CsrGraph, iterCount: Int, tol: Double,
-           ctx: RunContext = RunContext.none): (Array[Double], Array[Double]) = {
-    val sc = fwd.blocks.sparkContext
-    val n = fwd.n
-    val present = fwd.present
-    var hub = new Array[Double](n)
-    var auth = new Array[Double](n)
-    var v = 0
-    while (v < n) { if (present(v)) { hub(v) = 1.0; auth(v) = 1.0 }; v += 1 }
-
-    def gather(csr: CsrGraph, state: Array[Double]): Array[Double] = {
-      val bc = sc.broadcast(state)
-      val segments = csr.blocks.map { b =>
-        val s = bc.value
-        val out = new Array[Double](b.hi - b.lo)
-        var i = 0
-        while (i < out.length) {
-          var acc = 0.0
-          var k = b.offsets(i)
-          val end = b.offsets(i + 1)
-          while (k < end) { acc += s(b.srcs(k)); k += 1 }
-          out(i) = acc
-          i += 1
-        }
-        (b.lo, out)
-      }.collect()
-      bc.destroy()
-      val res = new Array[Double](n)
-      for ((lo, seg) <- segments) System.arraycopy(seg, 0, res, lo, seg.length)
-      res
+  /** The sum kernel PageRank and HITS share: out(i) = Σ s(src) over the
+    * in-neighbours of vertex lo + i. */
+  val sum: (CsrBlock, Array[Double], Array[Double]) => Long = { (b, s, out) =>
+    var i = 0
+    while (i < out.length) {
+      var acc = 0.0
+      var k = b.offsets(i)
+      val end = b.offsets(i + 1)
+      while (k < end) { acc += s(b.srcs(k)); k += 1 }
+      out(i) = acc
+      i += 1
     }
-
-    var step = 0
-    var done = false
-    while (!done && step < iterCount) {
-      step += 1
-      val t0 = System.nanoTime()
-      val recvHub = gather(fwd, hub)   // per dst: Σ hub(in-nbr)
-      val recvAuth = gather(rev, auth) // per src: Σ auth(out-nbr)
-      var totH = 0.0
-      var totA = 0.0
-      var i = 0
-      while (i < n) {
-        if (present(i)) { totH += recvHub(i); totA += recvAuth(i) }
-        i += 1
-      }
-      var dH = 0.0
-      var dA = 0.0
-      val newHub = new Array[Double](n)
-      val newAuth = new Array[Double](n)
-      i = 0
-      while (i < n) {
-        if (present(i)) {
-          newHub(i) = if (totA == 0.0) 0.0 else recvAuth(i) / totA
-          newAuth(i) = if (totH == 0.0) 0.0 else recvHub(i) / totH
-          val ddH = math.abs(newHub(i) - hub(i))
-          val ddA = math.abs(newAuth(i) - auth(i))
-          if (ddH > dH) dH = ddH
-          if (ddA > dA) dA = ddA
-        }
-        i += 1
-      }
-      hub = newHub; auth = newAuth
-      done = tol > 0 && dH <= tol && dA <= tol
-      ctx.record(StepStat("hits-csr", step, 2 * fwd.edgeCount, 2 * fwd.edgeCount,
-        math.max(dH, dA), (System.nanoTime() - t0) / 1e6))
-    }
-    ctx.finish()
-    (hub, auth)
-  }
-
-  /** Synchronous red/black LPA (label_propagation.rs:21-76 semantics, the
-    * deterministic two-colour schedule of algo.Lpa.runSync) over an
-    * undirected CSR, for graphs with numeric GIDs: labels are GID values,
-    * update = majority neighbour label, ties to the largest GID. Per colour
-    * phase: one broadcast + one gather job. Returns the dense label array
-    * (absent ids = Long.MinValue). */
-  def lpaSync(csr: CsrGraph, nameVal: Array[Long], maxSweeps: Int,
-              ctx: RunContext = RunContext.none): Array[Long] = {
-    val sc = csr.blocks.sparkContext
-    val n = csr.n
-    val present = csr.present
-    var labels = new Array[Long](n)
-    var v = 0
-    while (v < n) { labels(v) = if (present(v)) nameVal(v) else Long.MinValue; v += 1 }
-
-    var sweep = 0
-    var done = false
-    while (!done && sweep < maxSweeps) {
-      var changedTotal = 0L
-      var color = 0
-      while (color <= 1) {
-        val t0 = System.nanoTime()
-        val bc = sc.broadcast(labels)
-        val segments = csr.blocks.map { b =>
-          val l = bc.value
-          val seg = new Array[Long](b.hi - b.lo)
-          var changed = 0L
-          val counts = new scala.collection.mutable.LongMap[Long]()
-          var i = 0
-          while (i < seg.length) {
-            val w = b.lo + i
-            seg(i) = if (w < l.length) l(w) else Long.MinValue
-            if (l(w) != Long.MinValue && (w & 1) == color) {
-              counts.clear()
-              var k = b.offsets(i)
-              val end = b.offsets(i + 1)
-              while (k < end) {
-                val c = l(b.srcs(k))
-                counts(c) = counts.getOrElse(c, 0L) + 1L
-                k += 1
-              }
-              if (counts.nonEmpty) {
-                var bestLabel = 0L
-                var bestCount = -1L
-                counts.foreachEntry { (lab, c) =>
-                  // GIDs are u64 stored in signed longs: ties break by
-                  // UNSIGNED order (Lpa.gidLt), not the wrapped sign
-                  if (c > bestCount ||
-                      (c == bestCount && java.lang.Long.compareUnsigned(lab, bestLabel) > 0)) {
-                    bestLabel = lab; bestCount = c
-                  }
-                }
-                if (bestLabel != seg(i)) { seg(i) = bestLabel; changed += 1 }
-              }
-            }
-            i += 1
-          }
-          (b.lo, seg, changed)
-        }.collect()
-        bc.destroy()
-        val next = labels.clone()
-        for ((lo, seg, ch) <- segments) {
-          System.arraycopy(seg, 0, next, lo, seg.length)
-          changedTotal += ch
-        }
-        labels = next
-        ctx.record(StepStat("lpa-csr", 2 * sweep + color, csr.edgeCount, csr.edgeCount,
-          changedTotal.toDouble, (System.nanoTime() - t0) / 1e6))
-        color += 1
-      }
-      done = changedTotal == 0
-      sweep += 1
-    }
-    ctx.finish()
-    labels
-  }
-
-  /** Min-label propagation (connected_components.rs:34-93) over an
-    * undirected CSR; returns the dense label array (absent ids = -1). */
-  def wcc(csr: CsrGraph, iterCount: Long = Long.MaxValue,
-          ctx: RunContext = RunContext.none): Array[Int] = {
-    val sc = csr.blocks.sparkContext
-    val n = csr.n
-    val present = csr.present
-    var labels = new Array[Int](n)
-    var v = 0
-    while (v < n) { labels(v) = if (present(v)) v else -1; v += 1 }
-
-    var step = 0L
-    var done = false
-    // +1: the init min-neighbour pass is step 0 (guard Long overflow)
-    val maxSteps = if (iterCount > Long.MaxValue - 1) Long.MaxValue else iterCount + 1
-    while (!done && step < maxSteps) {
-      val t0 = System.nanoTime()
-      val bc = sc.broadcast(labels)
-      val segments = csr.blocks.map { b =>
-        val l = bc.value
-        val out = new Array[Int](b.hi - b.lo)
-        var i = 0
-        while (i < out.length) {
-          var m = Int.MaxValue
-          var k = b.offsets(i)
-          val end = b.offsets(i + 1)
-          while (k < end) { val c = l(b.srcs(k)); if (c < m) m = c; k += 1 }
-          out(i) = m
-          i += 1
-        }
-        (b.lo, out)
-      }.collect()
-      bc.destroy()
-      var changed = 0L
-      val next = labels.clone()
-      for ((lo, seg) <- segments) {
-        var i = 0
-        while (i < seg.length) {
-          val w = lo + i
-          if (present(w) && seg(i) < next(w)) { next(w) = seg(i); changed += 1 }
-          i += 1
-        }
-      }
-      labels = next
-      done = changed == 0 && step > 0
-      ctx.record(StepStat("wcc-csr", step.toInt, csr.edgeCount, csr.edgeCount,
-        changed.toDouble, (System.nanoTime() - t0) / 1e6))
-      step += 1
-    }
-    ctx.finish()
-    labels
+    0L
   }
 }

@@ -14,11 +14,8 @@ object IterativeConf {
       "spark.sql.adaptive.enabled" -> "false",
       // shuffled-hash beats sort-merge for the per-superstep joins: the
       // state side rebuilds every superstep, so SMJ pays a sort per
-      // iteration that SHJ avoids. GRAFT_PREFER_SMJ=true forces the SMJ
-      // preference back on for A/B probes (the old GRAFT_PREFER_SMJ_OFF
-      // name had inverted semantics: its value was assigned verbatim, so
-      // setting it "ON" turned the SMJ preference on)
-      "spark.sql.join.preferSortMergeJoin" -> sys.env.getOrElse("GRAFT_PREFER_SMJ", "false"))
+      // iteration that SHJ avoids
+      "spark.sql.join.preferSortMergeJoin" -> "false")
     val prev = keys.map { case (k, _) => k -> spark.conf.get(k) }
     keys.foreach { case (k, v) => spark.conf.set(k, v) }
     try body finally prev.foreach { case (k, v) => spark.conf.set(k, v) }

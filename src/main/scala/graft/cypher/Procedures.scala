@@ -53,6 +53,15 @@ object Procedures {
     "temporal_motifs" -> (Seq("motif", "n"),
       "temporal_motifs(deltaMillis) — Paranjape 40-slot temporal 3-node census"))
 
+  /** The 32-byte ChaCha seed of `CALL louvain(seed)`: the seed's
+    * big-endian 8-byte encoding repeated 4 times, so every bit of the
+    * BIGINT reaches the stream. */
+  private[graft] def louvainSeed(seed: Long): Array[Byte] = {
+    val b = java.nio.ByteBuffer.allocate(32)
+    for (_ <- 0 until 4) b.putLong(seed)
+    b.array()
+  }
+
   private def argErr(proc: String, want: String): Nothing =
     throw new IllegalArgumentException(
       s"CALL $proc: expected arguments ($want); see Procedures.catalogue")
@@ -145,13 +154,12 @@ object Procedures {
         if (args.nonEmpty) argErr(name, "no arguments")
         graft.algo.Metrics.localClusteringCoefficient(g).select(col("vid"), col("value"))
       case "louvain" =>
-        val seed = args match {
-          case Seq() => Array.fill[Byte](32)(11)
-          case Seq(n) => Array.fill[Byte](32)(longArg(name, "seed BIGINT", n).toByte)
+        val louvain = args match {
+          case Seq() => graft.algo.Louvain.run(g)
+          case Seq(n) => graft.algo.Louvain.run(g, seed = louvainSeed(longArg(name, "seed BIGINT", n)))
           case _ => argErr(name, "seed BIGINT")
         }
-        graft.algo.Louvain.run(g, seed = seed)
-          .select(col("vid"), col("name"), col("community"))
+        louvain.select(col("vid"), col("name"), col("community"))
       case "betweenness" =>
         val k = args match {
           case Seq() => None

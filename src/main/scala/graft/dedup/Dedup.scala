@@ -206,12 +206,12 @@ object Dedup {
     * cluster minimum is the canonical copy (`keep = true`; singletons keep
     * themselves). Returns (id, cluster, keep).
     *
-    * HashMin label propagation with Wcc's superstep shape (one shuffle per
-    * step, lazy checkpoint + convergence count fused into one job, AQE off
-    * via IterativeConf so the hash partitioning survives localCheckpoint).
-    * Near-dup clusters are near-cliques, so the loop converges in a
-    * handful of supersteps regardless of corpus size; every stage is a
-    * hash-partitioned equi-join/agg — no driver state. */
+    * HashMin label propagation on WCC's superstep (Wcc.hashMin: one
+    * shuffle per step, lazy checkpoint + convergence count fused into one
+    * job on the bsp.Superstep driver). Near-dup clusters are near-cliques,
+    * so the loop converges in a handful of supersteps regardless of corpus
+    * size; every stage is a hash-partitioned equi-join/agg — no driver
+    * state. */
   def dupClusters(docs: DataFrame, threshold: Double = 0.7,
                   idCol: String = "doc_id", textCol: String = "text",
                   nHashes: Int = 16, bands: Int = 4, shingleN: Int = 5,
@@ -227,46 +227,11 @@ object Dedup {
     * singleton clusters. */
   def clustersFromPairs(ids: DataFrame, dupPairs: DataFrame,
                         ctx: graft.bsp.RunContext = graft.bsp.RunContext.none): DataFrame = {
-    val spark = ids.sparkSession
-    graft.bsp.IterativeConf.withStablePartitioning(spark) {
-      val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
-      val dup = dupPairs.select(col("a"), col("b"))
-      val pairs = dup.union(dup.select(col("b").as("a"), col("a").as("b")))
-        .repartition(p, col("a")).sortWithinPartitions(col("a"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val pairCount = pairs.count()
-
-      val nbrMin = pairs.groupBy(col("a")).agg(min(col("b")).as("nbr_min"))
-      val init = ids.select(col("id"))
-        .join(nbrMin, col("id") === col("a"), "left")
-        .select(col("id"), least(col("id"), coalesce(col("nbr_min"), col("id"))).as("cluster"))
-      var state = ctx.restoreOrInit(init.repartition(p, col("id")))
-      var step = ctx.startStep
-      var done = pairCount == 0L
-      while (!done) {
-        step += 1
-        val t0 = System.nanoTime()
-        val msgs = state.hint("shuffle_hash").join(pairs, state("id") === pairs("a"))
-          .groupBy(col("b")).agg(min(col("cluster")).as("cand"))
-        val newState = state.join(msgs.hint("shuffle_hash"), state("id") === msgs("b"), "left")
-          .select(state("id"),
-            least(col("cluster"), coalesce(col("cand"), col("cluster"))).as("cluster"),
-            (coalesce(col("cand"), col("cluster")) < col("cluster")).as("changed"))
-        val ck = ctx.checkpoint(newState, step)
-        // sum() over an EMPTY state returns NULL (ids can be empty while
-        // pairs reference absent ids) — coalesce keeps the exit exact
-        val changed = ck.agg(coalesce(sum(when(col("changed"), 1L).otherwise(0L)), lit(0L)))
-          .head().getLong(0)
-        state.unpersist()
-        state = ck.drop("changed")
-        done = changed == 0
-        ctx.record(graft.bsp.StepStat("dup_clusters", step, pairCount, pairCount,
-          changed.toDouble, (System.nanoTime() - t0) / 1e6))
-      }
-      ctx.finish() // barrier: async snapshot commits durable before returning
-      pairs.unpersist()
-      state.select(col("id"), col("cluster"), (col("id") === col("cluster")).as("keep"))
-    }
+    val dup = dupPairs.select(col("a"), col("b"))
+    val pairs = dup.union(dup.select(col("b").as("a"), col("a").as("b")))
+    graft.algo.Wcc.hashMin("dup_clusters", ids.select(col("id")), "cluster", pairs,
+      Long.MaxValue, ctx)
+      .select(col("id"), col("cluster"), (col("id") === col("cluster")).as("keep"))
   }
 
   /** 32-bit SimHash over whitespace tokens: sign-sum of md5u32 token-hash

@@ -41,16 +41,19 @@ class CsrGraph(
 
 object CsrGraph {
 
+  /** The dense id-space bound of the CSR fast path: 32M ids keep the
+    * per-superstep dense state arrays within driver and executor memory. */
+  val InMemMaxIds: Long = 32L * 1000 * 1000
+
   /** The CSR/DF dispatch rule shared by PageRank, WCC, HITS, sync-LPA and
     * triangles: "csr" / "df" force an engine; "auto" takes CSR when the
-    * dense id space is below `maxIds` AND the total node-name payload —
+    * dense id space is below InMemMaxIds AND the total node-name payload —
     * which the fast path collects once to mint the result — stays under
     * 2 GiB (the id bound alone would admit 32M url-length names ≈ several
     * GB of driver strings). Reads the graph's memoized NodeFacts. */
-  def useCsr(g: LinkGraph, mode: String, maxIds: Long): Boolean = mode == "csr" || mode == "auto" && {
+  def useCsr(g: LinkGraph, mode: String): Boolean = mode == "csr" || mode == "auto" && {
     val f = g.nodeFacts
-    f.maxVid >= 0 && f.maxVid < math.min(maxIds, Int.MaxValue.toLong) &&
-      f.nameBytes <= 2L * 1024 * 1024 * 1024
+    f.maxVid >= 0 && f.maxVid < InMemMaxIds && f.nameBytes <= 2L * 1024 * 1024 * 1024
   }
 
   /** The block owning vertex `v` of an `n`-id space split into `parts`
@@ -72,8 +75,7 @@ object CsrGraph {
   }
 
   /** Pack a (dst, src) pair RDD into dst-range CSR blocks. */
-  def pack(pairs: RDD[(Int, Int)], n: Int, parts: Int,
-           storage: StorageLevel = StorageLevel.MEMORY_AND_DISK): RDD[CsrBlock] = {
+  def pack(pairs: RDD[(Int, Int)], n: Int, parts: Int): RDD[CsrBlock] = {
     val partitioner = new RangeByDst(parts, n)
     pairs.partitionBy(partitioner).mapPartitionsWithIndex({ (pid, it) =>
       val (lo, hi) = rangeBounds(parts, n, pid)
@@ -99,7 +101,7 @@ object CsrGraph {
         j += 1
       }
       Iterator(CsrBlock(lo, hi, offsets, srcs))
-    }, preservesPartitioning = true).persist(storage)
+    }, preservesPartitioning = true).persist(StorageLevel.MEMORY_AND_DISK)
   }
 
   /** Shared builder body: vid bound check, present bitmap, pack, edge

@@ -1,18 +1,17 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 import graft.graph.LinkGraph
 import graft.algo.PageRank
 
-/** Diagnostic: print the physical plan of one DF-PageRank superstep to
-  * check that the state⋈edges join and the state-update join reuse the
-  * hash partitioning (no extra Exchange). */
+/** Diagnostic: print the physical plan of one DF-PageRank superstep — the
+  * production step builder on a checkpointed state, under the loop
+  * driver's AQE-off scope — to check that the state⋈edges join and the
+  * state-update join reuse the hash partitioning (no extra Exchange). */
 object PlanCheck {
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder().master("local[8]")
       .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("AQE", "true"))
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -24,31 +23,12 @@ object PlanCheck {
     }.toDF("src", "dst")
     val g = LinkGraph.fromRawEdges(edges)
 
-    val p = 8
-    val e = g.dedupEdges.repartition(p, $"src").persist()
-    e.count()
-    val outDeg = e.groupBy($"src").agg(count(lit(1)).as("out_degree"))
-    val init = g.nodes.select($"vid")
-      .join(outDeg, $"vid" === $"src", "left")
-      .select($"vid", coalesce($"out_degree", lit(0L)).as("out_degree"), lit(1.0 / n).as("score"))
-    var state = init.repartition(p, $"vid").localCheckpoint(true)
-
-    for (i <- 1 to 3) {
-      val contrib = state.join(e, state("vid") === e("src"))
-        .groupBy($"dst").agg(sum($"score" / $"out_degree").as("gather"))
-      val newState = state.join(contrib, state("vid") === contrib("dst"), "left")
-        .select(state("vid"), state("out_degree"),
-          (lit(0.85) * coalesce($"gather", lit(0.0)) + 0.15 / n).as("score"),
-          state("score").as("prev_score"))
-      if (i <= 2) {
-        println(s"=== iteration $i plan ===")
-        newState.explain("formatted")
-      }
-      val t0 = System.nanoTime()
-      val ck = newState.localCheckpoint(true)
-      println(f"iter $i materialize: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      state.unpersist()
-      state = ck.drop("prev_score")
+    graft.bsp.IterativeConf.withStablePartitioning(spark) {
+      val p = 8
+      val e = g.dedupEdges.repartition(p, $"src").sortWithinPartitions($"src").persist()
+      e.count()
+      val state = PageRank.initState(g.nodes, e, n).repartition(p, $"vid").localCheckpoint(true)
+      PageRank.superstep(state, e, 0.85, 0.15 / n, 0.0).explain("formatted")
     }
     spark.stop()
   }

@@ -68,7 +68,7 @@ object ScalingCheck {
         val outDeg = graft.graph.CsrGraph.outDegrees(cg)
         (1 to rounds).map { r =>
           val ctx = new graft.bsp.LocalRunContext
-          graft.bsp.CsrSuperstep.pageRank(cg, outDeg, iters, 0.0, 0.85, true, ctx)
+          PageRank.csrScores(cg, outDeg, PageRank.Config(iterCount = iters, tol = 0.0), ctx)
           val stepsSec = ctx.stats.map(_.wallMs).sum / 1e3
           val rate = m.toDouble * iters / stepsSec
           println(f"SCALING mode=csr cores=$cores round=$r steps=$stepsSec%.1f rate=$rate%.0f")

@@ -87,6 +87,33 @@ class CkptSpec extends AnyFunSuite {
     assert(resumed == full)
   }
 
+  test("clustersFromPairs kill/resume: clusters identical, pre-crash supersteps not recomputed") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-ckpt-dup").toString
+    val cat = new Catalog(root)
+    // a path 0-1-...-9 (min label needs several hops) plus a pair 20-21
+    // and singleton 30
+    val ids = (Seq(30L, 20L, 21L) ++ (0L to 9L)).toDF("id")
+    val pairs = ((0L until 9L).map(i => (i + 1, i)) :+ ((21L, 20L))).toDF("a", "b")
+    def clusters(ctx: graft.bsp.RunContext) =
+      graft.dedup.Dedup.clustersFromPairs(ids, pairs, ctx).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
+    val full = clusters(new CatalogRunContext(cat, "dup-a", spark))
+    val committed = cat.snapshots("state/dup-a")
+    assert(committed.size >= 3, s"need >2 supersteps to crash-drop, got $committed")
+    assert(full == (0L to 9L).map(i => (i, 0L, i == 0L)).toSet ++
+      Set((20L, 20L, true), (21L, 20L, false), (30L, 30L, true)))
+    clusters(new CatalogRunContext(cat, "dup-b", spark))
+    for (s <- 3L to committed.max)
+      Files.delete(Paths.get(root, "state/dup-b/meta", s"manifest-$s.json"))
+    val ctx2 = new CatalogRunContext(cat, "dup-b", spark)
+    val resumed = clusters(ctx2)
+    assert(ctx2.resumedFromStep == 2L)
+    assert(ctx2.stats.nonEmpty && ctx2.stats.forall(_.step > 2),
+      "resume recomputed pre-crash supersteps")
+    assert(resumed == full)
+  }
+
   test("async metric-flush failures surface at the finish() barrier, not silently") {
     // catalog root nested under a plain FILE: every mkdirs/create fails
     val f = Files.createTempFile("graft-ckpt-block", "")

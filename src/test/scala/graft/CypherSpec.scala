@@ -1159,6 +1159,16 @@ class CypherSpec extends AnyFunSuite {
     assert(censusC == census.toSeq.zipWithIndex.collect { case (c, i) if c > 0 => (i.toLong, c) })
   }
 
+  test("CALL louvain(seed): seeds congruent mod 256 build different ChaCha seeds") {
+    val s11 = graft.cypher.Procedures.louvainSeed(11L)
+    val s267 = graft.cypher.Procedures.louvainSeed(267L)
+    assert(s11.length == 32 && s267.length == 32)
+    assert(!s11.sameElements(s267))
+    // big-endian 8-byte encoding, repeated 4 times
+    val be267 = Array[Byte](0, 0, 0, 0, 0, 0, 1, 11)
+    assert(s267.toSeq == Seq.fill(4)(be267.toSeq).flatten)
+  }
+
   test("Procedures.catalogue stays in sync with invoke()") {
     val needsArgs = Map("sssp" -> Seq[Any]("zero"), "kcore" -> Seq[Any](2L),
       "temporal_motifs" -> Seq[Any](1000L))

@@ -54,6 +54,52 @@ class LpaSpec extends AnyFunSuite {
     assert(csr == df)
   }
 
+  /** A numeric graph (vid = GID) whose sync LPA changes labels in the
+    * first two sweeps and first goes quiet after phase 3 — two quiet
+    * phases later, on the odd phase 5, both engines halt. */
+  def oddBoundaryGraph: LinkGraph = {
+    import spark.implicits._
+    LinkGraph.fromRawEdges(Seq(
+      (8L, 6L), (8L, 3L), (0L, 7L), (8L, 4L), (8L, 5L), (3L, 1L), (4L, 1L), (3L, 0L), (0L, 8L),
+      (3L, 6L), (0L, 0L), (7L, 1L), (2L, 8L), (4L, 3L), (0L, 8L), (8L, 6L), (0L, 1L), (5L, 2L))
+      .toDF("src", "dst"))
+  }
+
+  def syncLabels(g: LinkGraph, maxSweeps: Int, mode: String,
+                 ctx: graft.bsp.RunContext = graft.bsp.RunContext.none): Map[Long, String] =
+    Lpa.runSync(g, maxSweeps = maxSweeps, mode = mode, ctx = ctx).collect()
+      .map(r => r.getLong(0) -> r.getString(2)).toMap
+
+  test("sync mode: CSR == DF under the shared phase cap (maxSweeps = 1, not converged)") {
+    val g = oddBoundaryGraph
+    val csrCtx, dfCtx = new graft.bsp.LocalRunContext
+    val csr = syncLabels(g, 1, "csr", csrCtx)
+    val df = syncLabels(g, 1, "df", dfCtx)
+    assert(csr == df)
+    // both engines stop at the cap of 2 phases, the second still changing
+    assert(csrCtx.stats.map(_.delta) == dfCtx.stats.map(_.delta))
+    assert(dfCtx.stats.size == 2 && dfCtx.stats.last.delta > 0)
+    assert(csr != syncLabels(g, 100, "df"), "graph converged within one sweep")
+  }
+
+  test("sync mode: convergence on an odd phase boundary is a fixed point on both engines") {
+    import spark.implicits._
+    val g = oddBoundaryGraph
+    val csrCtx, dfCtx = new graft.bsp.LocalRunContext
+    val csr = syncLabels(g, 100, "csr", csrCtx)
+    val df = syncLabels(g, 100, "df", dfCtx)
+    assert(csr == df)
+    val phases = dfCtx.stats.size
+    assert(phases % 2 == 1, s"halted after $phases phases, want an odd count")
+    assert(csrCtx.stats.size == phases)
+    assert(dfCtx.stats.takeRight(2).forall(_.delta == 0.0))
+    // one more phase (the colour after the last one) changes nothing
+    val state = df.toSeq.toDF("vid", "label")
+    val next = Lpa.lpaPhase(state, g.undirectedPairs, phases % 2, numericNames = true)
+    assert(next.filter($"changed").count() == 0)
+    assert(next.collect().map(r => r.getLong(0) -> r.getString(1)).toMap == df)
+  }
+
   test("sync mode: deterministic and produces connected communities") {
     val g = LinkGraph.fromEdgeList(spark, fixtureEdges)
     val r1 = Lpa.runSync(g).collect().map(r => r.getString(1) -> r.getString(2)).toMap

@@ -38,19 +38,11 @@ class PlanSpec extends AnyFunSuite {
         graft.io.Corpus.linkTargets(i, 16, 7L).map(j => (i, j))
       }.toDF("src", "dst")
       val g = LinkGraph.fromRawEdges(edges0)
-      val e = g.dedupEdges.repartition(p, $"src").sortWithinPartitions($"src").persist()
+      val e = graft.bsp.Superstep.staticTable(g.dedupEdges, "src", p)
       e.count()
-      val outDeg = e.groupBy($"src").agg(count(lit(1)).as("out_degree"))
-      val state = g.nodes.select($"vid")
-        .join(outDeg, $"vid" === $"src", "left")
-        .select($"vid", coalesce($"out_degree", lit(0L)).as("out_degree"),
-          lit(1.0 / n).as("score"))
+      val state = graft.algo.PageRank.initState(g.nodes, e, n)
         .repartition(p, $"vid").localCheckpoint(true)
-      val contrib = state.hint("shuffle_hash").join(e, state("vid") === e("src"))
-        .groupBy($"dst").agg(sum($"score" / $"out_degree").as("gather"))
-      val newState = state.join(contrib.hint("shuffle_hash"), state("vid") === contrib("dst"), "left")
-        .select(state("vid"), state("out_degree"),
-          (lit(0.85) * coalesce($"gather", lit(0.0)) + 0.15 / n).as("score"))
+      val newState = graft.algo.PageRank.superstep(state, e, 0.85, 0.15 / n, 0.0)
       // tree collect: the cached dedupEdges BUILD lineage (embedded in the
       // InMemoryRelation string) ran once, not per superstep
       import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -69,6 +61,35 @@ class PlanSpec extends AnyFunSuite {
       assert(!s.contains("BroadcastNestedLoopJoin"))
       e.unpersist(); g.unpersist()
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
+  }
+
+  test("HashMin superstep (WCC + dup clusters): ONE exchange, both joins SHJ, no sort") {
+    import org.apache.spark.sql.execution.SortExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
+    withoutAutoBroadcast {
+      graft.bsp.IterativeConf.withStablePartitioning(spark) {
+        val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
+        val n = 50000L
+        val edges0 = spark.range(0, n, 1, 4).flatMap { i =>
+          graft.io.Corpus.linkTargets(i, 8, 17L).map(j => (i, j))
+        }.toDF("src", "dst")
+        val g = LinkGraph.fromRawEdges(edges0)
+        val pairs = graft.bsp.Superstep.staticTable(g.undirectedPairs, "a", p)
+        pairs.count()
+        val state = graft.algo.Wcc.hashMinInit(g.nodes.select($"vid"), pairs, "label")
+          .repartition(p, $"vid").localCheckpoint(true)
+        val exec = graft.algo.Wcc.hashMinStep(state, pairs).queryExecution.executedPlan
+        val s = exec.toString
+        val exchanges = exec.collect { case x: ShuffleExchangeExec => x }.length
+        assert(exchanges == 1, s"expected exactly 1 shuffle per superstep, got $exchanges in:\n$s")
+        assert(exec.collect { case j: ShuffledHashJoinExec => j }.length == 2,
+          s"superstep joins are not both SHJ:\n$s")
+        assert(exec.collect { case srt: SortExec => srt }.isEmpty,
+          s"unexpected per-superstep sort:\n$s")
+        pairs.unpersist(); g.unpersist()
+      }
+    }
   }
 
   test("sssp + temporal-reachability supersteps: SHJ against the cached big table, no sort, no window") {
