@@ -217,48 +217,57 @@ object Bench {
       extra("scaling_efficiency") = f"$he%.3f"
     }
 
-    def jsonLine(queryDecimals: Int, totalDecimals: Int,
-                 detail: Iterable[(String, String)],
-                 queries: Iterable[(String, Double)] = results): String = {
-      val qs = queries.map { case (k, v) =>
-        "\"" + k + "\":" + s"%.${queryDecimals}f".format(v)
-      }.mkString("{", ",", "}")
-      val ex = detail.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }.mkString("{", ",", "}")
-      // `value` is ALWAYS the total over every leg, elided or not
-      val total = s"%.${totalDecimals}f".format(results.values.filter(_ >= 0).sum)
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","detail":$ex}"""
-    }
     // authoritative artifact: full detail, written to a file the driver
     // (and the docs) can read regardless of stdout capture limits
-    val full = jsonLine(3, 3, extra ++ fullOnly)
+    val full = jsonLine(sfDir, results.toSeq, results.toSeq, 3, 3, (extra ++ fullOnly).toSeq)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get("target"))
     java.nio.file.Files.writeString(java.nio.file.Paths.get("target/bench.json"), full + "\n")
-    // stdout line: the driver tail-captures the LAST 2000 chars of the run
-    // (measured from the r2 artifact, sbt's ~75-char success trailer
-    // included), so the printed line must stay under ~1900 chars to parse.
-    // At 98+ legs even a detail-free line overflows (measured 2103 chars on
-    // run K — the head would be truncated and the whole line lost), so the
-    // budget is enforced by ELIDING the cheapest query legs, keeping the
-    // decision detail keys and the slowest legs; `value` stays the full
-    // total and target/bench.json always carries every leg.
-    val decisionKeys = Seq("pagerank_edges_scattered_per_sec",
-      "query_total_pass1_cold", "query_total_pass2_warm", "scaling_headline_pair",
-      "scaling_efficiency", "scaling_df_eff_2_8", "scaling_df_eff_8_32",
-      "scaling_df_thr_local2", "scaling_df_thr_local8", "scaling_df_thr_local32",
-      "scaling_csr_eff_8_32", "pagerank_supersteps", "corpus_edges", "corpus_nodes")
-    val ordered = decisionKeys.filter(extra.contains).map(k => k -> extra(k))
+    println(stdoutLine(sfDir, results.toSeq, extra.toSeq))
+  }
+
+  /** One result line printing the `queries` legs; `value` is ALWAYS the
+    * total over every non-negative leg of `total`. */
+  private def jsonLine(sfDir: String, total: Seq[(String, Double)], queries: Seq[(String, Double)],
+                       queryDecimals: Int, totalDecimals: Int, detail: Seq[(String, String)]): String = {
+    val qs = queries.map { case (k, v) =>
+      "\"" + k + "\":" + s"%.${queryDecimals}f".format(v)
+    }.mkString("{", ",", "}")
+    val ex = detail.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }.mkString("{", ",", "}")
+    val sum = s"%.${totalDecimals}f".format(total.map(_._2).filter(_ >= 0).sum)
+    s"""{"metric":"total","value":$sum,"unit":"sec","queries":$qs,"sf":"$sfDir","detail":$ex}"""
+  }
+
+  /** Detail keys the stdout line always carries when present. */
+  private val decisionKeys = Seq("pagerank_edges_scattered_per_sec",
+    "query_total_pass1_cold", "query_total_pass2_warm", "scaling_headline_pair",
+    "scaling_efficiency", "scaling_df_eff_2_8", "scaling_df_eff_8_32",
+    "scaling_df_thr_local2", "scaling_df_thr_local8", "scaling_df_thr_local32",
+    "scaling_csr_eff_8_32", "pagerank_supersteps", "corpus_edges", "corpus_nodes",
+    "failed_queries", "failed_legs_per_pass")
+
+  /** The stdout line. It is read from a tail capture of the run's LAST
+    * 2000 chars (measured from the r2 artifact, sbt's ~75-char success
+    * trailer included), so the line must stay under 1850 chars to parse. At
+    * 98+ legs even a detail-free line overflows (measured 2103 chars on
+    * run K — the head would be truncated and the whole line lost), so the
+    * budget is enforced by ELIDING the cheapest successful legs. Failed
+    * legs (negative times: a broken query never reads as a fast one), the
+    * decision detail keys and the slowest legs stay; `value` stays the
+    * full total and target/bench.json always carries every leg. `results`
+    * is in execution order, which the printed legs keep. */
+  private[graft] def stdoutLine(sfDir: String, results: Seq[(String, Double)],
+                                extra: Seq[(String, String)]): String = {
     val budget = 1850
-    val bySlowest = results.toSeq.sortBy(-_._2)
-    var nKeep = bySlowest.length
-    def stdoutLine(): String = {
-      val det = ordered ++ (if (nKeep < bySlowest.length)
-        Seq("queries_elided" -> s"${bySlowest.length - nKeep} cheapest; full set in target/bench.json")
+    val ordered = decisionKeys.flatMap(k => extra.find(_._1 == k))
+    val (failed, ok) = results.partition(_._2 < 0)
+    val bySlowest = ok.sortBy(-_._2)
+    def line(nKeep: Int): String = {
+      val det = ordered ++ (if (nKeep < ok.length)
+        Seq("queries_elided" -> s"${ok.length - nKeep} cheapest; full set in target/bench.json")
       else Seq.empty)
-      // keep insertion (execution) order among the retained legs
-      val kept = bySlowest.take(nKeep).map(_._1).toSet
-      jsonLine(1, 2, det, results.filter { case (k, _) => kept(k) })
+      val kept = (failed ++ bySlowest.take(nKeep)).map(_._1).toSet
+      jsonLine(sfDir, results, results.filter { case (k, _) => kept(k) }, 1, 2, det)
     }
-    while (nKeep > 0 && stdoutLine().length > budget) nKeep -= 1
-    println(stdoutLine())
+    (ok.length to 0 by -1).iterator.map(line).find(_.length <= budget).getOrElse(line(0))
   }
 }

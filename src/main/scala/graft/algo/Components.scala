@@ -2,7 +2,9 @@ package graft.algo
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.graph.LinkGraph
+import graft.bsp.{RunContext, Superstep}
 
 /** Directed-component algorithms (SURVEY §2.4.5):
   *
@@ -19,7 +21,7 @@ import graft.graph.LinkGraph
   *    partition-equal, label-arbitrary).
   *  - `inComponentOf` / `outComponentOf` — the ancestor / descendant set of
   *    one node (components/in_components.rs:106, out_components.rs:109) as
-  *    distributed iterative frontier semi-joins.
+  *    a distributed frontier closure (the same step as sssp's).
   *  - `inComponents` / `outComponents` — per-node ancestor/descendant sets
   *    for all nodes (in_components.rs:36-105). Output is O(n²) — guard
   *    bounded like the reference's single-process BFS-per-node, but the
@@ -28,22 +30,22 @@ import graft.graph.LinkGraph
   */
 object Components {
 
-  /** Returns (vid, name, component_vid, component). `trimIters` bounds
+  /** Returns (vid, name, component_vid, component). `TrimIters` bounds
     * each distributed trim loop. The residual cyclic core is collected
     * for the iterative Tarjan ONLY while it fits the DriverGuard bound
     * (`graft.driver.maxElements`, nodes + edges); above it, distributed
     * FW-BW pivot rounds (Fleischer et al.'s forward/backward reachability
     * decomposition — the same prune idea as scc.rs:24-60, distributed)
-    * extract whole SCCs via frontier semi-joins until the residual fits —
+    * extract whole SCCs via frontier closures until the residual fits —
     * on a web bowtie the first pivot round removes the giant cyclic core,
     * so no O(core) collect ever reaches the driver. */
-  def scc(g: LinkGraph, trimIters: Int = 50): DataFrame =
-    graft.bsp.IterativeConf.withStablePartitioning(g.spark) { scc0(g, trimIters) }
+  def scc(g: LinkGraph): DataFrame =
+    graft.bsp.IterativeConf.withStablePartitioning(g.spark) { scc0(g) }
 
-  private def scc0(g: LinkGraph, trimIters: Int): DataFrame = {
-    // the first trim round is what initialises the alive set; a
-    // non-positive bound would leave it null and NPE at the collect
-    require(trimIters >= 1, s"scc needs trimIters >= 1 (got $trimIters)")
+  private val TrimIters = 50
+  private val MaxPivotRounds = 64
+
+  private def scc0(g: LinkGraph): DataFrame = {
     val spark = g.spark
     import spark.implicits._
     // self-loops never bind a node into a larger SCC; dropping them keeps
@@ -55,92 +57,62 @@ object Components {
     // FW-BW extraction — never re-derived from e0 (r4 verdict: the two
     // full-e0 semi-joins per round were pure fixed cost at small sf and
     // wasted re-scans at scale). Lazy localCheckpoints fuse the
-    // materialise+count into ONE Spark job per round.
-    def induced(e: DataFrame, keep: DataFrame): DataFrame = e
-      .join(keep.withColumnRenamed("vid", "src"), Seq("src"), "left_semi")
-      .join(keep.withColumnRenamed("vid", "dst"), Seq("dst"), "left_semi")
-
-    var eA = e0.localCheckpoint(false)
-    var alive: DataFrame = null
-    var aliveCount = -1L // unknown until the first trim round
+    // materialise+count into ONE Spark job per round. `restrict` keeps the
+    // edges inside `nodes` (left_semi) or those with neither endpoint in
+    // it (left_anti).
+    def restrict(e: DataFrame, nodes: DataFrame, how: String): DataFrame = e
+      .join(nodes.withColumnRenamed("vid", "src"), Seq("src"), how)
+      .join(nodes.withColumnRenamed("vid", "dst"), Seq("dst"), how)
 
     // distributed trim: iterate until every survivor has an in- and an
-    // out-edge within the surviving set (every dropped node is a singleton)
-    def trim(): Unit = {
-      var iter = 0
-      var done = false
-      while (!done && iter < trimIters) {
-        iter += 1
-        val next = eA.select($"src".as("vid")).distinct()
-          .join(eA.select($"dst".as("vid")).distinct(), Seq("vid"), "left_semi")
-          .localCheckpoint(false)
-        val c = next.count() // one job: materialises + caches + counts
-        done = c == aliveCount || c == 0
-        alive = next
-        if (!done) eA = induced(eA, next).localCheckpoint(false)
-        aliveCount = c
-      }
-    }
-
-    // BFS closure of the pivot inside the residual, forward or backward.
-    // One job per level: the frontier count materialises the checkpoint;
-    // the visited union is lazy and materialises inside next level's job.
-    def reach(eAlive: DataFrame, pivot: Long, forward: Boolean): DataFrame = {
-      val e = if (forward) eAlive else eAlive.select($"dst".as("src"), $"src".as("dst"))
-      var visited = Seq(pivot).toDF("vid").localCheckpoint(false)
-      var frontier = visited
-      var exhausted = false
-      while (!exhausted) {
-        val next = frontier.join(e, frontier("vid") === e("src"))
-          .select($"dst".as("vid")).distinct()
-          .join(visited, Seq("vid"), "left_anti")
-          .localCheckpoint(false)
-        exhausted = next.count() == 0
-        if (!exhausted) { visited = visited.union(next).localCheckpoint(false); frontier = next }
-      }
-      visited
-    }
-
-    val bound = graft.bsp.DriverGuard.maxElements(g)
-    val maxPivotRounds = 64
-    val extracted = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var residual = Option.empty[(Array[Long], Array[(Long, Long)])]
-    var rounds = 0
-    var finished = false
-    while (!finished) {
-      trim()
-      if (aliveCount == 0) {
-        finished = true
-      } else {
-        val eCount = eA.count() // cached by trim's last materialisation
-        if (aliveCount + eCount <= bound) {
-          // residual Tarjan on the (now small) cyclic core
-          residual = Some((alive.as[Long].collect().sorted, eA.as[(Long, Long)].collect()))
-          finished = true
-        } else if (rounds >= maxPivotRounds) {
-          // fail fast instead of a silent driver OOM
-          graft.bsp.DriverGuard.check(g, "Components.scc residual", aliveCount + eCount,
-            s"residual still $aliveCount nodes / $eCount edges after $maxPivotRounds FW-BW " +
-              "pivot rounds; raise graft.driver.maxElements or pre-partition the graph")
-          finished = true // unreachable: the residual is above the bound here
-        } else {
-          rounds += 1
-          // FW-BW: SCC(pivot) = forward-reachable ∩ backward-reachable.
-          // pivot = min alive vid, so it is also the component's canonical
-          // min-vid label (the component is a subset of alive).
-          val pivot = alive.agg(min($"vid")).head().getLong(0)
-          val f = reach(eA, pivot, forward = true)
-          val b = reach(eA, pivot, forward = false)
-          val comp = f.join(b, Seq("vid"), "left_semi").localCheckpoint(true)
-          extracted += comp.select($"vid", lit(pivot).as("component_vid"))
-          alive = alive.join(comp, Seq("vid"), "left_anti").localCheckpoint(false)
-          eA = eA.join(comp.withColumnRenamed("vid", "src"), Seq("src"), "left_anti")
-            .join(comp.withColumnRenamed("vid", "dst"), Seq("dst"), "left_anti")
+    // out-edge within the surviving set (every dropped node is a
+    // singleton). State (alive, its count, eA); `n` is the previous alive
+    // count (-1 = unknown), and the first round always sets `alive`.
+    def trim(eA0: DataFrame, n0: Long): (DataFrame, Long, DataFrame) =
+      Superstep.loop("scc-trim", RunContext.none, 0L, 1, TrimIters, (null: DataFrame, n0, eA0)) {
+        case ((_, n, eA), _) =>
+          val next = eA.select($"src".as("vid")).distinct()
+            .join(eA.select($"dst".as("vid")).distinct(), Seq("vid"), "left_semi")
             .localCheckpoint(false)
-          aliveCount = alive.count()
+          val c = next.count() // one job: materialises + caches + counts
+          val done = c == n || c == 0
+          val eNext = if (done) eA else restrict(eA, next, "left_semi").localCheckpoint(false)
+          Superstep.Next((next, c, eNext), c.toDouble, done)
+      }
+
+    // pivot rounds: trim; collect the residual for Tarjan once it fits the
+    // bound, else extract SCC(pivot) = forward ∩ backward closure of the
+    // pivot and peel again. pivot = min alive vid, so it is also the
+    // component's canonical min-vid label (the component is a subset of
+    // alive).
+    val bound = graft.bsp.DriverGuard.maxElements(g)
+    val extracted = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    @annotation.tailrec
+    def peel(eA0: DataFrame, n0: Long, round: Int): Option[(Array[Long], Array[(Long, Long)])] = {
+      val (alive, n, eA) = trim(eA0, n0)
+      if (n == 0) None
+      else {
+        val eCount = eA.count() // cached by trim's last materialisation
+        if (n + eCount <= bound)
+          Some((alive.as[Long].collect().sorted, eA.select("src", "dst").as[(Long, Long)].collect()))
+        else {
+          // fail fast instead of a silent driver OOM (the residual is above
+          // the bound here, so the check throws)
+          if (round >= MaxPivotRounds)
+            graft.bsp.DriverGuard.check(g, "Components.scc residual", n + eCount,
+              s"residual still $n nodes / $eCount edges after $MaxPivotRounds FW-BW " +
+                "pivot rounds; raise graft.driver.maxElements or pre-partition the graph")
+          val pv = alive.agg(min($"vid")).head().getLong(0)
+          val pivot = Seq(pv).toDF("vid")
+          val comp = closure(eA, pivot)
+            .join(closure(eA.select($"dst".as("src"), $"src".as("dst")), pivot), Seq("vid"), "left_semi")
+            .localCheckpoint(true)
+          extracted += comp.select($"vid", lit(pv).as("component_vid"))
+          peel(restrict(eA, comp, "left_anti").localCheckpoint(false), n - comp.count(), round + 1)
         }
       }
     }
+    val residual = peel(e0.localCheckpoint(false), -1L, 0)
 
     val residualRows = residual match {
       case Some((ids, edges)) => tarjanMinVid(ids, edges).toSeq.toDF("vid", "component_vid")
@@ -213,37 +185,37 @@ object Components {
   /** Descendant set of `source` (nodes reachable over out-edges), excluding
     * the source itself unless it lies on a cycle — matching out_component. */
   def outComponentOf(g: LinkGraph, source: String): DataFrame =
-    reach(g, source, forward = true)
+    componentOf(g, source, g.dedupEdges)
 
   /** Ancestor set of `source` (nodes that reach it over out-edges). */
   def inComponentOf(g: LinkGraph, source: String): DataFrame =
-    reach(g, source, forward = false)
+    componentOf(g, source, g.dedupEdges.select(col("dst").as("src"), col("src").as("dst")))
 
-  private def reach(g: LinkGraph, source: String, forward: Boolean): DataFrame =
-    graft.bsp.IterativeConf.withStablePartitioning(g.spark) {
-      val spark = g.spark
-      import spark.implicits._
-      val e = if (forward) g.dedupEdges else g.dedupEdges.select($"dst".as("src"), $"src".as("dst"))
-      val eCached = e.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val src = g.nodes.filter($"name" === source).select($"vid")
-      // one job per BFS level: the count materialises the lazily-
-      // checkpointed frontier; the visited union is lazy and materialises
-      // inside the next level's job (r4 verdict: the eager-checkpoint +
-      // isEmpty + eager-union trio was 3 jobs/level of fixed cost)
-      var frontier = src.join(eCached, src("vid") === eCached("src"))
-        .select($"dst".as("vid")).distinct().localCheckpoint(false)
-      var visited = frontier
-      var done = frontier.count() == 0
-      while (!done) {
-        val next = frontier.join(eCached, frontier("vid") === eCached("src"))
-          .select($"dst".as("vid")).distinct()
-          .join(visited, Seq("vid"), "left_anti")
-          .localCheckpoint(false)
-        done = next.count() == 0
-        if (!done) { visited = visited.union(next).localCheckpoint(false); frontier = next }
+  /** The closure seeded with the source's one-hop neighbours over `e`, so
+    * the source joins only through a cycle. Returns (vid, name). */
+  private def componentOf(g: LinkGraph, source: String, e: DataFrame): DataFrame = {
+    val src = g.nodes.filter(col("name") === source).select(col("vid"))
+    val seeds = src.join(e, src("vid") === e("src")).select(col("dst").as("vid")).distinct()
+    closure(e, seeds).join(g.nodes, Seq("vid")).select(col("vid"), col("name"))
+  }
+
+  /** BFS closure: every node reachable from `seeds` (vid) in zero or more
+    * hops over `edges` (src, dst), seeds included — `Pathing.bfs` with the
+    * frontier step, against the edge table hash-partitioned on src once
+    * and persisted. One job per level: the frontier count materialises its
+    * lazy checkpoint, and the lazy visited union materialises inside the
+    * next level's job. */
+  private def closure(edges: DataFrame, seeds: DataFrame): DataFrame =
+    graft.bsp.IterativeConf.withStablePartitioning(edges.sparkSession) {
+      val p = edges.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+      val e = edges.repartition(p, col("src")).persist(StorageLevel.MEMORY_AND_DISK)
+      val m = e.count()
+      val init = seeds.repartition(p, col("vid")).localCheckpoint(false)
+      val visited = Pathing.bfs("closure", m, Long.MaxValue, init, eager = false) { (frontier, visited, _) =>
+        Pathing.frontierStep(frontier, visited, e).select(col("vid"))
       }
-      eCached.unpersist()
-      visited.join(g.nodes, Seq("vid")).select($"vid", $"name")
+      e.unpersist()
+      visited
     }
 
   /** All-nodes ancestor (dir="in") or descendant (dir="out") sets:

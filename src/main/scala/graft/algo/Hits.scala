@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.graph.{CsrGraph, LinkGraph}
-import graft.bsp.{CsrSuperstep, RunContext, StepStat, Superstep}
+import graft.bsp.{CsrSuperstep, RunContext, Superstep}
 
 /** HITS hubs & authorities with the reference's semantics
   * (raphtory/src/algorithms/centrality/hits.rs:51-160):
@@ -24,7 +24,7 @@ import graft.bsp.{CsrSuperstep, RunContext, StepStat, Superstep}
   *
   * Physical shapes: the DF path folds BOTH message directions into ONE
   * tagged scatter table, so a superstep is a single shuffle
-  * (groupBy(to, kind)) + one localCheckpoint + two cached-scan actions;
+  * (groupBy(to, kind)) and two jobs on the DataFrame driver;
   * the CSR fast path (auto below 32M ids, like PageRank) gathers both
   * directions in one broadcast job per superstep. */
 object Hits {
@@ -36,9 +36,7 @@ object Hits {
       return g.nodes.select(col("vid"), col("name"),
         lit(0.0).as("hub"), lit(0.0).as("auth")).limit(0)
     if (CsrGraph.useCsr(g, mode)) runCsr(g, iterCount, tol, ctx)
-    else graft.bsp.IterativeConf.withStablePartitioning(g.spark) {
-      runDf(g, iterCount, tol, ctx)
-    }
+    else runDf(g, iterCount, tol, ctx)
   }
 
   /** Forward CSR (in-neighbours per dst, gathers hub→recv_hub) and
@@ -90,54 +88,50 @@ object Hits {
     res.join(g.nodes, Seq("vid")).select($"vid", $"name", $"hub", $"auth")
   }
 
+  /** The DataFrame engine on `Superstep.dataFrame`, over one static
+    * tagged scatter table keyed on `from`: kind 0 carries hub(u) ->
+    * recv_hub(v) along u→v, kind 1 carries auth(v) -> recv_auth(u) against
+    * it — one shuffle per superstep. The normalisation needs the totals
+    * before the delta, so a superstep is two jobs: the step persists the
+    * joined (vid, hub, auth, rh, ra) frame and takes its totals (job 1),
+    * and the driver's checkpoint fused with the max-|Δ| aggregate is job 2.
+    * Each step releases the previous step's joined frame. */
   private def runDf(g: LinkGraph, iterCount: Int, tol: Double, ctx: RunContext): DataFrame = {
     val spark = g.spark
     import spark.implicits._
-    val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
-
-    // tagged scatter table: kind 0 carries hub(u) -> recv_hub(v) along u→v,
-    // kind 1 carries auth(v) -> recv_auth(u) against it — one shuffle/superstep
     val e = g.dedupEdges
     val scatter = e.select($"src".as("from"), $"dst".as("to"), lit(0).as("kind"))
       .union(e.select($"dst".as("from"), $"src".as("to"), lit(1).as("kind")))
-      .repartition(p, $"from").persist(StorageLevel.MEMORY_AND_DISK)
-    val m = scatter.count() / 2
-
-    var stateCk = g.nodes.select($"vid", lit(1.0).as("hub"), lit(1.0).as("auth"))
-      .repartition(p, $"vid").localCheckpoint(true)
-    var state = stateCk
-
-    var step = 0
-    var done = false
-    while (!done && step < iterCount) {
-      step += 1
-      val t0 = System.nanoTime()
-      val recv = state.hint("shuffle_hash").join(scatter, state("vid") === $"from")
-        .groupBy($"to".as("rvid")).agg(
-          sum(when($"kind" === 0, $"hub").otherwise(0.0)).as("rh"),
-          sum(when($"kind" === 1, $"auth").otherwise(0.0)).as("ra"))
-      val joined = state.join(recv, state("vid") === $"rvid", "left")
-        .select($"vid", $"hub", $"auth",
-          coalesce($"rh", lit(0.0)).as("rh"), coalesce($"ra", lit(0.0)).as("ra"))
-        .localCheckpoint(true)
-      val tot = joined.agg(sum($"rh"), sum($"ra")).head()
-      val totH = if (tot.isNullAt(0)) 0.0 else tot.getDouble(0)
-      val totA = if (tot.isNullAt(1)) 0.0 else tot.getDouble(1)
-      val hubE = if (totA == 0.0) lit(0.0) else $"ra" / totA
-      val authE = if (totH == 0.0) lit(0.0) else $"rh" / totH
-      val diffs = joined.agg(
-        max(abs($"hub" - hubE)), max(abs($"auth" - authE))).head()
-      val dH = if (diffs.isNullAt(0)) 0.0 else diffs.getDouble(0)
-      val dA = if (diffs.isNullAt(1)) 0.0 else diffs.getDouble(1)
-      stateCk.unpersist()
-      stateCk = joined
-      state = joined.select($"vid", hubE.as("hub"), authE.as("auth"))
-      done = tol > 0 && dH <= tol && dA <= tol
-      ctx.record(StepStat("hits", step, 2 * m, 2 * m, math.max(dH, dA),
-        (System.nanoTime() - t0) / 1e6))
+    var held = Option.empty[DataFrame]
+    val state = Superstep.dataFrame("hits", ctx, scatter, "from") { (scatter, _) =>
+      Superstep.Dense(
+        init = g.nodes.select($"vid", lit(1.0).as("hub"), lit(1.0).as("auth")),
+        maxSteps = iterCount,
+        step = { (state, _, _) =>
+          val recv = state.hint("shuffle_hash").join(scatter, state("vid") === $"from")
+            .groupBy($"to".as("rvid")).agg(
+              sum(when($"kind" === 0, $"hub").otherwise(0.0)).as("rh"),
+              sum(when($"kind" === 1, $"auth").otherwise(0.0)).as("ra"))
+          val joined = state.join(recv, state("vid") === $"rvid", "left")
+            .select($"vid", $"hub", $"auth",
+              coalesce($"rh", lit(0.0)).as("rh"), coalesce($"ra", lit(0.0)).as("ra"))
+            .persist(StorageLevel.MEMORY_AND_DISK)
+          val tot = joined.agg(sum($"rh"), sum($"ra")).head()
+          held.foreach(_.unpersist())
+          held = Some(joined)
+          val totH = if (tot.isNullAt(0)) 0.0 else tot.getDouble(0)
+          val totA = if (tot.isNullAt(1)) 0.0 else tot.getDouble(1)
+          val hubE = if (totA == 0.0) lit(0.0) else $"ra" / totA
+          val authE = if (totH == 0.0) lit(0.0) else $"rh" / totH
+          joined.select($"vid", hubE.as("hub"), authE.as("auth"),
+            abs($"hub" - hubE).as("dh"), abs($"auth" - authE).as("da"))
+        },
+        aggs = Seq(greatest(max($"dh"), max($"da")), max($"dh"), max($"da")),
+        // tol = 0 disables early stopping
+        halt = (r, _) => tol > 0 && r.getDouble(1) <= tol && r.getDouble(2) <= tol,
+        flags = Seq("dh", "da"))
     }
-    ctx.finish() // barrier: async snapshot commits durable before returning
-    scatter.unpersist()
+    held.foreach(_.unpersist())
     state.join(g.nodes, Seq("vid")).select($"vid", $"name", $"hub", $"auth")
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.graph.LinkGraph
+import graft.bsp.{RunContext, Superstep}
 
 /** k-core: iteratively drop nodes whose count of surviving undirected
   * distinct neighbours is < k (raphtory/src/algorithms/cores/k_core.rs:40-101;
@@ -22,24 +23,18 @@ object KCore {
     graft.bsp.IterativeConf.withStablePartitioning(spark) {
     val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val pairs = g.undirectedPairs.repartition(p, $"a").persist(StorageLevel.MEMORY_AND_DISK)
-    pairs.count()
-
-    var alive = g.degrees.filter($"degree" >= k).select($"vid").localCheckpoint(true)
-    var aliveCount = alive.count()
-    var step = 0L
-    var done = aliveCount == 0
-    while (!done && step < iterCount) {
-      step += 1
-      val next = pairs
-        .join(alive.withColumnRenamed("vid", "a"), Seq("a"), "left_semi")
-        .join(alive.withColumnRenamed("vid", "b"), Seq("b"), "left_semi")
-        .groupBy($"a").agg(count("*").as("d"))
-        .filter($"d" >= k).select($"a".as("vid"))
-        .localCheckpoint(true)
-      val c = next.count()
-      done = c == aliveCount
-      alive = next
-      aliveCount = c
+    val m = pairs.count()
+    val init = g.degrees.filter($"degree" >= k).select($"vid").localCheckpoint(true)
+    val (alive, _) = Superstep.loop("kcore", RunContext.none, m, 1, iterCount, (init, init.count())) {
+      case ((alive, aliveCount), _) =>
+        val next = pairs
+          .join(alive.withColumnRenamed("vid", "a"), Seq("a"), "left_semi")
+          .join(alive.withColumnRenamed("vid", "b"), Seq("b"), "left_semi")
+          .groupBy($"a").agg(count("*").as("d"))
+          .filter($"d" >= k).select($"a".as("vid"))
+          .localCheckpoint(true)
+        val c = next.count()
+        Superstep.Next((next, c), (aliveCount - c).toDouble, c == aliveCount)
     }
     pairs.unpersist()
     alive

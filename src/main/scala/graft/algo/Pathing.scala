@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.graph.LinkGraph
+import graft.bsp.{RunContext, Superstep}
 
 /** Path algorithms (SURVEY §2.4.5):
   *
@@ -29,11 +30,10 @@ object Pathing {
   /** Returns (vid, name, dist, path) for reached nodes only.
     *
     * Superstep state is (vid, dist, parent) — O(1) per node, no name-path
-    * arrays shuffled per level — and the min-vid parent choice is a hash
-    * aggregate (`groupBy(b).agg(min(parent))`), not a row_number window,
-    * so no per-superstep SortExec (PlanSpec-locked). Paths materialise
-    * once at the end: level-by-level parent joins over the result set
-    * only (≤ depth joins total). */
+    * arrays shuffled per level — and each level is one `frontierStep`
+    * (shared with Components' closures). Paths materialise once at the
+    * end: level-by-level parent joins over the result set only (≤ depth
+    * joins total). */
   def sssp(g: LinkGraph, source: String, cutoff: Long = Long.MaxValue,
            withPaths: Boolean = true): DataFrame = {
     val spark = g.spark
@@ -41,30 +41,19 @@ object Pathing {
     graft.bsp.IterativeConf.withStablePartitioning(spark) {
     val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val pairs = g.undirectedPairs.repartition(p, $"a").persist(StorageLevel.MEMORY_AND_DISK)
-    pairs.count()
+    val m = pairs.count()
     val src = g.nodes.filter($"name" === source)
-    var reached = src.select($"vid", lit(0L).as("dist"), lit(null).cast("long").as("parent"))
-      .localCheckpoint(true)
-    var frontier = reached
-    var level = 0L
-    var done = frontier.isEmpty
+      .select($"vid", lit(0L).as("dist"), lit(null).cast("long").as("parent"))
+      .repartition(p, $"vid").localCheckpoint(true)
     // NOTE: this loop deliberately keeps EAGER checkpoints. The lazy-
-    // checkpoint fusion that pays off in Components.reach and
+    // checkpoint fusion that pays off in Components.closure and
     // temporallyReachableNodes was measured here too (interleaved sf0.1
     // probes) and came out ~15% SLOWER: the lazy union materialises
     // inside the next level's anti-join build side, serialising the
     // checkpoint write into the critical join job, while the eager trio's
-    // two extra actions (limit-1 isEmpty + a union copy of two cached
-    // RDDs) are near-free at any frontier size.
-    while (!done && level < cutoff) {
-      level += 1
-      val next = ssspStep(frontier, reached, pairs, level).localCheckpoint(true)
-      done = next.isEmpty
-      if (!done) {
-        reached = reached.union(next).localCheckpoint(true)
-        frontier = next
-      }
-    }
+    // two extra actions (a count of the cached level + a union copy of
+    // two cached RDDs) are near-free at any frontier size.
+    val reached = bfs("sssp", m, cutoff, src, eager = true)(ssspStep(_, _, pairs, _))
     pairs.unpersist()
     if (!withPaths) reached.join(g.nodes, Seq("vid")).select($"vid", $"name", $"dist")
     else {
@@ -74,37 +63,52 @@ object Pathing {
         .select($"vid", $"name", $"dist", $"parent").localCheckpoint(false)
       val maxRow = named.agg(max($"dist")).head() // materialises the checkpoint
       val maxDist = if (maxRow.isNullAt(0)) -1L else maxRow.getLong(0)
-      var levelPaths = named.filter($"dist" === 0L).select($"vid", array($"name").as("path"))
-      var paths = levelPaths
-      var l = 1L
-      while (l <= maxDist) {
-        // lazy: each level's checkpoint materialises inside the next
-        // level's join (or the final join) — no per-level eager job
-        levelPaths = named.filter($"dist" === l)
-          .join(levelPaths.select($"vid".as("parent"), $"path".as("ppath")), Seq("parent"))
+      val root = named.filter($"dist" === 0L).select($"vid", array($"name").as("path"))
+      // lazy: each level's checkpoint materialises inside the next
+      // level's join (or the final join) — no per-level eager job
+      val (paths, _) = (1L to maxDist).foldLeft((root, root)) { case ((paths, prev), l) =>
+        val level = named.filter($"dist" === l)
+          .join(prev.select($"vid".as("parent"), $"path".as("ppath")), Seq("parent"))
           .select($"vid", concat($"ppath", array($"name")).as("path"))
           .localCheckpoint(false)
-        paths = paths.union(levelPaths)
-        l += 1
+        (paths.union(level), level)
       }
       named.join(paths, Seq("vid")).select($"vid", $"name", $"dist", $"path")
     }
     }
   }
 
-  /** One BFS superstep: unreached neighbours of the frontier with their
-    * min-vid parent. The frontier/reached sides are post-checkpoint
-    * (unknown stats), so without hints the optimizer falls to SMJ and
-    * re-sorts the cached `pairs` table every level — shuffle_hash keeps
-    * the big side's hash partitioning reusable (PlanSpec-locked: no
-    * per-superstep SortExec/WindowExec). */
+  /** One sssp level: `frontierStep` with `dist = level`. */
   private[graft] def ssspStep(frontier: DataFrame, reached: DataFrame,
                               pairs: DataFrame, level: Long): DataFrame =
-    frontier.hint("shuffle_hash").join(pairs, frontier("vid") === pairs("a"))
-      .select(col("b"), frontier("vid").as("parent"))
-      .join(reached.select(col("vid").as("b")).hint("shuffle_hash"), Seq("b"), "left_anti")
-      .groupBy(col("b")).agg(min(col("parent")).as("parent"))
-      .select(col("b").as("vid"), lit(level).as("dist"), col("parent"))
+    frontierStep(frontier, reached, pairs.select(col("a").as("src"), col("b").as("dst")))
+      .select(col("vid"), lit(level).as("dist"), col("parent"))
+
+  /** Level-synchronous BFS on the superstep driver (sssp and
+    * Components.closure): `init` is the visited set and first frontier,
+    * level l is `step(frontier, visited, l)`, checkpointed eagerly or
+    * lazily; an empty level halts. Returns the visited set. */
+  private[graft] def bfs(algo: String, m: Long, maxLevel: Long, init: DataFrame, eager: Boolean)(
+      step: (DataFrame, DataFrame, Int) => DataFrame): DataFrame =
+    Superstep.loop(algo, RunContext.none, m, 1, maxLevel, (init, init)) { case ((visited, frontier), l) =>
+      val next = step(frontier, visited, l).localCheckpoint(eager)
+      val n = next.count()
+      Superstep.Next(if (n == 0) (visited, next) else (visited.union(next).localCheckpoint(eager), next),
+        n.toDouble, n == 0)
+    }._1
+
+  /** The frontier (sparse BFS) step: frontier ⋈ edges → least-vid
+    * parent per target (a hash aggregate, not a window) → anti-join with
+    * the visited set; returns (vid, parent) for the newly reached.
+    * `edges` is the static (src, dst) table hash-partitioned on src. Both
+    * joins are shuffled-hash, so the cached table is never re-sorted, and
+    * the anti-join runs above the aggregate: below it, it re-shuffled the
+    * whole table per level (PlanSpec-locked). */
+  private[graft] def frontierStep(frontier: DataFrame, visited: DataFrame,
+                                  edges: DataFrame): DataFrame =
+    frontier.hint("shuffle_hash").join(edges, frontier("vid") === edges("src"))
+      .groupBy(edges("dst").as("vid")).agg(min(frontier("vid")).as("parent"))
+      .join(visited.select("vid").hint("shuffle_hash"), Seq("vid"), "left_anti")
 
   /** Driver-side Dijkstra. direction: "out" | "in" | "both". Returns
     * (target, cost, path). Weight column defaults to 1.0 per event. */
@@ -293,9 +297,9 @@ object Pathing {
     // exploded out-edge events (multi-edges each count)
     val events = g.edges.select($"src", $"dst", $"ts")
       .repartition(p, $"src").persist(StorageLevel.MEMORY_AND_DISK)
-    events.count()
+    val m = events.count()
     val stopVids = g.nodes.filter($"name".isin(stops: _*)).select($"vid")
-      .as[Long].collect().toSet
+      .as[Long].collect().toSeq
     val seedRows = g.nodes.filter($"name".isin(seeds: _*))
       .select($"vid", lit(startTime).as("earliest"))
 
@@ -311,19 +315,15 @@ object Pathing {
     val batches = scala.collection.mutable.ArrayBuffer(
       seedRows.select($"vid", lit(startTime).as("t"), lit("start").as("src_name"))
         .localCheckpoint(true))
-    var state = seedRows.localCheckpoint(true) // tainted set with earliest times
-    var frontier = state.withColumn("prev", lit(null).cast("long"))
-    var step = 0L
-    var done = frontier.isEmpty
-    val bStops = stopVids
-    while (!done && step < maxHops) {
-      step += 1
-      val scatter = reachScatter(frontier, events, g.nodes, bStops.toSeq)
+    val seeded = seedRows.localCheckpoint(true) // tainted set with earliest times
+    Superstep.loop("temporal-reach", RunContext.none, m, 1, maxHops,
+        (seeded, seeded.withColumn("prev", lit(null).cast("long")))) { case ((state, frontier), _) =>
+      val scatter = reachScatter(frontier, events, g.nodes, stopVids)
       // distinct within the batch only (parallel same-ts events); disjoint
       // windows already guarantee no duplicate across batches. Lazy
       // checkpoints: the counting aggregate below materialises newMsgs +
       // merged in ONE Spark job per superstep (the eager-checkpoint trio
-      // was 4 fixed-cost jobs/step — same fusion as Components.reach)
+      // was 4 fixed-cost jobs/step — same fusion as Components.closure)
       val newMsgs = scatter.distinct().localCheckpoint(false)
       val touched = newMsgs.groupBy($"vid").agg(min($"t").as("msg_min"))
       val merged = state.join(touched, Seq("vid"), "full")
@@ -342,16 +342,15 @@ object Pathing {
       val cnts = merged.agg(
         count(when($"is_new", lit(1))).as("n_new"),
         count(when($"improved", lit(1))).as("n_improved")).head()
-      val newCount = cnts.getLong(0)
-      val improvedCount = cnts.getLong(1)
+      val pending = cnts.getLong(0) + cnts.getLong(1)
       batches += newMsgs
       // merged is checkpointed, so the filtered frontier/state views are
       // one-step lineage — no further checkpoint needed
-      frontier = merged.filter($"is_new" || $"improved")
-        .select($"vid", $"new_earliest".as("earliest"),
-          when($"is_new", lit(null).cast("long")).otherwise($"old_earliest").as("prev"))
-      state = merged.select($"vid", $"new_earliest".as("earliest"))
-      done = newCount == 0 && improvedCount == 0
+      Superstep.Next((merged.select($"vid", $"new_earliest".as("earliest")),
+        merged.filter($"is_new" || $"improved")
+          .select($"vid", $"new_earliest".as("earliest"),
+            when($"is_new", lit(null).cast("long")).otherwise($"old_earliest").as("prev"))),
+        pending.toDouble, pending == 0)
     }
     events.unpersist()
     val hist = batches.reduce(_ union _)

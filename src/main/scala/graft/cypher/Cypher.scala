@@ -27,7 +27,7 @@ import graft.graph.LinkGraph
   *    length(e)/size(e). The reference grammar parses RangeLiteral
   *    (cypher.pest:203) but its transpiler never executes it; we require
   *    a finite upper bound n <= 8 (unbounded closure belongs to
-  *    Components.reach). A path's internal events also cross-check
+  *    Components.inComponentOf / outComponentOf). A path's internal events also cross-check
   *    against every other edge variable and path of the same MATCH
   *    (array-membership / array-overlap on the accumulated event ids);
   *  - named paths `p = <pattern>` (reference PatternPart,
@@ -1394,7 +1394,7 @@ object Cypher {
               val (rLo, rHiOpt) = edge.range.get
               val rHi = rHiOpt.getOrElse(throw new IllegalArgumentException(
                 s"unbounded variable-length pattern *$rLo.. needs a finite upper bound " +
-                  "(unbounded closure = Components.reach / inComponentOf)"))
+                  "(unbounded closure = Components.inComponentOf / outComponentOf)"))
               require(rLo >= 1 && rHi >= rLo && rHi <= 8,
                 s"variable-length bounds must satisfy 1 <= m <= n <= 8, got *$rLo..$rHi")
               // a shortestPath-reduced frame exposes only endpoints + the

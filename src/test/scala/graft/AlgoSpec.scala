@@ -316,6 +316,28 @@ class AlgoSpec extends AnyFunSuite {
     assert(all("3") == Seq())
   }
 
+  test("in/out component of every node == driver allComponents on random digraphs with cycles") {
+    // the unified closure is seeded with the source's one-hop neighbours,
+    // so a source joins its own set only through a cycle; the 0->1->2->0
+    // ring puts sources on cycles, the random edges add more and leave
+    // sink/source-only nodes
+    var st = 4242L
+    def nxt(): Long = { st = st * 6364136223846793005L + 1442695040888963407L; st >>> 33 }
+    for (_ <- 0 until 2) {
+      val raw = (Seq((0L, 1L), (1L, 2L), (2L, 0L)) ++ (0 until 10).map(_ => (nxt() % 8, nxt() % 8))).distinct
+      val g = LinkGraph.fromNumericEdgeList(spark, raw.map { case (u, v) => (u, v, 0L) })
+      for (dir <- Seq("out", "in")) {
+        val want = Components.allComponents(g, dir).collect()
+          .map(r => r.getAs[String]("name") -> r.getSeq[String](r.fieldIndex("members")).toSet).toMap
+        for (v <- want.keys) {
+          val got = (if (dir == "out") Components.outComponentOf(g, v) else Components.inComponentOf(g, v))
+            .collect().map(_.getAs[String]("name")).toSet
+          assert(got == want(v), s"$dir component of $v over $raw")
+        }
+      }
+    }
+  }
+
   test("driver guards bound nodes + edges: isolated-node-heavy graphs trip them") {
     // 1 edge but 31 nodes: a guard that checks edge count alone would let
     // the node-table collect through unbounded

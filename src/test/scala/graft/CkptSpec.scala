@@ -64,6 +64,29 @@ class CkptSpec extends AnyFunSuite {
     assert(resumed == full)
   }
 
+  test("HITS DataFrame kill/resume: scores identical, pre-crash supersteps not recomputed") {
+    val root = Files.createTempDirectory("graft-ckpt-hits").toString
+    val cat = new Catalog(root)
+    val g = LinkGraph.fromNumericEdgeList(spark, edges)
+    def scores(ctx: graft.bsp.RunContext) =
+      graft.algo.Hits.run(g, 10, ctx, tol = 0.0, mode = "df").collect()
+        .map(r => r.getAs[Long]("vid") -> (r.getAs[Double]("hub"), r.getAs[Double]("auth"))).toMap
+    val full = scores(new CatalogRunContext(cat, "hits-a", spark))
+    assert(cat.snapshots("state/hits-a") == (1L to 10L))
+    scores(new CatalogRunContext(cat, "hits-b", spark))
+    for (s <- 5L to 10L)
+      Files.delete(Paths.get(root, "state/hits-b/meta", s"manifest-$s.json"))
+    val ctx2 = new CatalogRunContext(cat, "hits-b", spark)
+    val resumed = scores(ctx2)
+    assert(ctx2.resumedFromStep == 4L)
+    assert(ctx2.stats.map(_.step).toSet == (5 to 10).toSet, "resume recomputed pre-crash supersteps")
+    assert(resumed.keySet == full.keySet)
+    for ((k, (h, a)) <- full) {
+      assert(math.abs(resumed(k)._1 - h) < 1e-12, s"hub $k")
+      assert(math.abs(resumed(k)._2 - a) < 1e-12, s"auth $k")
+    }
+  }
+
   test("sync LPA kill/resume mid-sweep: labels identical to the uninterrupted run") {
     val root = Files.createTempDirectory("graft-ckpt-lpa").toString
     val cat = new Catalog(root)

@@ -141,6 +141,56 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
+  test("frontier step (sssp + closures): SHJ joins, no sort, no window, no exchange over the cached edge table") {
+    // the anti-join against the visited set must run ABOVE the min-parent
+    // aggregate: pushed below the frontier join it re-shuffled the whole
+    // persisted edge table on every level. Checked on both static-table
+    // shapes the step runs on: sssp's (a, b) pairs (through ssspStep) and
+    // a closure's (src, dst) edges.
+    import org.apache.spark.sql.execution.{SortExec, SparkPlan}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, ShuffledHashJoinExec}
+    import org.apache.spark.sql.execution.window.WindowExec
+    // true when `pl` reaches a cached table through no join or aggregate
+    def readsCache(pl: SparkPlan): Boolean = pl match {
+      case _: InMemoryTableScanExec => true
+      case _: BaseJoinExec | _: BaseAggregateExec => false
+      case other => other.children.exists(readsCache)
+    }
+    withoutAutoBroadcast {
+      graft.bsp.IterativeConf.withStablePartitioning(spark) {
+        val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
+        val n = 50000L
+        val edges0 = spark.range(0, n, 1, 4).flatMap { i =>
+          graft.io.Corpus.linkTargets(i, 8, 11L).map(j => (i, j))
+        }.toDF("src", "dst")
+        val g = LinkGraph.fromRawEdges(edges0)
+        val frontier = g.nodes.filter($"vid" < 100).select($"vid").localCheckpoint(true)
+        val visited = g.nodes.filter($"vid" < 300).select($"vid").localCheckpoint(true)
+        val pairs = g.undirectedPairs.repartition(p, $"a").persist()
+        val dedup = g.dedupEdges.repartition(p, $"src").persist()
+        for ((edges, step) <- Seq(
+            pairs -> graft.algo.Pathing.ssspStep(frontier, visited, pairs, 1L),
+            dedup -> graft.algo.Pathing.frontierStep(frontier, visited, dedup))) {
+          edges.count()
+          val exec = step.queryExecution.executedPlan
+          val s = exec.toString
+          assert(exec.collect { case x: SortExec => x }.isEmpty, s"per-level sort in frontier step:\n$s")
+          assert(exec.collect { case x: WindowExec => x }.isEmpty, s"window in frontier step:\n$s")
+          assert(exec.collect { case x: ShuffledHashJoinExec => x }.length == 2,
+            s"frontier step joins are not both SHJ:\n$s")
+          exec.collect { case x: ShuffleExchangeExec => x }.foreach { x =>
+            assert(!readsCache(x.child), s"exchange over the cached edge table:\n$s")
+          }
+          edges.unpersist()
+        }
+        g.unpersist()
+      }
+    }
+  }
+
   test("delta-stepping relaxation: SHJ against the cached edge table, no sort, no window") {
     import org.apache.spark.sql.execution.SortExec
     import org.apache.spark.sql.execution.window.WindowExec
