@@ -9,50 +9,30 @@ import graft.graph.LinkGraph
   * (raphtory/src/algorithms/centrality/betweenness.rs:21-115).
   *
   * Physical shape: every source's BFS + dependency accumulation is
-  * independent, so sources fan out as one RDD map over a broadcast compact
-  * adjacency; each partition runs its sources sequentially and emits ONE
-  * partial delta array, tree-reduced to the final sums. Parallelism scales
-  * with the source sample (the expensive axis: Brandes is O(sources ·
-  * edges)); the graph itself rides a broadcast, which bounds this to
-  * graphs that fit executor memory — beyond that the exact algorithm is
-  * infeasible anyway and sampling (k) is the standard recourse. */
+  * independent, so sources fan out as one RDD map over the broadcast
+  * out-CSR of `LinkGraph.directedAdjacency`; each partition runs its
+  * sources sequentially and emits ONE partial delta array, tree-reduced to
+  * the final sums. Parallelism scales with the source sample (the
+  * expensive axis: Brandes is O(sources · edges)); the broadcast graph is
+  * bounded by `DriverGuard.checkGraph` — beyond that the exact algorithm
+  * is infeasible anyway and sampling (k) is the standard recourse. */
 object Betweenness {
 
   /** Returns (vid, name, value). Sources = first `k` nodes in VID order
     * (all nodes when k = None). */
   def run(g: LinkGraph, k: Option[Int] = None, normalized: Boolean = false): DataFrame = {
+    graft.bsp.DriverGuard.checkGraph(g, "Betweenness.run",
+      "sample fewer sources on a subgraph; exact Brandes needs the broadcast adjacency")
     val spark = g.spark
     import spark.implicits._
     val sc = spark.sparkContext
-    // bound the node collect too (checkEdges below covers only edges: a
-    // graph of mostly isolated nodes could still OOM the driver here);
-    // select the two columns explicitly — typed/property graphs carry
-    // extra node columns that would break the Tuple2 encoder
-    graft.bsp.DriverGuard.check(g, "Betweenness.run", g.nodeCount,
-      "sample fewer sources on a subgraph; exact Brandes collects the node table")
-    val nodes = g.nodes.select($"vid", $"name").as[(Long, String)].collect().sortBy(_._1)
-    val n = nodes.length
-    if (n == 0) return spark.emptyDataset[(Long, String, Double)].toDF("vid", "name", "value")
-    val idx = nodes.map(_._1).zipWithIndex.toMap
-
-    // compact CSR out-adjacency (distinct neighbours), executor-packed
-    // (BroadcastCsr — dense 8-byte/edge blocks, not boxed rows) and
-    // broadcast once — only after a fail-fast bound check (the
-    // broadcast-CSR regime requires the graph to fit executor memory
-    // anyway; past the bound the standard recourse is a smaller source
-    // sample on a subgraph).
-    graft.bsp.DriverGuard.check(g, "Betweenness.run", g.edgeCount,
-      "sample fewer sources on a subgraph; exact Brandes needs the broadcast CSR")
-    val (offsets, targets) = BroadcastCsr.pack(g, idx, n, swap = false)
-    val bcOff = sc.broadcast(offsets)
-    val bcTgt = sc.broadcast(targets)
-
+    val adj = g.directedAdjacency
+    val n = adj.vids.length
+    val bcOff = sc.broadcast(adj.offsets)
+    val bcTgt = sc.broadcast(adj.targets)
+    // one slice even for zero sources: its all-zero partial is the result
     val kSample = k.getOrElse(n).min(n)
-    if (kSample == 0) {
-      val rows0 = nodes.map { case (v, nm) => (v, nm, 0.0) }
-      return spark.createDataset(rows0.toSeq).toDF("vid", "name", "value")
-    }
-    val slices = math.min(kSample, math.max(1, sc.defaultParallelism * 2))
+    val slices = math.max(1, math.min(kSample, sc.defaultParallelism * 2))
     val betweenness = sc.parallelize(0 until kSample, slices)
       .mapPartitions { sources =>
         val off = bcOff.value
@@ -104,7 +84,8 @@ object Betweenness {
     // n <= 2: every betweenness is 0 and the 1/((n-1)(n-2)) factor would
     // be Inf/NaN — 0 * Inf = NaN poisons the result column
     val factor = if (normalized && n > 2) 1.0 / ((n - 1.0) * (n - 2.0)) else 1.0
-    val rows = nodes.indices.map(i => (nodes(i)._1, nodes(i)._2, betweenness(i) * factor))
-    spark.createDataset(rows).toDF("vid", "name", "value")
+    // vid order = the adjacency's index order
+    val nodes = g.nodes.select($"vid", $"name").as[(Long, String)].collect().sortBy(_._1)
+    nodes.indices.map(i => (nodes(i)._1, nodes(i)._2, betweenness(i) * factor)).toDF("vid", "name", "value")
   }
 }

@@ -30,12 +30,8 @@ object Louvain {
     * edge weight = total over both directions (undirected). */
   def run(g: LinkGraph, weightCol: Option[String] = None, resolution: Double = 1.0,
           tol: Double = 1e-8, seed: Array[Byte] = Array.fill[Byte](32)(11)): DataFrame = {
-    graft.bsp.DriverGuard.checkEdges(g, "Louvain.run",
+    graft.bsp.DriverGuard.checkGraph(g, "Louvain.run",
       "Lpa.runSync for distributed community detection; Louvain local moves are inherently sequential")
-    // edges alone don't bound the node collect below (mostly-isolated
-    // graphs have few edges but a huge node table)
-    graft.bsp.DriverGuard.check(g, "Louvain.run", g.nodeCount,
-      "Lpa.runSync for distributed community detection; Louvain collects the node table")
     val spark = g.spark
     import spark.implicits._
     import org.apache.spark.sql.functions._

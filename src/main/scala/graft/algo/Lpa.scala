@@ -41,7 +41,7 @@ object Lpa {
   /** Exact driver-local replay. Returns (vid, name, label) where label is
     * the community's final GID. */
   def runExact(g: LinkGraph, seed: Option[Array[Byte]]): DataFrame = {
-    graft.bsp.DriverGuard.checkEdges(g, "Lpa.runExact",
+    graft.bsp.DriverGuard.checkGraph(g, "Lpa.runExact",
       "Lpa.runSync (deterministic synchronous sweeps, CSR or shuffle engine)")
     val spark = g.spark
     import spark.implicits._

@@ -114,7 +114,7 @@ object Pathing {
     * (target, cost, path). Weight column defaults to 1.0 per event. */
   def dijkstra(g: LinkGraph, source: String, targets: Seq[String],
                weightCol: Option[String] = None, direction: String = "both"): DataFrame = {
-    graft.bsp.DriverGuard.checkEdges(g, "Pathing.dijkstra",
+    graft.bsp.DriverGuard.checkGraph(g, "Pathing.dijkstra",
       "Pathing.deltaStepping (distributed weighted SSSP) for costs, or " +
         "Pathing.sssp (distributed BFS) for unweighted distances")
     val spark = g.spark

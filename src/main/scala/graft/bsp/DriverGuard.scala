@@ -4,11 +4,11 @@ import graft.graph.LinkGraph
 
 /** Guard for the handful of algorithms that intentionally run driver-side
   * (the reference's own sequential implementations: exact LPA replay,
-  * Dijkstra, SEIR event queue, Louvain local moves, all-pairs component
-  * sets, residual Tarjan). Instead of a silent executor-to-driver OOM at
-  * scale, they fail fast with a clear message naming the documented
-  * distributed alternative. Bound override: `graft.driver.maxElements`
-  * Spark conf (elements ≈ rows collected). */
+  * Dijkstra, SEIR event queue, Louvain local moves, Brandes betweenness,
+  * all-pairs component sets, Tarjan SCC). Instead of a silent
+  * executor-to-driver OOM at scale, they fail fast with a clear message
+  * naming the documented distributed alternative. Bound override:
+  * `graft.driver.maxElements` Spark conf (elements ≈ rows collected). */
 object DriverGuard {
 
   val DefaultMaxElements: Long = 200L * 1000 * 1000 // ~3-6 GiB of driver heap
@@ -28,6 +28,10 @@ object DriverGuard {
           s"Scale path: $alternative")
   }
 
-  def checkEdges(g: LinkGraph, algo: String, alternative: String): Unit =
-    check(g, algo, g.edgeCount, alternative)
+  /** Nodes + distinct edges: what a whole-graph driver-side run collects
+    * (the node count is the memoized `nodeFacts` fold, no extra job). */
+  def graphElements(g: LinkGraph): Long = g.nodeFacts.count + g.edgeCount
+
+  def checkGraph(g: LinkGraph, algo: String, alternative: String): Unit =
+    check(g, algo, graphElements(g), alternative)
 }

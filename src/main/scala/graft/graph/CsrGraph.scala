@@ -39,6 +39,71 @@ class CsrGraph(
   def unpersist(): Unit = blocks.unpersist()
 }
 
+/** Driver-side directed CSR over compact indices: index i is node
+  * `vids(i)` (ascending), and its distinct out-neighbours are
+  * `targets(offsets(i) until offsets(i + 1))`, ascending — the analogue of
+  * the reference's per-node adjacency lists (node_store.rs:176-199) that
+  * every driver-side directed traversal reads (Tarjan SCC, Brandes
+  * betweenness, all-nodes in/out-components). */
+final class DirectedAdjacency(val vids: Array[Long], val offsets: Array[Int], val targets: Array[Int]) {
+
+  /** In-neighbour CSR (offsets, sources ascending): a driver-side
+    * transpose on first use, so it costs no Spark job. */
+  lazy val in: (Array[Int], Array[Int]) = {
+    val swapped = new Array[Long](targets.length)
+    var s = 0
+    while (s < vids.length) {
+      var e = offsets(s)
+      while (e < offsets(s + 1)) { swapped(e) = (targets(e).toLong << 32) | s; e += 1 }
+      s += 1
+    }
+    DirectedAdjacency.csr(swapped, vids.length)
+  }
+}
+
+object DirectedAdjacency {
+
+  /** Packs the (src, dst) Long rows of `edges` over `vids` (ascending;
+    * every endpoint must be one of them). Executors encode each edge as
+    * one primitive (srcIdx << 32) | dstIdx long, so the driver receives
+    * dense 8-byte/edge blocks, not boxed rows. Callers bound the collect
+    * with a DriverGuard first. */
+  def pack(edges: org.apache.spark.sql.DataFrame, vids: Array[Long]): DirectedAdjacency = {
+    val bcVids = edges.sparkSession.sparkContext.broadcast(vids)
+    val blocks = edges.select(col("src"), col("dst")).rdd.mapPartitions { it =>
+      val vs = bcVids.value
+      def idx(v: Long): Long = {
+        val i = java.util.Arrays.binarySearch(vs, v)
+        require(i >= 0, s"edge endpoint $v is not a node of the packed set")
+        i.toLong
+      }
+      val buf = new scala.collection.mutable.ArrayBuilder.ofLong
+      it.foreach(r => buf += (idx(r.getLong(0)) << 32) | idx(r.getLong(1)))
+      Iterator(buf.result())
+    }.collect()
+    bcVids.destroy()
+    val packed = new Array[Long](blocks.iterator.map(_.length).sum)
+    var off = 0
+    blocks.foreach { a => System.arraycopy(a, 0, packed, off, a.length); off += a.length }
+    val (offsets, targets) = csr(packed, vids.length)
+    new DirectedAdjacency(vids, offsets, targets)
+  }
+
+  /** CSR (offsets, columns) of `n` rows from (row << 32) | column longs:
+    * the row rides the high bits, so one primitive sort (in place) IS the
+    * CSR order. */
+  private def csr(packed: Array[Long], n: Int): (Array[Int], Array[Int]) = {
+    java.util.Arrays.sort(packed)
+    val offsets = new Array[Int](n + 1)
+    val cols = new Array[Int](packed.length)
+    var i = 0
+    while (i < packed.length) { offsets((packed(i) >>> 32).toInt + 1) += 1; cols(i) = packed(i).toInt; i += 1 }
+    i = 1
+    while (i <= n) { offsets(i) += offsets(i - 1); i += 1 }
+    (offsets, cols)
+  }
+}
+
 object CsrGraph {
 
   /** The dense id-space bound of the CSR fast path: 32M ids keep the

@@ -231,6 +231,7 @@ class LinkGraph(
   @transient private var undirectedCache: DataFrame = _
   @transient private var factsCache: NodeFacts = _
   @transient private var csrCache: CsrGraph = _
+  @transient private var adjCache: DirectedAdjacency = _
 
   /** Distinct directed (src, dst) pairs — the adjacency after multi-edge
     * collapse (node_store.rs:176-199: one adjacency entry per neighbour).
@@ -279,6 +280,18 @@ class LinkGraph(
       csrCache = CsrGraph.undirectedFromLinkGraph(this,
         spark.conf.get("spark.sql.shuffle.partitions").toInt)
     csrCache
+  }
+
+  /** The driver-side directed adjacency, collected once per graph (callers
+    * bound it with `DriverGuard.checkGraph` first); released by unpersist(). */
+  def directedAdjacency: DirectedAdjacency = synchronized {
+    if (adjCache == null) {
+      val f = nodeFacts // dense vids (every minted graph) need no vid collect
+      val vids = if (f.count == f.maxVid + 1) Array.tabulate(f.count.toInt)(_.toLong)
+        else nodes.select(col("vid")).rdd.map(_.getLong(0)).collect().sorted
+      adjCache = DirectedAdjacency.pack(dedupEdges, vids)
+    }
+    adjCache
   }
 
   /** Distinct out-neighbour count per node; nodes with none get 0.
@@ -330,6 +343,7 @@ class LinkGraph(
     if (dedupCache != null) { dedupCache.unpersist(); dedupCache = null }
     if (undirectedCache != null) { undirectedCache.unpersist(); undirectedCache = null }
     if (csrCache != null) { csrCache.unpersist(); csrCache = null }
+    adjCache = null
     factsCache = null
   }
 }

@@ -258,21 +258,29 @@ class AlgoSpec extends AnyFunSuite {
       }
       val expected = comps.map(_.map(i => present(i).toString)).toSet
 
+      // size (nodes + edges) of the trimmed cyclic core: a bound between it
+      // and the whole graph sends scc through trim -> residual Tarjan
+      var core = raw.filter { case (u, v) => u != v }
+      var trimmed = false
+      while (!trimmed) {
+        val alive = core.map(_._1).toSet intersect core.map(_._2).toSet
+        val next = core.filter { case (u, v) => alive(u) && alive(v) }
+        trimmed = next.size == core.size
+        core = next
+      }
+      val coreSize = core.flatMap(t => Seq(t._1, t._2)).distinct.size + core.size
+      val whole = present.length + raw.length
+      assert(coreSize < whole, s"round=$round: trim removes nothing")
+
       val g = LinkGraph.fromNumericEdgeList(spark,
         raw.zipWithIndex.map { case ((u, v), i) => (u, v, i.toLong) })
-      for (bound <- Seq(None, Some("10"))) {
-        val prev = spark.conf.getOption("graft.driver.maxElements")
-        bound.foreach(b => spark.conf.set("graft.driver.maxElements", b))
-        try {
+      for (bound <- Seq(None, Some("10"), Some(((coreSize + whole) / 2).toString))) {
+        val conf = bound.map("graft.driver.maxElements" -> _).toSeq
+        TestSpark.withConf(conf: _*) {
           val got = Components.scc(g).collect()
             .map(r => (r.getAs[String]("name"), r.getAs[Long]("component_vid")))
             .groupBy(_._2).values.map(_.map(_._1).toSet).toSet
           assert(got == expected, s"round=$round bound=$bound")
-        } finally bound.foreach { _ =>
-          prev match {
-            case Some(v) => spark.conf.set("graft.driver.maxElements", v)
-            case None => spark.conf.unset("graft.driver.maxElements")
-          }
         }
       }
     }
@@ -286,21 +294,30 @@ class AlgoSpec extends AnyFunSuite {
     val cyc2 = (101L to 140L).map(i => (i, if (i == 140L) 101L else i + 1, 0L))
     val tail = Seq((40L, 200L, 0L))
     val g = LinkGraph.fromNumericEdgeList(spark, cyc1 ++ cyc2 ++ tail)
-    val prev = spark.conf.getOption("graft.driver.maxElements")
-    spark.conf.set("graft.driver.maxElements", "10")
-    try {
+    TestSpark.withConf("graft.driver.maxElements" -> "10") {
       val got = Components.scc(g).collect()
         .map(r => r.getAs[String]("name") -> r.getAs[String]("component")).toMap
       assert((1L to 40L).map(i => got(i.toString)).toSet.size == 1)
       assert((101L to 140L).map(i => got(i.toString)).toSet.size == 1)
       assert(got("1") != got("101"))
       assert(got("200") == "200") // trimmed singleton
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("graft.driver.maxElements", v)
-        case None => spark.conf.unset("graft.driver.maxElements")
-      }
     }
+  }
+
+  test("SCC: a graph within the driver bound runs Tarjan directly, with no trim rounds") {
+    // a 300-node chain is deep for trim (one node peeled per end per
+    // round, so > TrimIters rounds); the fit test must send it straight
+    // to Tarjan in a constant number of Spark jobs
+    val chain = (0L until 299L).map(i => (i, i + 1))
+    val cycle = Seq((1000L, 1001L), (1001L, 1002L), (1002L, 1000L))
+    val g = LinkGraph.fromRawEdges((chain ++ cycle).toDF("src", "dst"))
+    val (got, jobs) = TestSpark.jobsIn {
+      Components.scc(g).collect().map(r => r.getAs[Long]("vid") -> r.getAs[Long]("component_vid")).toMap
+    }
+    assert(jobs <= 10, s"scc issued $jobs Spark jobs")
+    assert((0L until 300L).forall(v => got(v) == v))
+    assert(Seq(1000L, 1001L, 1002L).forall(v => got(v) == 1000L))
+    assert(got.size == 303)
   }
 
   test("in/out component of a node") {
@@ -344,20 +361,21 @@ class AlgoSpec extends AnyFunSuite {
     val e = Seq((0L, 1L, 0L, 0L, "_default")).toDF("src", "dst", "ts", "seq", "layer")
     val n = (0L to 30L).map(i => (i, i.toString)).toDF("vid", "name")
     val g = new LinkGraph(e, n, namesAreNumeric = true)
-    val prev = spark.conf.getOption("graft.driver.maxElements")
-    spark.conf.set("graft.driver.maxElements", "10")
-    try {
+    TestSpark.withConf("graft.driver.maxElements" -> "10") {
       val e1 = intercept[IllegalStateException] { Components.allComponents(g, "out") }
       assert(e1.getMessage.contains("allComponents"))
       val e2 = intercept[IllegalStateException] {
         Seir.run(g, Seq("0"), Seir.Config(infectionProb = 1.0, initialInfection = 0L))
       }
       assert(e2.getMessage.contains("Seir"))
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("graft.driver.maxElements", v)
-        case None => spark.conf.unset("graft.driver.maxElements")
-      }
+      val e3 = intercept[IllegalStateException] { Lpa.runExact(g, None) }
+      assert(e3.getMessage.contains("Lpa.runExact"))
+      val e4 = intercept[IllegalStateException] { Pathing.dijkstra(g, "0", Seq("1")) }
+      assert(e4.getMessage.contains("Pathing.dijkstra"))
+      val e5 = intercept[IllegalStateException] { Betweenness.run(g) }
+      assert(e5.getMessage.contains("Betweenness"))
+      val e6 = intercept[IllegalStateException] { Louvain.run(g) }
+      assert(e6.getMessage.contains("Louvain"))
     }
   }
 

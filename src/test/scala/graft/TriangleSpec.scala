@@ -119,4 +119,21 @@ class TriangleSpec extends AnyFunSuite {
     val left = sc.getPersistentRDDs.keySet -- before
     assert(left.isEmpty, s"persisted RDDs left after unpersist: $left")
   }
+
+  test("betweenness reads one directed adjacency per graph, rebuilt after unpersist()") {
+    val g = LinkGraph.fromNumericEdgeList(spark, motif23)
+    def values() = graft.algo.Betweenness.run(g).collect()
+      .map(r => r.getAs[String]("name") -> r.getAs[Double]("value")).toMap
+    val first = values()
+    val adj = g.directedAdjacency
+    assert(values() == first)
+    assert(g.directedAdjacency eq adj)
+    g.unpersist()
+    assert(values() == first)
+    val rebuilt = g.directedAdjacency
+    assert(!(rebuilt eq adj), "the adjacency memo survived unpersist()")
+    assert(rebuilt.vids.sameElements(adj.vids) && rebuilt.offsets.sameElements(adj.offsets) &&
+      rebuilt.targets.sameElements(adj.targets))
+    g.unpersist()
+  }
 }
