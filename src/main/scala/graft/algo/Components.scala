@@ -2,7 +2,6 @@ package graft.algo
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import graft.graph.{DirectedAdjacency, LinkGraph}
 import graft.bsp.{DriverGuard, RunContext, Superstep}
 
@@ -106,8 +105,9 @@ object Components {
                   "pivot rounds; raise graft.driver.maxElements or pre-partition the graph")
             val pv = alive.agg(min($"vid")).head().getLong(0)
             val pivot = Seq(pv).toDF("vid")
-            val comp = closure(eA, pivot)
-              .join(closure(eA.select($"dst".as("src"), $"src".as("dst")), pivot), Seq("vid"), "left_semi")
+            def reach(e: DataFrame) = Superstep.withStatic(e, "src")(closure(_, pivot))
+            val comp = reach(eA)
+              .join(reach(eA.select($"dst".as("src"), $"src".as("dst"))), Seq("vid"), "left_semi")
               .localCheckpoint(true)
             extracted += comp.select($"vid", lit(pv).as("component_vid"))
             peel(restrict(eA, comp, "left_anti").localCheckpoint(false), n - comp.count(), round + 1)
@@ -179,37 +179,34 @@ object Components {
   /** Descendant set of `source` (nodes reachable over out-edges), excluding
     * the source itself unless it lies on a cycle — matching out_component. */
   def outComponentOf(g: LinkGraph, source: String): DataFrame =
-    componentOf(g, source, g.dedupEdges)
+    componentOf(g, source, g.dedupTable)
 
   /** Ancestor set of `source` (nodes that reach it over out-edges). */
   def inComponentOf(g: LinkGraph, source: String): DataFrame =
-    componentOf(g, source, g.dedupEdges.select(col("dst").as("src"), col("src").as("dst")))
+    Superstep.withStatic(g.dedupEdges.select(col("dst").as("src"), col("src").as("dst")), "src")(
+      componentOf(g, source, _))
 
   /** The closure seeded with the source's one-hop neighbours over `e`, so
     * the source joins only through a cycle. Returns (vid, name). */
-  private def componentOf(g: LinkGraph, source: String, e: DataFrame): DataFrame = {
+  private def componentOf(g: LinkGraph, source: String, e: Superstep.Static): DataFrame = {
     val src = g.nodes.filter(col("name") === source).select(col("vid"))
-    val seeds = src.join(e, src("vid") === e("src")).select(col("dst").as("vid")).distinct()
+    val seeds = src.join(e.df, src("vid") === e.df("src")).select(col("dst").as("vid")).distinct()
     closure(e, seeds).join(g.nodes, Seq("vid")).select(col("vid"), col("name"))
   }
 
   /** BFS closure: every node reachable from `seeds` (vid) in zero or more
-    * hops over `edges` (src, dst), seeds included — `Pathing.bfs` with the
-    * frontier step, against the edge table hash-partitioned on src once
-    * and persisted. One job per level: the frontier count materialises its
-    * lazy checkpoint, and the lazy visited union materialises inside the
-    * next level's job. */
-  private def closure(edges: DataFrame, seeds: DataFrame): DataFrame =
-    graft.bsp.IterativeConf.withStablePartitioning(edges.sparkSession) {
-      val p = edges.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-      val e = edges.repartition(p, col("src")).persist(StorageLevel.MEMORY_AND_DISK)
-      val m = e.count()
+    * hops over the static (src, dst) table `edges`, seeds included —
+    * `Pathing.bfs` with the frontier step. One job per level: the frontier
+    * count materialises its lazy checkpoint, and the lazy visited union
+    * materialises inside the next level's job (so the result never reads
+    * `edges` after the last level). */
+  private def closure(edges: Superstep.Static, seeds: DataFrame): DataFrame =
+    graft.bsp.IterativeConf.withStablePartitioning(edges.df.sparkSession) {
+      val p = edges.df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
       val init = seeds.repartition(p, col("vid")).localCheckpoint(false)
-      val visited = Pathing.bfs("closure", m, Long.MaxValue, init, eager = false) { (frontier, visited, _) =>
-        Pathing.frontierStep(frontier, visited, e).select(col("vid"))
+      Pathing.bfs("closure", edges.rows, Long.MaxValue, init, eager = false) { (frontier, visited, _) =>
+        Pathing.frontierStep(frontier, visited, edges.df).select(col("vid"))
       }
-      e.unpersist()
-      visited
     }
 
   /** All-nodes ancestor (dir="in") or descendant (dir="out") sets:

@@ -103,7 +103,7 @@ object Hits {
     val scatter = e.select($"src".as("from"), $"dst".as("to"), lit(0).as("kind"))
       .union(e.select($"dst".as("from"), $"src".as("to"), lit(1).as("kind")))
     var held = Option.empty[DataFrame]
-    val state = Superstep.dataFrame("hits", ctx, scatter, "from") { (scatter, _) =>
+    val state = Superstep.withStatic(scatter, "from")(Superstep.dataFrame("hits", ctx, _) { (scatter, _) =>
       Superstep.Dense(
         init = g.nodes.select($"vid", lit(1.0).as("hub"), lit(1.0).as("auth")),
         maxSteps = iterCount,
@@ -130,7 +130,7 @@ object Hits {
         // tol = 0 disables early stopping
         halt = (r, _) => tol > 0 && r.getDouble(1) <= tol && r.getDouble(2) <= tol,
         flags = Seq("dh", "da"))
-    }
+    })
     held.foreach(_.unpersist())
     state.join(g.nodes, Seq("vid")).select($"vid", $"name", $"hub", $"auth")
   }

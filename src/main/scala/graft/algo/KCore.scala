@@ -2,7 +2,6 @@ package graft.algo
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import graft.graph.LinkGraph
 import graft.bsp.{RunContext, Superstep}
 
@@ -21,13 +20,11 @@ object KCore {
     // without this early return they would be wrongly dropped
     if (k <= 0) return g.nodes.select($"vid")
     graft.bsp.IterativeConf.withStablePartitioning(spark) {
-    val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val pairs = g.undirectedPairs.repartition(p, $"a").persist(StorageLevel.MEMORY_AND_DISK)
-    val m = pairs.count()
+    val pairs = g.pairTable
     val init = g.degrees.filter($"degree" >= k).select($"vid").localCheckpoint(true)
-    val (alive, _) = Superstep.loop("kcore", RunContext.none, m, 1, iterCount, (init, init.count())) {
+    Superstep.loop("kcore", RunContext.none, pairs.rows, 1, iterCount, (init, init.count())) {
       case ((alive, aliveCount), _) =>
-        val next = pairs
+        val next = pairs.df
           .join(alive.withColumnRenamed("vid", "a"), Seq("a"), "left_semi")
           .join(alive.withColumnRenamed("vid", "b"), Seq("b"), "left_semi")
           .groupBy($"a").agg(count("*").as("d"))
@@ -35,9 +32,7 @@ object KCore {
           .localCheckpoint(true)
         val c = next.count()
         Superstep.Next((next, c), (aliveCount - c).toDouble, c == aliveCount)
-    }
-    pairs.unpersist()
-    alive
+    }._1
     }
   }
 }

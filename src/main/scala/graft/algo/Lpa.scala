@@ -180,7 +180,7 @@ object Lpa {
   private def runSyncDf(g: LinkGraph, maxSweeps: Int, ctx: RunContext): DataFrame = {
     val halt = twoQuietPhases()
     // label ordering key: numeric GIDs by value, strings lexicographically
-    val state = Superstep.dataFrame("lpa", ctx, g.undirectedPairs, "a") { (pairs, _) =>
+    val state = Superstep.dataFrame("lpa", ctx, g.pairTable) { (pairs, _) =>
       Superstep.Dense(
         init = g.nodes.select(col("vid"), col("name").as("label")),
         maxSteps = 2L * maxSweeps,

@@ -139,7 +139,7 @@ object PageRank {
     val sink = sum(when(col("out_degree") === 0, col("score")).otherwise(lit(0.0)))
     def orZero(r: Row, i: Int) = if (r.isNullAt(i)) 0.0 else r.getDouble(i)
 
-    val state = Superstep.dataFrame("pagerank", ctx, g.dedupEdges, "src") { (edges, _) =>
+    val state = Superstep.dataFrame("pagerank", ctx, g.dedupTable) { (edges, _) =>
       Superstep.Dense(
         init = initState(g.nodes, edges, n),
         maxSteps = cfg.iterCount,

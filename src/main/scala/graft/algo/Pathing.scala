@@ -40,8 +40,7 @@ object Pathing {
     import spark.implicits._
     graft.bsp.IterativeConf.withStablePartitioning(spark) {
     val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val pairs = g.undirectedPairs.repartition(p, $"a").persist(StorageLevel.MEMORY_AND_DISK)
-    val m = pairs.count()
+    val pairs = g.pairTable
     val src = g.nodes.filter($"name" === source)
       .select($"vid", lit(0L).as("dist"), lit(null).cast("long").as("parent"))
       .repartition(p, $"vid").localCheckpoint(true)
@@ -53,8 +52,7 @@ object Pathing {
     // checkpoint write into the critical join job, while the eager trio's
     // two extra actions (a count of the cached level + a union copy of
     // two cached RDDs) are near-free at any frontier size.
-    val reached = bfs("sssp", m, cutoff, src, eager = true)(ssspStep(_, _, pairs, _))
-    pairs.unpersist()
+    val reached = bfs("sssp", pairs.rows, cutoff, src, eager = true)(ssspStep(_, _, pairs.df, _))
     if (!withPaths) reached.join(g.nodes, Seq("vid")).select($"vid", $"name", $"dist")
     else {
       // path reconstruction: each reached node has exactly one (min-vid)

@@ -31,7 +31,7 @@ object Wcc {
       return g.nodes.select(col("vid"), col("name"), col("vid").as("component_vid"),
         col("name").as("component")).limit(0)
     if (CsrGraph.useCsr(g, mode)) runCsr(g, iterCount, ctx)
-    else hashMin("wcc", g.nodes.select(col("vid")), "label", g.undirectedPairs, iterCount, ctx)
+    else hashMin("wcc", g.nodes.select(col("vid")), "label", g.pairTable, iterCount, ctx)
       .join(g.nodes, Seq("vid"))
       .join(g.nodes.select(col("vid").as("label"), col("name").as("component")), Seq("label"))
       .select(col("vid"), col("name"), col("label").as("component_vid"), col("component"))
@@ -74,12 +74,12 @@ object Wcc {
 
   /** HashMin min-label propagation on the DataFrame driver, shared by WCC
     * and Dedup.clustersFromPairs. `ids` is the one-column key table, `pairs`
-    * a symmetric (a, b) neighbour table; init label = least(key, min
+    * a static symmetric (a, b) neighbour table keyed on a; init label = least(key, min
     * neighbour key), already final when there are no pairs, so then no
     * superstep runs. Returns the (key, `label`) state. */
-  private[graft] def hashMin(algo: String, ids: DataFrame, label: String, pairs: DataFrame,
+  private[graft] def hashMin(algo: String, ids: DataFrame, label: String, pairs: Superstep.Static,
                              maxSteps: Long, ctx: RunContext): DataFrame = {
-    Superstep.dataFrame(algo, ctx, pairs, "a") { (pairs, m) =>
+    Superstep.dataFrame(algo, ctx, pairs) { (pairs, m) =>
       Superstep.Dense(
         init = hashMinInit(ids, pairs, label),
         maxSteps = if (m == 0) 0 else maxSteps,

@@ -9,9 +9,9 @@ import org.apache.spark.storage.StorageLevel
   * both physical engines. An algorithm supplies its state, a step function
   * and a halting rule; the driver owns the loop, the step numbering, the
   * `StepStat` timing + `ctx.record`, and the `ctx.finish()` barrier. The
-  * DataFrame variant additionally owns the AQE scoping, the static table,
-  * `restoreOrInit`, and the lazy checkpoint fused with the convergence
-  * aggregate into one job per superstep. */
+  * DataFrame variant additionally owns the AQE scoping, `restoreOrInit`,
+  * and the lazy checkpoint fused with the convergence aggregate into one
+  * job per superstep. */
 object Superstep {
 
   /** One step's outcome: the next state, the convergence delta recorded in
@@ -38,27 +38,45 @@ object Superstep {
       halt: (Row, Int) => Boolean,
       flags: Seq[String])
 
+  /** A static join table (the edges or pairs a loop joins) and its row count. */
+  final case class Static(df: DataFrame, rows: Long)
+
+  /** The one static join table definition: `rows` hash-partitioned on `key`
+    * (shuffle partitions), deduplicated (that partitioning clusters whole
+    * rows, so no second exchange), sorted within partitions on `key`,
+    * persisted and counted in one job planned under IterativeConf (under AQE
+    * the count alone is two). The caller releases `df`. */
+  def staticTable(rows: DataFrame, key: String): Static =
+    IterativeConf.withStablePartitioning(rows.sparkSession) {
+      val p = rows.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+      val df = rows.repartition(p, col(key)).distinct().sortWithinPartitions(col(key))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      Static(df, df.count()) // the count also materialises the cache
+    }
+
+  /** `body` over a transient static table, released when `body` returns:
+    * its result must not read the table lazily. */
+  def withStatic[T](rows: DataFrame, key: String)(body: Static => T): T = {
+    val t = staticTable(rows, key)
+    try body(t) finally t.df.unpersist()
+  }
+
   /** Runs a DataFrame program to its halting rule under
     * IterativeConf.withStablePartitioning (AQE off, so the hash
-    * partitioning survives the per-step checkpoints). `table` — the edge
-    * or pair table every superstep joins against — is hash-partitioned and
-    * sorted within partitions on `key`, cached, and counted as the edges
-    * scattered per step; `program` builds the loop from the cached table
-    * and that count. Each superstep is ONE Spark job: the
-    * checkpoint is lazy and the convergence aggregate's `head()`
-    * materialises it. Returns the final state (flags dropped); the table
-    * is released, the state stays checkpointed. */
-  def dataFrame(algo: String, ctx: RunContext, table: DataFrame, key: String)(
+    * partitioning survives the per-step checkpoints). `program` builds the
+    * loop from the already-static `table`'s frame and row count; the driver
+    * neither builds, counts nor releases it. Each superstep is ONE Spark
+    * job: the checkpoint is lazy and the convergence aggregate's `head()`
+    * materialises it. Returns the final state (flags dropped), checkpointed. */
+  def dataFrame(algo: String, ctx: RunContext, table: Static)(
       program: (DataFrame, Long) => Dense): DataFrame = {
-    val spark = table.sparkSession
+    val spark = table.df.sparkSession
     IterativeConf.withStablePartitioning(spark) {
       val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
-      val static = staticTable(table, key, p)
-      val m = static.count() // also materialises the cache
-      val d = program(static, m)
+      val d = program(table.df, table.rows)
       val init = ctx.restoreOrInit(d.init.repartition(p, col(d.init.columns.head)))
       var last: Option[Row] = None
-      val state = loop(algo, ctx, m, ctx.startStep + 1, d.maxSteps, init) { (state, step) =>
+      loop(algo, ctx, table.rows, ctx.startStep + 1, d.maxSteps, init) { (state, step) =>
         val ck = ctx.checkpoint(d.step(state, step, last), step)
         val row = ck.agg(d.aggs.head, d.aggs.tail: _*).head()
         last = Some(row)
@@ -66,16 +84,8 @@ object Superstep {
         Next(ck.drop(d.flags: _*), if (row.isNullAt(0)) 0.0 else row.getAs[Number](0).doubleValue,
           d.halt(row, step))
       }
-      static.unpersist()
-      state
     }
   }
-
-  /** A static table as the DataFrame driver caches it: hash-partitioned
-    * into `p` partitions and sorted within them on `key`. */
-  private[graft] def staticTable(table: DataFrame, key: String, p: Int): DataFrame =
-    table.repartition(p, col(key)).sortWithinPartitions(col(key))
-      .persist(StorageLevel.MEMORY_AND_DISK)
 
   /** The loop both engines share: steps `first`, `first + 1`, ... up to
     * `last` inclusive, stopping early when a step halts. Each step is

@@ -228,10 +228,9 @@ object Dedup {
   def clustersFromPairs(ids: DataFrame, dupPairs: DataFrame,
                         ctx: graft.bsp.RunContext = graft.bsp.RunContext.none): DataFrame = {
     val dup = dupPairs.select(col("a"), col("b"))
-    val pairs = dup.union(dup.select(col("b").as("a"), col("a").as("b")))
-    graft.algo.Wcc.hashMin("dup_clusters", ids.select(col("id")), "cluster", pairs,
-      Long.MaxValue, ctx)
-      .select(col("id"), col("cluster"), (col("id") === col("cluster")).as("keep"))
+    graft.bsp.Superstep.withStatic(dup.union(dup.select(col("b").as("a"), col("a").as("b"))), "a") {
+      graft.algo.Wcc.hashMin("dup_clusters", ids.select(col("id")), "cluster", _, Long.MaxValue, ctx)
+    }.select(col("id"), col("cluster"), (col("id") === col("cluster")).as("keep"))
   }
 
   /** 32-bit SimHash over whitespace tokens: sign-sum of md5u32 token-hash

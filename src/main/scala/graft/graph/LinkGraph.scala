@@ -223,37 +223,38 @@ class LinkGraph(
   // ---- core accessors ----------------------------------------------------
 
   // The collapsed adjacencies below are derived by a full distinct (a
-  // shuffle); nearly every structural algorithm starts from them, so they
-  // are computed once per graph instance and kept persisted until
-  // unpersist() — the analogue of the reference's materialised per-node
-  // adjacency lists (node_store.rs:176-199).
-  @transient private var dedupCache: DataFrame = _
-  @transient private var undirectedCache: DataFrame = _
+  // shuffle); nearly every structural algorithm starts from them, so each
+  // is built once per graph instance as a `Superstep.staticTable` and kept
+  // until unpersist() — the analogue of the reference's materialised
+  // per-node adjacency lists (node_store.rs:176-199).
+  @transient private var dedupCache: graft.bsp.Superstep.Static = _
+  @transient private var undirectedCache: graft.bsp.Superstep.Static = _
   @transient private var factsCache: NodeFacts = _
   @transient private var csrCache: CsrGraph = _
   @transient private var adjCache: DirectedAdjacency = _
 
   /** Distinct directed (src, dst) pairs — the adjacency after multi-edge
     * collapse (node_store.rs:176-199: one adjacency entry per neighbour).
-    * Lazily persisted; released by unpersist(). */
-  def dedupEdges: DataFrame = synchronized {
-    if (dedupCache == null)
-      dedupCache = edges.select("src", "dst").distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    * Hash-partitioned on `src` (shuffle partitions at the first call, which
+    * builds and counts it in one job) and sorted within partitions: joins
+    * keyed on `src` read it with no exchange, so callers must not
+    * re-partition it. Released by unpersist(). */
+  def dedupEdges: DataFrame = dedupTable.df
+  private[graft] def dedupTable: graft.bsp.Superstep.Static = synchronized {
+    if (dedupCache == null) dedupCache = graft.bsp.Superstep.staticTable(edges.select("src", "dst"), "src")
     dedupCache
   }
 
-  /** Distinct undirected neighbour pairs, both orientations, one row per
-    * (v, neighbour); a self-loop yields a single (v, v) row — matching
-    * `neighbours()` BOTH semantics (node_store.rs:252-299). Lazily
-    * persisted; released by unpersist(). */
-  def undirectedPairs: DataFrame = synchronized {
+  /** Distinct undirected neighbour pairs (a, b), both orientations, one row
+    * per (v, neighbour); a self-loop yields a single (v, v) row — matching
+    * `neighbours()` BOTH semantics (node_store.rs:252-299). Keyed on `a`
+    * under `dedupEdges`' contract: callers must not re-partition it. */
+  def undirectedPairs: DataFrame = pairTable.df
+  private[graft] def pairTable: graft.bsp.Superstep.Static = synchronized {
     if (undirectedCache == null) {
       val d = edges.select("src", "dst")
-      undirectedCache = d.select(col("src").as("a"), col("dst").as("b"))
-        .union(d.select(col("dst").as("a"), col("src").as("b")))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      undirectedCache = graft.bsp.Superstep.staticTable(d.select(col("src").as("a"), col("dst").as("b"))
+        .union(d.select(col("dst").as("a"), col("src").as("b"))), "a")
     }
     undirectedCache
   }
@@ -326,8 +327,8 @@ class LinkGraph(
   def nodeCount: Long = nodes.count()
 
   /** Unique-edge count (post multi-edge collapse), matching the reference's
-    * `count_edges`. */
-  def edgeCount: Long = dedupEdges.count()
+    * `count_edges`; memoized with `dedupEdges`. */
+  def edgeCount: Long = dedupTable.rows
 
   /** Exploded temporal event count (`count_temporal_edges`). */
   def edgeEventCount: Long = edges.count()
@@ -340,8 +341,8 @@ class LinkGraph(
 
   def unpersist(): Unit = synchronized {
     edges.unpersist(); nodes.unpersist()
-    if (dedupCache != null) { dedupCache.unpersist(); dedupCache = null }
-    if (undirectedCache != null) { undirectedCache.unpersist(); undirectedCache = null }
+    if (dedupCache != null) { dedupCache.df.unpersist(); dedupCache = null }
+    if (undirectedCache != null) { undirectedCache.df.unpersist(); undirectedCache = null }
     if (csrCache != null) { csrCache.unpersist(); csrCache = null }
     adjCache = null
     factsCache = null

@@ -5,9 +5,10 @@ import graft.graph.LinkGraph
 import graft.algo.PageRank
 
 /** Diagnostic: print the physical plan of one DF-PageRank superstep — the
-  * production step builder on a checkpointed state, under the loop
-  * driver's AQE-off scope — to check that the state⋈edges join and the
-  * state-update join reuse the hash partitioning (no extra Exchange). */
+  * production step builder on a checkpointed state over the graph's own
+  * `dedupEdges`, under the loop driver's AQE-off scope — to check that the
+  * state⋈edges join and the state-update join reuse the hash partitioning
+  * (no extra Exchange). */
 object PlanCheck {
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder().master("local[8]")
@@ -24,10 +25,8 @@ object PlanCheck {
     val g = LinkGraph.fromRawEdges(edges)
 
     graft.bsp.IterativeConf.withStablePartitioning(spark) {
-      val p = 8
-      val e = g.dedupEdges.repartition(p, $"src").sortWithinPartitions($"src").persist()
-      e.count()
-      val state = PageRank.initState(g.nodes, e, n).repartition(p, $"vid").localCheckpoint(true)
+      val e = g.dedupEdges
+      val state = PageRank.initState(g.nodes, e, n).repartition(8, $"vid").localCheckpoint(true)
       PageRank.superstep(state, e, 0.85, 0.15 / n, 0.0).explain("formatted")
     }
     spark.stop()

@@ -76,7 +76,7 @@ object ScalingCheck {
         }
       } else {
         val g = LinkGraph.fromRawEdges(edges)
-        val m = g.dedupEdges.count()
+        val m = g.edgeCount
         (1 to rounds).map { r =>
           val ctx = new graft.bsp.LocalRunContext
           PageRank.run(g, PageRank.Config(iterCount = iters, tol = 0.0, mode = "df"), ctx).count()

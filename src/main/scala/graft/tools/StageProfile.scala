@@ -32,7 +32,7 @@ object StageProfile {
       graft.io.Corpus.linkTargets(i, 16, 42L).map(j => (i, j))
     }.toDF("src", "dst")
     val g = LinkGraph.fromRawEdges(edges)
-    g.dedupEdges.count()
+    g.edgeCount
     println("=== graph built; running 3 supersteps ===")
     val t0 = System.nanoTime()
     PageRank.run(g, PageRank.Config(iterCount = 3, tol = 0.0, mode = "df")).count()

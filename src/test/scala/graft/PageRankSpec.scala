@@ -79,4 +79,21 @@ class PageRankSpec extends AnyFunSuite {
     for ((k, w) <- want)
       assert(math.abs(got(k) - w) < 1e-6, s"node $k: got ${got(k)}, want $w")
   }
+
+  test("DF PageRank on a built dedupEdges runs no job on the table; edgeCount is memoized") {
+    // the graph builds, partitions and counts its edge table once: the
+    // loop joins it as is (no per-run repartition + count job) and
+    // edgeCount reads the count taken at the build
+    val edges = (0L until 60L).flatMap(i => Seq((i, (i * i + 1) % 60, i), (i, (i + 1) % 60, i)))
+    val g = LinkGraph.fromNumericEdgeList(spark, edges)
+    g.dedupEdges.count(); g.nodeFacts
+    val (m, countJobs) = TestSpark.jobsIn(g.edgeCount)
+    assert(m == edges.map(e => (e._1, e._2)).distinct.size && countJobs == 0,
+      s"edgeCount issued $countJobs jobs")
+    val (_, jobs) = TestSpark.jobsIn(PageRank.run(g, PageRank.Config(iterCount = 3, tol = 0.0, mode = "df")))
+    // the tiny init join's broadcast, restoreOrInit, the first step's
+    // sink-mass read and one job per superstep: 6, where a loop that
+    // re-partitions and counts its own table copy takes 7
+    assert(jobs == 6, s"3-step DF PageRank issued $jobs jobs")
+  }
 }

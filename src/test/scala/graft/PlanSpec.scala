@@ -2,8 +2,17 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 import graft.graph.LinkGraph
+
+/** Plan traversal that also descends into adaptive plans and query stages. */
+object PlanWalk extends AdaptiveSparkPlanHelper
 
 /** Physical-plan audits: the properties ARCHITECTURE.md claims are
   * load-bearing at scale, asserted on the actual executed plans so a
@@ -24,6 +33,54 @@ class PlanSpec extends AnyFunSuite {
     try body finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
+  /** True when `pl` reaches a cached table through no join or aggregate. */
+  def readsCache(pl: SparkPlan): Boolean = pl match {
+    case _: InMemoryTableScanExec => true
+    case _: BaseJoinExec | _: BaseAggregateExec => false
+    case other => other.children.exists(readsCache)
+  }
+
+  test("graph tables: each build plans ONE exchange (the dedup shuffle is the partition shuffle)") {
+    // first read from the session at its default (AQE on), as a graph
+    // table is built wherever it is first read; the build plan is the
+    // cached relation's
+    val edges0 = spark.range(0, 2000, 1, 4).flatMap { i =>
+      graft.io.Corpus.linkTargets(i, 4, 5L).map(j => (i, j))
+    }.toDF("src", "dst")
+    val g = LinkGraph.fromRawEdges(edges0)
+    for ((name, table) <- Seq("dedupEdges" -> g.dedupEdges, "undirectedPairs" -> g.undirectedPairs)) {
+      val build = table.queryExecution.optimizedPlan
+        .collectFirst { case r: InMemoryRelation => r.cachedPlan }
+      assert(build.isDefined, s"$name is not cached")
+      val exchanges = PlanWalk.collect(build.get) { case x: ShuffleExchangeExec => x }.length
+      assert(exchanges == 1, s"$name build plans $exchanges exchanges:\n${build.get}")
+    }
+    g.unpersist()
+  }
+
+  test("graph table first read with AQE on: an AQE-off superstep joins it with no exchange on its side") {
+    withoutAutoBroadcast {
+      val n = 20000L
+      val edges0 = spark.range(0, n, 1, 4).flatMap { i =>
+        graft.io.Corpus.linkTargets(i, 8, 23L).map(j => (i, j))
+      }.toDF("src", "dst")
+      val g = LinkGraph.fromRawEdges(edges0)
+      val e = g.dedupEdges // first read under the session default
+      graft.bsp.IterativeConf.withStablePartitioning(spark) {
+        val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
+        val state = graft.algo.PageRank.initState(g.nodes, e, n)
+          .repartition(p, $"vid").localCheckpoint(true)
+        val step = graft.algo.PageRank.superstep(state, e, 0.85, 0.15 / n, 0.0)
+        val exec = step.queryExecution.executedPlan
+        val s = exec.toString
+        val exchanges = exec.collect { case x: ShuffleExchangeExec => x }
+        assert(exchanges.length == 1, s"expected 1 shuffle per superstep, got ${exchanges.length}:\n$s")
+        exchanges.foreach(x => assert(!readsCache(x.child), s"exchange over the cached edge table:\n$s"))
+      }
+      g.unpersist()
+    }
+  }
+
   test("DF PageRank superstep: ONE exchange, no broadcast-nested-loop, cached edge table never re-sorted") {
     // 200k nodes / ~3.2M edges with a 2MB broadcast threshold reproduces
     // the at-scale join regime (neither side broadcasts); the production
@@ -38,8 +95,7 @@ class PlanSpec extends AnyFunSuite {
         graft.io.Corpus.linkTargets(i, 16, 7L).map(j => (i, j))
       }.toDF("src", "dst")
       val g = LinkGraph.fromRawEdges(edges0)
-      val e = graft.bsp.Superstep.staticTable(g.dedupEdges, "src", p)
-      e.count()
+      val e = g.dedupEdges
       val state = graft.algo.PageRank.initState(g.nodes, e, n)
         .repartition(p, $"vid").localCheckpoint(true)
       val newState = graft.algo.PageRank.superstep(state, e, 0.85, 0.15 / n, 0.0)
@@ -59,7 +115,7 @@ class PlanSpec extends AnyFunSuite {
       assert(exec.collect { case srt: SortExec => srt }.isEmpty,
         s"unexpected per-superstep sort:\n$s")
       assert(!s.contains("BroadcastNestedLoopJoin"))
-      e.unpersist(); g.unpersist()
+      g.unpersist()
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
   }
 
@@ -75,8 +131,7 @@ class PlanSpec extends AnyFunSuite {
           graft.io.Corpus.linkTargets(i, 8, 17L).map(j => (i, j))
         }.toDF("src", "dst")
         val g = LinkGraph.fromRawEdges(edges0)
-        val pairs = graft.bsp.Superstep.staticTable(g.undirectedPairs, "a", p)
-        pairs.count()
+        val pairs = g.undirectedPairs
         val state = graft.algo.Wcc.hashMinInit(g.nodes.select($"vid"), pairs, "label")
           .repartition(p, $"vid").localCheckpoint(true)
         val exec = graft.algo.Wcc.hashMinStep(state, pairs).queryExecution.executedPlan
@@ -87,7 +142,7 @@ class PlanSpec extends AnyFunSuite {
           s"superstep joins are not both SHJ:\n$s")
         assert(exec.collect { case srt: SortExec => srt }.isEmpty,
           s"unexpected per-superstep sort:\n$s")
-        pairs.unpersist(); g.unpersist()
+        g.unpersist()
       }
     }
   }
@@ -110,8 +165,7 @@ class PlanSpec extends AnyFunSuite {
           graft.io.Corpus.linkTargets(i, 8, 11L).map(j => (i, j))
         }.toDF("src", "dst").withColumn("ts", col("src") % 97)
         val g = LinkGraph.fromRawEdges(edges0)
-        val pairs = g.undirectedPairs.repartition(p, $"a").persist()
-        pairs.count()
+        val pairs = g.undirectedPairs
         val frontier = g.nodes.filter($"vid" < 100)
           .select($"vid", lit(0L).as("dist"), lit(null).cast("long").as("parent"))
           .localCheckpoint(true)
@@ -136,7 +190,7 @@ class PlanSpec extends AnyFunSuite {
           s"per-step sort in reachability scatter:\n$s2")
         assert(exec2.collect { case x: ShuffledHashJoinExec => x }.nonEmpty,
           s"reachability scatter join is not SHJ:\n$s2")
-        pairs.unpersist(); events.unpersist(); g.unpersist()
+        events.unpersist(); g.unpersist()
       }
     }
   }
@@ -147,21 +201,12 @@ class PlanSpec extends AnyFunSuite {
     // persisted edge table on every level. Checked on both static-table
     // shapes the step runs on: sssp's (a, b) pairs (through ssspStep) and
     // a closure's (src, dst) edges.
-    import org.apache.spark.sql.execution.{SortExec, SparkPlan}
-    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.SortExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import org.apache.spark.sql.execution.joins.{BaseJoinExec, ShuffledHashJoinExec}
+    import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
     import org.apache.spark.sql.execution.window.WindowExec
-    // true when `pl` reaches a cached table through no join or aggregate
-    def readsCache(pl: SparkPlan): Boolean = pl match {
-      case _: InMemoryTableScanExec => true
-      case _: BaseJoinExec | _: BaseAggregateExec => false
-      case other => other.children.exists(readsCache)
-    }
     withoutAutoBroadcast {
       graft.bsp.IterativeConf.withStablePartitioning(spark) {
-        val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
         val n = 50000L
         val edges0 = spark.range(0, n, 1, 4).flatMap { i =>
           graft.io.Corpus.linkTargets(i, 8, 11L).map(j => (i, j))
@@ -169,12 +214,11 @@ class PlanSpec extends AnyFunSuite {
         val g = LinkGraph.fromRawEdges(edges0)
         val frontier = g.nodes.filter($"vid" < 100).select($"vid").localCheckpoint(true)
         val visited = g.nodes.filter($"vid" < 300).select($"vid").localCheckpoint(true)
-        val pairs = g.undirectedPairs.repartition(p, $"a").persist()
-        val dedup = g.dedupEdges.repartition(p, $"src").persist()
-        for ((edges, step) <- Seq(
-            pairs -> graft.algo.Pathing.ssspStep(frontier, visited, pairs, 1L),
-            dedup -> graft.algo.Pathing.frontierStep(frontier, visited, dedup))) {
-          edges.count()
+        val pairs = g.undirectedPairs
+        val dedup = g.dedupEdges
+        for (step <- Seq(
+            graft.algo.Pathing.ssspStep(frontier, visited, pairs, 1L),
+            graft.algo.Pathing.frontierStep(frontier, visited, dedup))) {
           val exec = step.queryExecution.executedPlan
           val s = exec.toString
           assert(exec.collect { case x: SortExec => x }.isEmpty, s"per-level sort in frontier step:\n$s")
@@ -184,7 +228,6 @@ class PlanSpec extends AnyFunSuite {
           exec.collect { case x: ShuffleExchangeExec => x }.foreach { x =>
             assert(!readsCache(x.child), s"exchange over the cached edge table:\n$s")
           }
-          edges.unpersist()
         }
         g.unpersist()
       }
@@ -232,11 +275,12 @@ class PlanSpec extends AnyFunSuite {
         val edges0 = spark.range(0, n, 1, 4).flatMap { i =>
           graft.io.Corpus.linkTargets(i, 8, 13L).map(j => (i, j))
         }.toDF("src", "dst")
-        val pairs = edges0.select($"src".as("a"), $"dst".as("b"))
-          .union(edges0.select($"dst".as("a"), $"src".as("b")))
-          .distinct().repartition(p, $"a").persist()
-        pairs.count()
-        val state = spark.range(0, n).select($"id".as("vid"), $"id".cast("string").as("label"))
+        val ids = spark.range(0, n).select($"id".as("vid"), $"id".cast("string").as("name"))
+        // an uncached edge frame: the pair table's build lineage then holds
+        // no other cached scan
+        val g = new LinkGraph(edges0, ids, namesAreNumeric = true)
+        val pairs = g.undirectedPairs
+        val state = ids.select($"vid", $"name".as("label"))
           .repartition(p, $"vid").localCheckpoint(true)
         val phase = graft.algo.Lpa.lpaPhase(state, pairs, 0, numericNames = true)
         val exec = phase.queryExecution.executedPlan
@@ -267,7 +311,7 @@ class PlanSpec extends AnyFunSuite {
         // rewrite was rejected because it planned this subtree twice)
         assert(s.sliding("InMemoryTableScan".length).count(_ == "InMemoryTableScan") == 1,
           s"edge gather consumed more than once per phase:\n$s")
-        pairs.unpersist()
+        g.unpersist()
       }
     }
   }
