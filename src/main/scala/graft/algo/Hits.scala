@@ -43,9 +43,7 @@ object Hits {
     * reversed CSR (out-neighbours per src, gathers auth→recv_auth): both
     * gathers run in the same superstep, one broadcast each. */
   private def runCsr(g: LinkGraph, iterCount: Int, tol: Double, ctx: RunContext): DataFrame = {
-    val spark = g.spark
-    import spark.implicits._
-    val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val p = g.spark.conf.get("spark.sql.shuffle.partitions").toInt
     val fwd = CsrGraph.fromLinkGraph(g, p)             // in-nbrs per dst
     val rev = CsrGraph.reversedFromLinkGraph(g, p)     // out-nbrs per src
     val n = fwd.n
@@ -82,10 +80,7 @@ object Hits {
       Superstep.Next((newHub, newAuth), math.max(dH, dA), tol > 0 && dH <= tol && dA <= tol)
     }
     fwd.unpersist(); rev.unpersist()
-    val rows = g.nodes.select($"vid").as[Long].collect().sorted
-      .map(v => (v, hub(v.toInt), auth(v.toInt)))
-    val res = spark.createDataset(rows.toSeq).toDF("vid", "hub", "auth")
-    res.join(g.nodes, Seq("vid")).select($"vid", $"name", $"hub", $"auth")
+    CsrGraph.results(g, (hub, auth), "hub DOUBLE, auth DOUBLE") { case ((h, a), v) => Seq(h(v), a(v)) }
   }
 
   /** The DataFrame engine on `Superstep.dataFrame`, over one static

@@ -126,12 +126,14 @@ object Lpa {
     require(g.namesAreNumeric,
       "LPA CSR mode needs numeric GID names (labels are packed as u64); " +
         "use mode=\"df\" for string-named graphs")
-    val spark = g.spark
-    import spark.implicits._
     val csr = g.undirectedCsr
-    val nodes = g.nodes.select($"vid", $"name").as[(Long, String)].collect()
     val init = Array.fill(csr.n)(Long.MinValue) // absent ids = Long.MinValue
-    nodes.foreach { case (v, nm) => init(v.toInt) = java.lang.Long.parseUnsignedLong(nm) }
+    // executors parse the names; only (vid, label) longs reach the driver
+    g.nodes.select(col("vid"), col("name")).rdd.mapPartitions { it =>
+      val b = new scala.collection.mutable.ArrayBuilder.ofLong
+      it.foreach { r => b += r.getLong(0); b += java.lang.Long.parseUnsignedLong(r.getString(1)) }
+      Iterator(b.result())
+    }.collect().foreach(a => for (i <- a.indices by 2) init(a(i).toInt) = a(i + 1))
     val halt = twoQuietPhases()
     // phases count from 0 on this engine: colour = phase % 2
     val labels = Superstep.loop("lpa-csr", ctx, csr.edgeCount, 0, 2L * maxSweeps - 1, init) {
@@ -173,8 +175,7 @@ object Lpa {
         }
         Superstep.Next(next, changed.toDouble, halt(changed))
     }
-    val rows = nodes.map { case (v, nm) => (v, nm, java.lang.Long.toUnsignedString(labels(v.toInt))) }
-    spark.createDataset(rows.toSeq).toDF("vid", "name", "label")
+    CsrGraph.results(g, labels, "label STRING")((l, v) => Seq(java.lang.Long.toUnsignedString(l(v))))
   }
 
   private def runSyncDf(g: LinkGraph, maxSweeps: Int, ctx: RunContext): DataFrame = {

@@ -44,15 +44,10 @@ object PageRank {
   /** One Spark job per superstep: broadcast state, gather over dst-range
     * CSR blocks (graft.graph.CsrGraph), stitch segments. */
   private def runCsr(g: LinkGraph, cfg: Config, ctx: RunContext): DataFrame = {
-    val spark = g.spark
-    import spark.implicits._
-    val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val csr = CsrGraph.fromLinkGraph(g, p)
+    val csr = CsrGraph.fromLinkGraph(g, g.spark.conf.get("spark.sql.shuffle.partitions").toInt)
     val score = csrScores(csr, CsrGraph.outDegrees(csr), cfg, ctx)
     csr.unpersist()
-    val rows = g.nodes.select($"vid", $"name").as[(Long, String)].collect()
-      .map { case (v, nm) => (v, nm, score(v.toInt)) }
-    spark.createDataset(rows.toSeq).toDF("vid", "name", "score")
+    CsrGraph.results(g, score, "score DOUBLE")((s, v) => Seq(s(v)))
   }
 
   /** The CSR supersteps over a packed gather CSR and its dense out-degree

@@ -49,7 +49,7 @@ object Triangles {
     *  - the simple degree of every vertex (self-loop excluded) is stitched
     *    from the blocks and broadcast (4n bytes);
     *  - each block orients its lists u -> v iff (deg u, u) < (deg v, v),
-    *    dropping self-loops, and sorts each oriented out-list by id;
+    *    dropping self-loops; a filtered CsrBlock list stays ascending;
     *  - every out-list with two or more entries is shipped once to each
     *    block owning one of its members (one partitionBy, ≤ min(m, n·P)
     *    records);
@@ -100,8 +100,9 @@ object Triangles {
     total
   }
 
-  /** The block's lists oriented by (degree, id), each sorted by id. A
-    * self-loop fails u < v and drops out. */
+  /** The block's lists oriented by (degree, id): a filter of each
+    * ascending list, so still ascending. A self-loop fails u < v and
+    * drops out. */
   private def orient(b: CsrBlock, deg: Array[Int]): CsrBlock = {
     def up(u: Int, v: Int) = deg(u) < deg(v) || (deg(u) == deg(v) && u < v)
     val w = b.hi - b.lo
@@ -124,7 +125,6 @@ object Triangles {
         if (up(b.lo + i, v)) { out(k) = v; k += 1 }
         j += 1
       }
-      java.util.Arrays.sort(out, offsets(i), k)
       i += 1
     }
     CsrBlock(b.lo, b.hi, offsets, out)

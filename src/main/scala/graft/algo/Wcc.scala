@@ -30,16 +30,17 @@ object Wcc {
     if (g.nodeFacts.maxVid < 0)
       return g.nodes.select(col("vid"), col("name"), col("vid").as("component_vid"),
         col("name").as("component")).limit(0)
-    if (CsrGraph.useCsr(g, mode)) runCsr(g, iterCount, ctx)
-    else hashMin("wcc", g.nodes.select(col("vid")), "label", g.pairTable, iterCount, ctx)
-      .join(g.nodes, Seq("vid"))
-      .join(g.nodes.select(col("vid").as("label"), col("name").as("component")), Seq("label"))
-      .select(col("vid"), col("name"), col("label").as("component_vid"), col("component"))
+    val labelled =
+      if (CsrGraph.useCsr(g, mode)) runCsr(g, iterCount, ctx)
+      else hashMin("wcc", g.nodes.select(col("vid")), "label", g.pairTable, iterCount, ctx)
+        .join(g.nodes, Seq("vid")).select(col("vid"), col("name"), col("label").as("component_vid"))
+    labelled
+      .join(g.nodes.select(col("vid").as("component_vid"), col("name").as("component")), Seq("component_vid"))
+      .select(col("vid"), col("name"), col("component_vid"), col("component"))
   }
 
+  /** The CSR supersteps; returns (vid, name, component_vid). */
   private def runCsr(g: LinkGraph, iterCount: Long, ctx: RunContext): DataFrame = {
-    val spark = g.spark
-    import spark.implicits._
     val csr = g.undirectedCsr
     val present = csr.present
     val init = Array.tabulate(csr.n)(v => if (present(v)) v else -1) // absent ids = -1
@@ -63,13 +64,7 @@ object Wcc {
       }
       Superstep.Next(next, changed.toDouble, changed == 0 && step > 0)
     }
-    val nodes = g.nodes.select($"vid", $"name").as[(Long, String)].collect()
-    val names = nodes.toMap
-    val rows = nodes.map { case (v, nm) =>
-      val c = labels(v.toInt).toLong
-      (v, nm, c, names(c))
-    }
-    spark.createDataset(rows.toSeq).toDF("vid", "name", "component_vid", "component")
+    CsrGraph.results(g, labels, "component_vid BIGINT")((l, v) => Seq(l(v).toLong))
   }
 
   /** HashMin min-label propagation on the DataFrame driver, shared by WCC

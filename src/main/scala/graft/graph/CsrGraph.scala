@@ -1,13 +1,17 @@
 package graft.graph
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.Partitioner
+import org.apache.spark.HashPartitioner
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** One gather-side CSR partition: the adjacency of every destination vertex
   * in the contiguous id range [lo, hi). `offsets` has hi-lo+1 entries;
-  * the in-neighbours of vertex v are srcs[offsets(v-lo) until offsets(v-lo+1)).
+  * the in-neighbours of vertex v are srcs[offsets(v-lo) until offsets(v-lo+1)),
+  * strictly ascending (CsrGraph.pack sorts each block; the pairs it packs
+  * are distinct).
   *
   * This is the Spark analogue of the reference's per-layer columnar CSR
   * (pometry-storage adjacency, raphtory/src/db/api/storage/graph/storage_ops/
@@ -68,7 +72,7 @@ object DirectedAdjacency {
     * one primitive (srcIdx << 32) | dstIdx long, so the driver receives
     * dense 8-byte/edge blocks, not boxed rows. Callers bound the collect
     * with a DriverGuard first. */
-  def pack(edges: org.apache.spark.sql.DataFrame, vids: Array[Long]): DirectedAdjacency = {
+  def pack(edges: DataFrame, vids: Array[Long]): DirectedAdjacency = {
     val bcVids = edges.sparkSession.sparkContext.broadcast(vids)
     val blocks = edges.select(col("src"), col("dst")).rdd.mapPartitions { it =>
       val vs = bcVids.value
@@ -82,17 +86,14 @@ object DirectedAdjacency {
       Iterator(buf.result())
     }.collect()
     bcVids.destroy()
-    val packed = new Array[Long](blocks.iterator.map(_.length).sum)
-    var off = 0
-    blocks.foreach { a => System.arraycopy(a, 0, packed, off, a.length); off += a.length }
-    val (offsets, targets) = csr(packed, vids.length)
+    val (offsets, targets) = csr(Array.concat(blocks.toIndexedSeq: _*), vids.length)
     new DirectedAdjacency(vids, offsets, targets)
   }
 
   /** CSR (offsets, columns) of `n` rows from (row << 32) | column longs:
     * the row rides the high bits, so one primitive sort (in place) IS the
     * CSR order. */
-  private def csr(packed: Array[Long], n: Int): (Array[Int], Array[Int]) = {
+  private[graph] def csr(packed: Array[Long], n: Int): (Array[Int], Array[Int]) = {
     java.util.Arrays.sort(packed)
     val offsets = new Array[Int](n + 1)
     val cols = new Array[Int](packed.length)
@@ -112,13 +113,28 @@ object CsrGraph {
 
   /** The CSR/DF dispatch rule shared by PageRank, WCC, HITS, sync-LPA and
     * triangles: "csr" / "df" force an engine; "auto" takes CSR when the
-    * dense id space is below InMemMaxIds AND the total node-name payload —
-    * which the fast path collects once to mint the result — stays under
-    * 2 GiB (the id bound alone would admit 32M url-length names ≈ several
-    * GB of driver strings). Reads the graph's memoized NodeFacts. */
+    * dense id space is below InMemMaxIds (0 <= max vid < InMemMaxIds).
+    * Only per-vid primitive arrays reach the driver on that path — names
+    * stay on the executors (results) — so the id bound is the whole rule.
+    * Reads the graph's memoized NodeFacts. */
   def useCsr(g: LinkGraph, mode: String): Boolean = mode == "csr" || mode == "auto" && {
-    val f = g.nodeFacts
-    f.maxVid >= 0 && f.maxVid < InMemMaxIds && f.nameBytes <= 2L * 1024 * 1024 * 1024
+    val m = g.nodeFacts.maxVid
+    m >= 0 && m < InMemMaxIds
+  }
+
+  /** The CSR fast path's result table: one `(vid, name, fields...)` row per
+    * node of `g`, `fields` a DDL column list. The dense per-vid `values`
+    * are broadcast once and read by `row(values, vid)` while mapping over
+    * `g.nodes`, so names never leave the executors and the plan reads the
+    * node table. The broadcast stays alive: the result is lazy and its
+    * lineage reads it. */
+  def results[S: scala.reflect.ClassTag](g: LinkGraph, values: S, fields: String)(
+      row: (S, Int) => Seq[Any]): DataFrame = {
+    val bc = g.spark.sparkContext.broadcast(values)
+    g.nodes.select(col("vid"), col("name")).mapPartitions { it =>
+      val s = bc.value
+      it.map(r => Row.fromSeq(r.getLong(0) +: r.getString(1) +: row(s, r.getLong(0).toInt)))
+    }(Encoders.row(StructType.fromDDL(s"vid BIGINT, name STRING, $fields")))
   }
 
   /** The block owning vertex `v` of an `n`-id space split into `parts`
@@ -126,48 +142,31 @@ object CsrGraph {
   private[graft] def blockOf(v: Int, parts: Int, n: Int): Int =
     math.min(((v.toLong * parts) / n).toInt, parts - 1)
 
-  private class RangeByDst(parts: Int, n: Int) extends Partitioner {
-    override def numPartitions: Int = parts
-    override def getPartition(key: Any): Int = blockOf(key.asInstanceOf[Int], parts, n)
-  }
+  /** First id of block `p`: the smallest v with blockOf(v) = p,
+    * ceil(p·n/parts); block p owns [start(p), start(p + 1)). */
+  private def blockStart(p: Int, parts: Int, n: Int): Int =
+    (((p.toLong * n) + parts - 1) / parts).toInt
 
-  private def rangeBounds(parts: Int, n: Int, p: Int): (Int, Int) = {
-    // inverse of RangeByDst: partition p owns [ceil(p*n/parts), ceil((p+1)*n/parts))
-    def start(q: Int): Int = (((q.toLong * n) + parts - 1) / parts).toInt
-    // getPartition(d)=floor(d*parts/n); d belongs to p iff d*parts/n == p
-    // smallest d with floor(d*parts/n) >= p is ceil(p*n/parts)
-    (start(p), if (p == parts - 1) n else start(p + 1))
-  }
-
-  /** Pack a (dst, src) pair RDD into dst-range CSR blocks. */
-  def pack(pairs: RDD[(Int, Int)], n: Int, parts: Int): RDD[CsrBlock] = {
-    val partitioner = new RangeByDst(parts, n)
-    pairs.partitionBy(partitioner).mapPartitionsWithIndex({ (pid, it) =>
-      val (lo, hi) = rangeBounds(parts, n, pid)
-      val width = hi - lo
-      val counts = new Array[Int](width + 1)
-      val buf = new scala.collection.mutable.ArrayBuffer[Long](1 << 12)
-      while (it.hasNext) {
-        val (d, s) = it.next()
-        counts(d - lo + 1) += 1
-        buf += (d.toLong << 32) | (s.toLong & 0xffffffffL)
+  /** Packs the (gather key, neighbour) Long rows of `pairs` into `parts`
+    * dst-range CSR blocks over the id space [0, n). Executors route each
+    * row as one primitive ((key - lo) << 32) | neighbour long to its
+    * block, one Array[Long] per (input partition, block) crosses the
+    * shuffle, and each block is one in-place sort of its longs
+    * (DirectedAdjacency.csr) — so every list comes out ascending. */
+  def pack(pairs: DataFrame, n: Int, parts: Int): RDD[CsrBlock] =
+    pairs.rdd.mapPartitions { it =>
+      val bufs = Array.fill(parts)(new scala.collection.mutable.ArrayBuilder.ofLong)
+      it.foreach { r =>
+        val d = r.getLong(0).toInt
+        val p = blockOf(d, parts, n)
+        bufs(p) += ((d - blockStart(p, parts, n)).toLong << 32) | r.getLong(1)
       }
-      var i = 1
-      while (i <= width) { counts(i) += counts(i - 1); i += 1 }
-      val offsets = counts // prefix sums = offsets
-      val srcs = new Array[Int](buf.length)
-      val cursor = offsets.clone()
-      var j = 0
-      while (j < buf.length) {
-        val packed = buf(j)
-        val d = (packed >>> 32).toInt
-        srcs(cursor(d - lo)) = packed.toInt
-        cursor(d - lo) += 1
-        j += 1
-      }
+      bufs.iterator.zipWithIndex.collect { case (b, p) if b.length > 0 => (p, b.result()) }
+    }.partitionBy(new HashPartitioner(parts)).mapPartitionsWithIndex { (p, it) =>
+      val (lo, hi) = (blockStart(p, parts, n), blockStart(p + 1, parts, n))
+      val (offsets, srcs) = DirectedAdjacency.csr(Array.concat(it.map(_._2).toSeq: _*), hi - lo)
       Iterator(CsrBlock(lo, hi, offsets, srcs))
-    }, preservesPartitioning = true).persist(StorageLevel.MEMORY_AND_DISK)
-  }
+    }.persist(StorageLevel.MEMORY_AND_DISK)
 
   /** Shared builder body: vid bound check, present bitmap, pack, edge
     * count. One implementation — the three public builders differ only in
@@ -175,8 +174,7 @@ object CsrGraph {
     * e.g. a window view over a dead time range) packs to a valid
     * zero-vertex CsrGraph. Dense vids (node count = max vid + 1, every
     * minted graph) need no bitmap collect. */
-  private def build(g: LinkGraph, parts: Int,
-                    pairsDf: org.apache.spark.sql.DataFrame): CsrGraph = {
+  private def build(g: LinkGraph, parts: Int, pairs: DataFrame): CsrGraph = {
     val spark = g.spark
     import spark.implicits._
     val f = g.nodeFacts
@@ -189,7 +187,6 @@ object CsrGraph {
         g.nodes.select("vid").as[Long].collect().foreach(v => a(v.toInt) = true)
         a
       }
-    val pairs = pairsDf.as[(Int, Int)].rdd
     val blocks = pack(pairs, n, parts)
     val m = blocks.map(_.srcs.length.toLong).fold(0L)(_ + _)
     new CsrGraph(n, f.count.toInt, present, blocks, m)
@@ -197,18 +194,18 @@ object CsrGraph {
 
   /** Directed gather CSR (in-neighbours per dst) from deduped edges. */
   def fromLinkGraph(g: LinkGraph, parts: Int): CsrGraph =
-    build(g, parts, g.dedupEdges.select(col("dst").cast("int"), col("src").cast("int")))
+    build(g, parts, g.dedupEdges.select(col("dst"), col("src")))
 
   /** Reversed gather CSR: out-neighbours per src (= in-neighbours of the
     * reversed graph). Used by gathers that pull along out-edges (HITS
     * hub-from-auth). */
   def reversedFromLinkGraph(g: LinkGraph, parts: Int): CsrGraph =
-    build(g, parts, g.dedupEdges.select(col("src").cast("int"), col("dst").cast("int")))
+    build(g, parts, g.dedupEdges.select(col("src"), col("dst")))
 
   /** Undirected gather CSR (distinct BOTH-neighbours per vertex). Built
     * once per graph by LinkGraph.undirectedCsr. */
   private[graph] def undirectedFromLinkGraph(g: LinkGraph, parts: Int): CsrGraph =
-    build(g, parts, g.undirectedPairs.select(col("a").cast("int"), col("b").cast("int")))
+    build(g, parts, g.undirectedPairs.select(col("a"), col("b")))
 
   /** Per-source distinct out-degree as a dense array (gather blocks count
     * each (dst, src) once, so counting srcs across blocks gives the

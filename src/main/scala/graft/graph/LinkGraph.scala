@@ -259,17 +259,16 @@ class LinkGraph(
     undirectedCache
   }
 
-  /** Max vid, node count and total name bytes in one pass over the node
-    * table — the facts every CSR/DF dispatch reads (CsrGraph.useCsr).
-    * An RDD fold, because a global DataFrame aggregate runs as two jobs
-    * (map stage, then final stage) under AQE. Computed once per graph;
-    * reset by unpersist(). */
+  /** Max vid and node count in one pass over the node table's `vid`
+    * column — the facts every CSR/DF dispatch (CsrGraph.useCsr), CSR build
+    * and DriverGuard bound reads. An RDD fold, because a global DataFrame
+    * aggregate runs as two jobs (map stage, then final stage) under AQE.
+    * Computed once per graph; reset by unpersist(). */
   def nodeFacts: NodeFacts = synchronized {
     if (factsCache == null)
-      factsCache = nodes.select(col("vid"), coalesce(length(col("name")), lit(0)).cast("long")).rdd
-        .aggregate(NodeFacts(-1L, 0L, 0L))(
-          (f, r) => NodeFacts(math.max(f.maxVid, r.getLong(0)), f.count + 1, f.nameBytes + r.getLong(1)),
-          (a, b) => NodeFacts(math.max(a.maxVid, b.maxVid), a.count + b.count, a.nameBytes + b.nameBytes))
+      factsCache = nodes.select(col("vid")).rdd.aggregate(NodeFacts(-1L, 0L))(
+        (f, r) => NodeFacts(math.max(f.maxVid, r.getLong(0)), f.count + 1),
+        (a, b) => NodeFacts(math.max(a.maxVid, b.maxVid), a.count + b.count))
     factsCache
   }
 
@@ -350,7 +349,7 @@ class LinkGraph(
 }
 
 /** Node-table facts: `maxVid` is -1 when no node has a vid ≥ 0. */
-final case class NodeFacts(maxVid: Long, count: Long, nameBytes: Long)
+final case class NodeFacts(maxVid: Long, count: Long)
 
 object LinkGraph {
 

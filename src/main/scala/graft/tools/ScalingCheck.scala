@@ -60,8 +60,7 @@ object ScalingCheck {
     }.toDF("src", "dst")
     val best: Seq[Double] =
       if (mode == "csr") {
-        val pairs = edges.select($"dst".cast("int"), $"src".cast("int")).as[(Int, Int)].rdd
-        val csr = graft.graph.CsrGraph.pack(pairs, nodes.toInt, cores)
+        val csr = graft.graph.CsrGraph.pack(edges.select($"dst", $"src"), nodes.toInt, cores)
         val m = csr.map(_.srcs.length.toLong).fold(0L)(_ + _)
         val present = Array.fill(nodes.toInt)(true)
         val cg = new graft.graph.CsrGraph(nodes.toInt, nodes.toInt, present, csr, m)

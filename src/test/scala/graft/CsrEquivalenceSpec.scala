@@ -1,9 +1,9 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.graph.LinkGraph
+import graft.graph.{CsrGraph, LinkGraph}
 import graft.io.Corpus
-import graft.algo.{PageRank, Wcc}
+import graft.algo.{Hits, Lpa, PageRank, Wcc}
 
 /** The CSR fast path and the shuffle-based DataFrame supersteps must agree:
   * same semantics, different physical plan (SURVEY §4.3). */
@@ -11,6 +11,18 @@ class CsrEquivalenceSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   lazy val g: LinkGraph = LinkGraph.fromPages(Corpus.tiny(spark).toDF()).cache()
+
+  /** A numeric-named subgraph view with a vid gap (node "5" dropped, as
+    * TriangleSpec builds one) and a second component. */
+  lazy val gap: LinkGraph = {
+    import spark.implicits._
+    val links = (1L until 60L).flatMap(i => Corpus.linkTargets(i, 3, 7L).map(j => (i, j, i)))
+    val full = LinkGraph.fromNumericEdgeList(spark, links ++ Seq((100L, 101L, 0L), (102L, 101L, 1L)))
+    full.subgraph(full.nodes.filter($"name" =!= "5").select($"vid"))
+  }
+
+  def byName(df: org.apache.spark.sql.DataFrame, cols: String*): Map[String, Seq[Any]] =
+    df.collect().map(r => r.getAs[String]("name") -> cols.map(r.getAs[Any])).toMap
 
   test("pagerank: csr == df to 1e-12 on the tiny corpus") {
     val cfg = PageRank.Config(iterCount = 20)
@@ -62,5 +74,35 @@ class CsrEquivalenceSpec extends AnyFunSuite {
     val comp = Wcc.run(wg.window(0L, 2L), mode = "df").collect()
       .map(r => r.getAs[String]("name") -> r.getAs[String]("component")).toMap
     assert(comp == Map("1" -> "1", "2" -> "1"))
+  }
+
+  test("vid gap: csr == df for pagerank, hits, wcc and sync-lpa") {
+    val f = gap.nodeFacts
+    assert(f.count < f.maxVid + 1, "the subgraph has no vid gap")
+    def close(a: Map[String, Seq[Any]], b: Map[String, Seq[Any]], what: String): Unit = {
+      assert(a.keySet == b.keySet, what)
+      for ((k, vs) <- a; (x, y) <- vs.zip(b(k)))
+        assert(math.abs(x.asInstanceOf[Double] - y.asInstanceOf[Double]) < 1e-12, s"$what $k")
+    }
+    val cfg = PageRank.Config(iterCount = 20)
+    close(byName(PageRank.run(gap, cfg.copy(mode = "csr")), "score"),
+      byName(PageRank.run(gap, cfg.copy(mode = "df")), "score"), "pagerank")
+    close(byName(Hits.run(gap, 20, tol = 0.0, mode = "csr"), "hub", "auth"),
+      byName(Hits.run(gap, 20, tol = 0.0, mode = "df"), "hub", "auth"), "hits")
+    val wcc = byName(Wcc.run(gap, mode = "csr"), "component_vid", "component")
+    assert(wcc == byName(Wcc.run(gap, mode = "df"), "component_vid", "component"))
+    assert(wcc("101") == wcc("102") && wcc("101") != wcc("1"))
+    assert(byName(Lpa.runSync(gap, mode = "csr"), "label") ==
+      byName(Lpa.runSync(gap, mode = "df"), "label"))
+  }
+
+  test("every CSR block lists strictly ascending srcs") {
+    for (graph <- Seq(g, gap)) {
+      val directed = CsrGraph.fromLinkGraph(graph, 4)
+      for ((what, csr) <- Seq("undirectedCsr" -> graph.undirectedCsr, "fromLinkGraph" -> directed);
+           b <- csr.blocks.collect(); i <- 0 until b.hi - b.lo; k <- b.offsets(i) + 1 until b.offsets(i + 1))
+        assert(b.srcs(k - 1) < b.srcs(k), s"$what: the list of vertex ${b.lo + i} is not ascending")
+      directed.unpersist()
+    }
   }
 }

@@ -437,4 +437,27 @@ class PlanSpec extends AnyFunSuite {
     // codegen'd stages show as "*(n)" markers in the executed plan
     assert(plan(q).contains("*("), plan(q))
   }
+
+  test("CSR results are built on the executors: no LocalRelation, the plan reads the node table") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import graft.algo.{Hits, Lpa, PageRank, Wcc}
+    val g = LinkGraph.fromPages(graft.io.Corpus.tiny(spark).toDF()).cache()
+    // CSR sync-LPA needs numeric names: the same graph, named by vid
+    val numeric = new LinkGraph(g.edges,
+      g.nodes.select(col("vid"), col("vid").cast("string").as("name")).cache(), namesAreNumeric = true)
+    def nodeTable(h: LinkGraph) = h.nodes.queryExecution.optimizedPlan
+      .collectFirst { case r: InMemoryRelation => r.cacheBuilder }.get
+    for ((name, h, res) <- Seq(
+        ("pagerank", g, PageRank.run(g, PageRank.Config(mode = "csr"))),
+        ("wcc", g, Wcc.run(g, mode = "csr")),
+        ("hits", g, Hits.run(g, mode = "csr")),
+        ("sync-lpa", numeric, Lpa.runSync(numeric, mode = "csr")))) {
+      val pl = res.queryExecution.optimizedPlan
+      assert(pl.collect { case l: LocalRelation => l }.isEmpty, s"$name result holds driver rows:\n$pl")
+      assert(pl.collect { case r: InMemoryRelation if r.cacheBuilder eq nodeTable(h) => r }.nonEmpty,
+        s"$name result does not read the node table:\n$pl")
+      assert(res.count() == h.nodeFacts.count, name)
+    }
+    numeric.unpersist(); g.unpersist()
+  }
 }
