@@ -1,10 +1,9 @@
 package graft.algo
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import graft.graph.{CsrGraph, LinkGraph}
-import graft.bsp.{CsrSuperstep, RunContext, Superstep}
+import graft.bsp.{CsrSuperstep, RunContext, StatePlan, Superstep}
 
 /** HITS hubs & authorities with the reference's semantics
   * (raphtory/src/algorithms/centrality/hits.rs:51-160):
@@ -24,7 +23,7 @@ import graft.bsp.{CsrSuperstep, RunContext, Superstep}
   *
   * Physical shapes: the DF path folds BOTH message directions into ONE
   * tagged scatter table, so a superstep is a single shuffle
-  * (groupBy(to, kind)) and two jobs on the DataFrame driver;
+  * (groupBy(to)) and one job on the DataFrame driver;
   * the CSR fast path (auto below 32M ids, like PageRank) gathers both
   * directions in one broadcast job per superstep. */
 object Hits {
@@ -86,47 +85,56 @@ object Hits {
   /** The DataFrame engine on `Superstep.dataFrame`, over one static
     * tagged scatter table keyed on `from`: kind 0 carries hub(u) ->
     * recv_hub(v) along u→v, kind 1 carries auth(v) -> recv_auth(u) against
-    * it — one shuffle per superstep. The normalisation needs the totals
-    * before the delta, so a superstep is two jobs: the step persists the
-    * joined (vid, hub, auth, rh, ra) frame and takes its totals (job 1),
-    * and the driver's checkpoint fused with the max-|Δ| aggregate is job 2.
-    * Each step releases the previous step's joined frame. */
-  private def runDf(g: LinkGraph, iterCount: Int, tol: Double, ctx: RunContext): DataFrame = {
-    val spark = g.spark
-    import spark.implicits._
+    * it — one shuffle and one job per superstep. The normalisation totals
+    * are step params: Σ_v recv_hub(v) = Σ_u hub(u)·outdeg(u) and Σ_u
+    * recv_auth(u) = Σ_v auth(v)·indeg(v), so the state carries each node's
+    * distinct out- and in-degree and the previous step's job (the init's,
+    * for the first step) sums the totals with its max-|Δ| aggregate. */
+  private def runDf(g: LinkGraph, iterCount: Int, tol: Double, ctx: RunContext): DataFrame =
+    Superstep.withStatic(scatterRows(g), "from")(
+      Superstep.dataFrame("hits", ctx, _)(dfProgram(g, iterCount, tol)))
+      .join(g.nodes, Seq("vid")).select(col("vid"), col("name"), col("hub"), col("auth"))
+
+  /** The tagged scatter rows (from, to, kind) over the distinct edges. */
+  private[graft] def scatterRows(g: LinkGraph): DataFrame = {
     val e = g.dedupEdges
-    val scatter = e.select($"src".as("from"), $"dst".as("to"), lit(0).as("kind"))
-      .union(e.select($"dst".as("from"), $"src".as("to"), lit(1).as("kind")))
-    var held = Option.empty[DataFrame]
-    val state = Superstep.withStatic(scatter, "from")(Superstep.dataFrame("hits", ctx, _) { (scatter, _) =>
-      Superstep.Dense(
-        init = g.nodes.select($"vid", lit(1.0).as("hub"), lit(1.0).as("auth")),
-        maxSteps = iterCount,
-        step = { (state, _, _) =>
-          val recv = state.hint("shuffle_hash").join(scatter, state("vid") === $"from")
-            .groupBy($"to".as("rvid")).agg(
-              sum(when($"kind" === 0, $"hub").otherwise(0.0)).as("rh"),
-              sum(when($"kind" === 1, $"auth").otherwise(0.0)).as("ra"))
-          val joined = state.join(recv, state("vid") === $"rvid", "left")
-            .select($"vid", $"hub", $"auth",
-              coalesce($"rh", lit(0.0)).as("rh"), coalesce($"ra", lit(0.0)).as("ra"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-          val tot = joined.agg(sum($"rh"), sum($"ra")).head()
-          held.foreach(_.unpersist())
-          held = Some(joined)
-          val totH = if (tot.isNullAt(0)) 0.0 else tot.getDouble(0)
-          val totA = if (tot.isNullAt(1)) 0.0 else tot.getDouble(1)
-          val hubE = if (totA == 0.0) lit(0.0) else $"ra" / totA
-          val authE = if (totH == 0.0) lit(0.0) else $"rh" / totH
-          joined.select($"vid", hubE.as("hub"), authE.as("auth"),
-            abs($"hub" - hubE).as("dh"), abs($"auth" - authE).as("da"))
-        },
-        aggs = Seq(greatest(max($"dh"), max($"da")), max($"dh"), max($"da")),
-        // tol = 0 disables early stopping
-        halt = (r, _) => tol > 0 && r.getDouble(1) <= tol && r.getDouble(2) <= tol,
-        flags = Seq("dh", "da"))
-    })
-    held.foreach(_.unpersist())
-    state.join(g.nodes, Seq("vid")).select($"vid", $"name", $"hub", $"auth")
+    e.select(col("src").as("from"), col("dst").as("to"), lit(0).as("kind"))
+      .union(e.select(col("dst").as("from"), col("src").as("to"), lit(1).as("kind")))
+  }
+
+  /** The DataFrame program over the static scatter table. */
+  private[graft] def dfProgram(g: LinkGraph, iterCount: Int, tol: Double)(
+      scatter: DataFrame, m: Long): Superstep.Dense = {
+    val totH = new StatePlan.Param
+    val totA = new StatePlan.Param
+    def orZero(r: Row, i: Int) = if (r.isNullAt(i)) 0.0 else r.getDouble(i)
+    // the scatter table is keyed on `from`: its kind-0 rows are a node's
+    // out-edges, its kind-1 rows its in-edges
+    val deg = scatter.groupBy(col("from")).agg(
+      sum(when(col("kind") === 0, 1L).otherwise(0L)).as("out_deg"),
+      sum(when(col("kind") === 1, 1L).otherwise(0L)).as("in_deg"))
+    Superstep.Dense(
+      init = g.nodes.select(col("vid")).join(deg.hint("shuffle_hash"), col("vid") === col("from"), "left")
+        .select(col("vid"), lit(1.0).as("hub"), lit(1.0).as("auth"),
+          coalesce(col("out_deg"), lit(0L)).as("out_deg"), coalesce(col("in_deg"), lit(0L)).as("in_deg")),
+      maxSteps = iterCount,
+      step = { state =>
+        val recv = state.hint("shuffle_hash").join(scatter, state("vid") === scatter("from"))
+          .groupBy(col("to").as("rvid")).agg(
+            sum(when(col("kind") === 0, col("hub")).otherwise(0.0)).as("rh"),
+            sum(when(col("kind") === 1, col("auth")).otherwise(0.0)).as("ra"))
+        def norm(recv: String, tot: StatePlan.Param) =
+          when(tot.col === 0.0, lit(0.0)).otherwise(coalesce(col(recv), lit(0.0)) / tot.col)
+        state.join(recv.hint("shuffle_hash"), state("vid") === recv("rvid"), "left")
+          .select(state("vid"), norm("ra", totA).as("hub"), norm("rh", totH).as("auth"),
+            state("out_deg"), state("in_deg"),
+            abs(state("hub") - norm("ra", totA)).as("dh"), abs(state("auth") - norm("rh", totH)).as("da"))
+      },
+      aggs = Seq(greatest(max(col("dh")), max(col("da"))), max(col("dh")), max(col("da"))),
+      // tol = 0 disables early stopping
+      halt = (r, _) => tol > 0 && r.getDouble(1) <= tol && r.getDouble(2) <= tol,
+      flags = Seq("dh", "da"),
+      carry = Seq(sum(col("hub") * col("out_deg")), sum(col("auth") * col("in_deg"))),
+      bind = (c, _) => { totH.set(orZero(c, 0)); totA.set(orZero(c, 1)) })
   }
 }

@@ -1,9 +1,9 @@
 package graft.algo
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.graph.{CsrGraph, LinkGraph}
-import graft.bsp.{CsrSuperstep, RunContext, Superstep}
+import graft.bsp.{CsrSuperstep, RunContext, StatePlan, Superstep}
 import graft.rng.Rand08
 
 /** Community label propagation with the reference's semantics
@@ -179,27 +179,38 @@ object Lpa {
   }
 
   private def runSyncDf(g: LinkGraph, maxSweeps: Int, ctx: RunContext): DataFrame = {
+    Superstep.dataFrame("lpa", ctx, g.pairTable)(dfProgram(g, maxSweeps))
+      .join(g.nodes, Seq("vid")).select(col("vid"), col("name"), col("label"))
+  }
+
+  /** One colour phase with the colour fixed. */
+  private[graft] def lpaPhase(state: DataFrame, pairs: DataFrame, color: Int,
+                              numericNames: Boolean): DataFrame =
+    lpaPhase(state, pairs, lit(color), numericNames)
+
+  /** The DataFrame program: one colour phase per superstep, the colour a
+    * step param, so both colours run one compiled plan. */
+  private[graft] def dfProgram(g: LinkGraph, maxSweeps: Int)(pairs: DataFrame, m: Long): Superstep.Dense = {
     val halt = twoQuietPhases()
-    // label ordering key: numeric GIDs by value, strings lexicographically
-    val state = Superstep.dataFrame("lpa", ctx, g.pairTable) { (pairs, _) =>
-      Superstep.Dense(
-        init = g.nodes.select(col("vid"), col("name").as("label")),
-        maxSteps = 2L * maxSweeps,
-        // phases count from 1 on this engine: colour = (phase - 1) % 2
-        step = (state, phase, _) => lpaPhase(state, pairs, (phase - 1) % 2, g.namesAreNumeric),
-        aggs = Seq(coalesce(sum(when(col("changed"), 1L).otherwise(0L)), lit(0L))),
-        halt = (r, _) => halt(r.getLong(0)),
-        flags = Seq("changed"))
-    }
-    state.join(g.nodes, Seq("vid")).select(col("vid"), col("name"), col("label"))
+    val colour = new StatePlan.Param
+    Superstep.Dense(
+      init = g.nodes.select(col("vid"), col("name").as("label")),
+      maxSteps = 2L * maxSweeps,
+      step = lpaPhase(_, pairs, colour.col.cast("long"), g.namesAreNumeric),
+      aggs = Seq(coalesce(sum(when(col("changed"), 1L).otherwise(0L)), lit(0L))),
+      halt = (r, _) => halt(r.getLong(0)),
+      flags = Seq("changed"),
+      // phases count from 1 on this engine: colour = (phase - 1) % 2
+      bind = (_, phase) => colour.set((phase - 1) % 2))
   }
 
   /** One red/black colour phase as a DataFrame program (PlanSpec audits
     * this fragment: both state joins SHJ, no window, sorts only above
     * aggregated data — see the majority-aggregation note below). `state`
     * is (vid, label) hash-partitioned on vid; `pairs` the undirected
-    * (a, b) neighbour table partitioned on a. */
-  private[graft] def lpaPhase(state: DataFrame, pairs: DataFrame, color: Int,
+    * (a, b) neighbour table partitioned on a; `color` the active colour
+    * (the compiled loop's step param). */
+  private[graft] def lpaPhase(state: DataFrame, pairs: DataFrame, color: Column,
                               numericNames: Boolean): DataFrame = {
     import org.apache.spark.sql.functions.{col => c}
     // gather only into the active colour class — the other half of the

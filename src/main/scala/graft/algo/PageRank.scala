@@ -1,9 +1,9 @@
 package graft.algo
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.graph.{CsrGraph, LinkGraph}
-import graft.bsp.{CsrSuperstep, RunContext, Superstep}
+import graft.bsp.{CsrSuperstep, RunContext, StatePlan, Superstep}
 
 /** Unweighted PageRank with the exact semantics of the reference
   * (raphtory/src/algorithms/centrality/pagerank.rs:55-183):
@@ -19,8 +19,10 @@ import graft.bsp.{CsrSuperstep, RunContext, Superstep}
   * Spark shape (SURVEY §4.3): state and edges are co-hash-partitioned on the
   * vertex id, so each superstep costs exactly ONE shuffle (the
   * groupBy(dst) message aggregation); the scatter join and the state-update
-  * join reuse the existing partitioning. Lineage is cut every superstep via
-  * localCheckpoint (or the run context's reliable checkpoint).
+  * join reuse the existing partitioning. The step is planned once per run
+  * and re-executed every superstep (bsp.Superstep.dataFrame); lineage is
+  * cut every superstep via localCheckpoint (or the run context's durable
+  * checkpoint).
   */
 object PageRank {
 
@@ -94,25 +96,29 @@ object PageRank {
   }
 
   /** Initial DataFrame state (vid, out_degree, score = 1/n) over the
-    * src-partitioned deduped edge table. */
+    * src-partitioned deduped edge table. The degree side is aggregated in
+    * place and joined shuffled-hash, so the init is one job with the node
+    * ids' shuffle, already the state's key partitioning (a broadcast would
+    * be a job of its own). */
   private[graft] def initState(nodes: DataFrame, edges: DataFrame, n: Long): DataFrame = {
     val outDeg = edges.groupBy(col("src")).agg(count("*").as("out_degree"))
     nodes.select(col("vid"))
-      .join(outDeg, col("vid") === col("src"), "left")
+      .join(outDeg.hint("shuffle_hash"), col("vid") === col("src"), "left")
       .select(col("vid"), coalesce(col("out_degree"), lit(0L)).as("out_degree"),
         lit(1.0 / n).as("score"))
   }
 
   /** One DataFrame superstep (PlanSpec audits this fragment): scatter
     * score/out_degree along the cached edge table, ONE shuffle to
-    * aggregate per dst, apply; `sinkContrib` is the dangling-mass term.
-    * Returns (vid, out_degree, score, prev_score).
+    * aggregate per dst, apply; `sinkContrib` is the dangling-mass term (a
+    * step param in the compiled loop). Returns (vid, out_degree, score,
+    * prev_score).
     *
     * shuffle_hash hints: post-checkpoint state has unknown stats, so Spark
     * would fall back to SMJ and re-sort the m-row cached edge table every
     * superstep; SHJ builds the n-row state map instead. */
   private[graft] def superstep(state: DataFrame, edges: DataFrame, damping: Double,
-                               teleport: Double, sinkContrib: Double): DataFrame = {
+                               teleport: Double, sinkContrib: Column): DataFrame = {
     val contrib = state.hint("shuffle_hash").join(edges, state("vid") === edges("src"))
       .groupBy(col("dst")).agg(sum(col("score") / col("out_degree")).as("gather"))
     state.join(contrib.hint("shuffle_hash"), state("vid") === contrib("dst"), "left")
@@ -121,34 +127,37 @@ object PageRank {
         state("score").as("prev_score"))
   }
 
-  /** Shuffle-based supersteps — the arbitrary-scale path. State and edges
-    * are co-hash-partitioned on the vertex id; the per-step aggregate is
-    * (delta, next sink mass). */
-  private def runDf(g: LinkGraph, cfg: Config, ctx: RunContext): DataFrame = {
+  /** One superstep with the dangling-mass term fixed. */
+  private[graft] def superstep(state: DataFrame, edges: DataFrame, damping: Double,
+                               teleport: Double, sinkContrib: Double): DataFrame =
+    superstep(state, edges, damping, teleport, lit(sinkContrib))
+
+  /** The DataFrame program (PlanSpec and tools.PlanCheck compile it as the
+    * driver does): state and edges are co-hash-partitioned on the vertex
+    * id; the per-step aggregate is the delta, and the carried sink mass
+    * binds the next step's dangling-mass param. The first step's sink mass
+    * comes from the job that materialises the init (or restored) state. */
+  private[graft] def dfProgram(g: LinkGraph, cfg: Config)(edges: DataFrame, m: Long): Superstep.Dense = {
     val n = g.nodeFacts.count
     val teleport = (1.0 - cfg.damping) / n
     val factor = cfg.damping / n
     val diff = col("prev_score") - col("score")
-    val delta =
-      if (cfg.useL2Norm) sqrt(sum(pow(diff, 2.0))) else sum(abs(diff))
-    val sink = sum(when(col("out_degree") === 0, col("score")).otherwise(lit(0.0)))
-    def orZero(r: Row, i: Int) = if (r.isNullAt(i)) 0.0 else r.getDouble(i)
-
-    val state = Superstep.dataFrame("pagerank", ctx, g.dedupTable) { (edges, _) =>
-      Superstep.Dense(
-        init = initState(g.nodes, edges, n),
-        maxSteps = cfg.iterCount,
-        // the first step of a run (or resume) reads the sink mass off the
-        // state; later ones take it from the previous step's aggregate
-        step = (state, _, last) => {
-          val sinkMass = last.fold(orZero(state.filter(col("out_degree") === 0)
-            .agg(sum(col("score"))).head(), 0))(orZero(_, 1))
-          superstep(state, edges, cfg.damping, teleport, factor * sinkMass)
-        },
-        aggs = Seq(delta, sink),
-        halt = (r, _) => orZero(r, 0) <= cfg.tol * n,
-        flags = Seq("prev_score"))
-    }
-    state.join(g.nodes, Seq("vid")).select(col("vid"), col("name"), col("score"))
+    val sinkContrib = new StatePlan.Param
+    Superstep.Dense(
+      init = initState(g.nodes, edges, n),
+      maxSteps = cfg.iterCount,
+      step = superstep(_, edges, cfg.damping, teleport, sinkContrib.col),
+      aggs = Seq(if (cfg.useL2Norm) sqrt(sum(pow(diff, 2.0))) else sum(abs(diff))),
+      halt = (r, _) => orZero(r, 0) <= cfg.tol * n,
+      flags = Seq("prev_score"),
+      carry = Seq(sum(when(col("out_degree") === 0, col("score")).otherwise(lit(0.0)))),
+      bind = (c, _) => sinkContrib.set(factor * orZero(c, 0)))
   }
+
+  private def orZero(r: Row, i: Int) = if (r.isNullAt(i)) 0.0 else r.getDouble(i)
+
+  /** Shuffle-based supersteps — the arbitrary-scale path. */
+  private def runDf(g: LinkGraph, cfg: Config, ctx: RunContext): DataFrame =
+    Superstep.dataFrame("pagerank", ctx, g.dedupTable)(dfProgram(g, cfg))
+      .join(g.nodes, Seq("vid")).select(col("vid"), col("name"), col("score"))
 }

@@ -60,6 +60,7 @@ object Pathing {
       val named = reached.join(g.nodes, Seq("vid"))
         .select($"vid", $"name", $"dist", $"parent").localCheckpoint(false)
       val maxRow = named.agg(max($"dist")).head() // materialises the checkpoint
+      Superstep.release(reached)
       val maxDist = if (maxRow.isNullAt(0)) -1L else maxRow.getLong(0)
       val root = named.filter($"dist" === 0L).select($"vid", array($"name").as("path"))
       // lazy: each level's checkpoint materialises inside the next
@@ -85,15 +86,35 @@ object Pathing {
   /** Level-synchronous BFS on the superstep driver (sssp and
     * Components.closure): `init` is the visited set and first frontier,
     * level l is `step(frontier, visited, l)`, checkpointed eagerly or
-    * lazily; an empty level halts. Returns the visited set. */
+    * lazily; an empty level halts. Returns the visited set.
+    *
+    * Each level's count materialises its frontier and the visited set it
+    * read, after which nothing reads the previous visited set nor this
+    * level's input frontier: both are released then, so a run leaves only
+    * the returned set (and `init`, which the caller owns when it is the
+    * result) persisted. */
   private[graft] def bfs(algo: String, m: Long, maxLevel: Long, init: DataFrame, eager: Boolean)(
-      step: (DataFrame, DataFrame, Int) => DataFrame): DataFrame =
-    Superstep.loop(algo, RunContext.none, m, 1, maxLevel, (init, init)) { case ((visited, frontier), l) =>
-      val next = step(frontier, visited, l).localCheckpoint(eager)
-      val n = next.count()
-      Superstep.Next(if (n == 0) (visited, next) else (visited.union(next).localCheckpoint(eager), next),
-        n.toDouble, n == 0)
-    }._1
+      step: (DataFrame, DataFrame, Int) => DataFrame): DataFrame = {
+    var replaced = Option.empty[DataFrame] // read only by the visited set not yet materialised
+    val (visited, frontier) =
+      Superstep.loop(algo, RunContext.none, m, 1, maxLevel, (init, init)) { case ((visited, frontier), l) =>
+        val next = step(frontier, visited, l).localCheckpoint(eager)
+        val n = next.count()
+        replaced.foreach(Superstep.release)
+        if (frontier ne visited) Superstep.release(frontier)
+        if (n == 0) {
+          replaced = None
+          Superstep.release(next)
+          Superstep.Next((visited, next), 0.0, halt = true)
+        } else {
+          replaced = Some(visited)
+          Superstep.Next((visited.union(next).localCheckpoint(eager), next), n.toDouble, halt = false)
+        }
+      }
+    // stopped by maxLevel: an eager last union no longer reads its inputs
+    if (eager) (replaced.toSeq :+ frontier).filter(_ ne visited).foreach(Superstep.release)
+    visited
+  }
 
   /** The frontier (sparse BFS) step: frontier ⋈ edges → least-vid
     * parent per target (a hash aggregate, not a window) → anti-join with

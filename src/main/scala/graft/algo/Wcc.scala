@@ -73,25 +73,28 @@ object Wcc {
     * neighbour key), already final when there are no pairs, so then no
     * superstep runs. Returns the (key, `label`) state. */
   private[graft] def hashMin(algo: String, ids: DataFrame, label: String, pairs: Superstep.Static,
-                             maxSteps: Long, ctx: RunContext): DataFrame = {
-    Superstep.dataFrame(algo, ctx, pairs) { (pairs, m) =>
-      Superstep.Dense(
-        init = hashMinInit(ids, pairs, label),
-        maxSteps = if (m == 0) 0 else maxSteps,
-        step = (state, _, _) => hashMinStep(state, pairs),
-        // sum() over an EMPTY state is NULL (ids can be empty while pairs
-        // reference absent ids): coalesce keeps the exit exact
-        aggs = Seq(coalesce(sum(when(col("changed"), 1L).otherwise(0L)), lit(0L))),
-        halt = (r, _) => r.getLong(0) == 0,
-        flags = Seq("changed"))
-    }
-  }
+                             maxSteps: Long, ctx: RunContext): DataFrame =
+    Superstep.dataFrame(algo, ctx, pairs)(hashMinProgram(ids, label, maxSteps))
 
-  /** HashMin init state: (key, `label` = least(key, min neighbour key)). */
+  /** The HashMin DataFrame program over the (a, b) pair table. */
+  private[graft] def hashMinProgram(ids: DataFrame, label: String, maxSteps: Long)(
+      pairs: DataFrame, m: Long): Superstep.Dense =
+    Superstep.Dense(
+      init = hashMinInit(ids, pairs, label),
+      maxSteps = if (m == 0) 0 else maxSteps,
+      step = hashMinStep(_, pairs),
+      // sum() over an EMPTY state is NULL (ids can be empty while pairs
+      // reference absent ids): coalesce keeps the exit exact
+      aggs = Seq(coalesce(sum(when(col("changed"), 1L).otherwise(0L)), lit(0L))),
+      halt = (r, _) => r.getLong(0) == 0,
+      flags = Seq("changed"))
+
+  /** HashMin init state: (key, `label` = least(key, min neighbour key));
+    * joined shuffled-hash like PageRank's init, so it is one job. */
   private[graft] def hashMinInit(ids: DataFrame, pairs: DataFrame, label: String): DataFrame = {
     val key = ids.columns.head
     val nbrMin = pairs.groupBy(col("a")).agg(min(col("b")).as("nbr_min"))
-    ids.join(nbrMin, col(key) === col("a"), "left")
+    ids.join(nbrMin.hint("shuffle_hash"), col(key) === col("a"), "left")
       .select(col(key), least(col(key), coalesce(col("nbr_min"), col(key))).as(label))
   }
 

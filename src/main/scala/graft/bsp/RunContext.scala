@@ -24,7 +24,10 @@ case class StepStat(
 trait RunContext {
   /** Step to resume from (0 = fresh run). */
   def startStep: Int
-  /** Either the restored step-`startStep` state or the materialised init. */
+  /** Either the restored step-`startStep` state or the init, checkpointed
+    * with the key partitioning of its input; lazily, so the loop's first
+    * job (the first step's, or the one that takes the aggregates the first
+    * step needs) materialises it. */
   def restoreOrInit(init: DataFrame): DataFrame
   /** Persist the new state and cut its lineage; returns the state to keep
     * iterating on. Must preserve partitioning. */
@@ -40,15 +43,22 @@ trait RunContext {
 
 /** In-memory run context: localCheckpoint (executor-memory snapshot,
   * lineage truncated, hash partitioning preserved) + in-process metrics.
-  * Per-superstep checkpoints are LAZY: every superstep loop follows the
+  * Checkpoints are LAZY, the init's too: every superstep loop follows the
   * checkpoint with a full-scan aggregate action (delta / convergence
   * check), which materialises the snapshot in the SAME Spark job — one job
   * per superstep instead of two, halving the fixed scheduling+driver cost
-  * that dominates small supersteps at high core counts. */
+  * that dominates small supersteps at high core counts.
+  *
+  * `Superstep.dataFrame` hands `checkpoint` the output of a step plan it
+  * compiled once: a frame over the plan's RDD (a LogicalRDD carrying the
+  * key partitioning), so planning the checkpoint is a scan of an existing
+  * RDD. The returned frame's RDD is the state leaf the next step's
+  * compiled plan reads; each step's plan copy has fresh exchanges, so a
+  * step never reads an earlier step's shuffle output. */
 class LocalRunContext extends RunContext {
   private val buf = ArrayBuffer.empty[StepStat]
   override def startStep: Int = 0
-  override def restoreOrInit(init: DataFrame): DataFrame = init.localCheckpoint(true)
+  override def restoreOrInit(init: DataFrame): DataFrame = init.localCheckpoint(false)
   override def checkpoint(state: DataFrame, step: Int): DataFrame = state.localCheckpoint(false)
   override def record(stat: StepStat): Unit = buf.synchronized { buf += stat }
   override def stats: Seq[StepStat] = buf.toSeq

@@ -1,6 +1,8 @@
 package graft.bsp
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
 
@@ -10,8 +12,9 @@ import org.apache.spark.storage.StorageLevel
   * and a halting rule; the driver owns the loop, the step numbering, the
   * `StepStat` timing + `ctx.record`, and the `ctx.finish()` barrier. The
   * DataFrame variant additionally owns the AQE scoping, `restoreOrInit`,
-  * and the lazy checkpoint fused with the convergence aggregate into one
-  * job per superstep. */
+  * the step and aggregate plans (built once per run and re-executed every
+  * superstep), and the lazy checkpoint fused with the convergence
+  * aggregate into one job per superstep. */
 object Superstep {
 
   /** One step's outcome: the next state, the convergence delta recorded in
@@ -23,20 +26,28 @@ object Superstep {
     * @param init     state before the first step, key column first (the
     *                 driver hash-partitions on it)
     * @param maxSteps last step number to run (steps count from 1)
-    * @param step     (state, step, previous step's aggregate row — None on
-    *                 the first step of a run or resume) => next state,
-    *                 which may carry `flags` columns for the aggregates
+    * @param step     the step over a state frame, built ONCE per run: the
+    *                 next state, the state's columns first, then any `flags`
+    *                 columns for the aggregates; per-step scalars are
+    *                 `StatePlan.Param` columns
     * @param aggs     convergence aggregates over the next state; the first
     *                 is the delta recorded in the step's StepStat
-    * @param halt     (aggregate row, step) => stop after this step
-    * @param flags    columns dropped from the state after the aggregate */
+    * @param halt     (aggregate row, step) => stop after this step; the row
+    *                 is `aggs` followed by `carry`
+    * @param flags    columns dropped from the state the run returns
+    * @param carry    aggregates over a state that the NEXT step needs: taken
+    *                 with `aggs` in each step's job, and over the restored or
+    *                 init state in the job that materialises it
+    * @param bind     (carry row, step) => set the step's params before it runs */
   final case class Dense(
       init: DataFrame,
       maxSteps: Long,
-      step: (DataFrame, Int, Option[Row]) => DataFrame,
+      step: DataFrame => DataFrame,
       aggs: Seq[Column],
       halt: (Row, Int) => Boolean,
-      flags: Seq[String])
+      flags: Seq[String],
+      carry: Seq[Column] = Nil,
+      bind: (Row, Int) => Unit = (_, _) => ())
 
   /** A static join table (the edges or pairs a loop joins) and its row count. */
   final case class Static(df: DataFrame, rows: Long)
@@ -65,27 +76,68 @@ object Superstep {
     * IterativeConf.withStablePartitioning (AQE off, so the hash
     * partitioning survives the per-step checkpoints). `program` builds the
     * loop from the already-static `table`'s frame and row count; the driver
-    * neither builds, counts nor releases it. Each superstep is ONE Spark
-    * job: the checkpoint is lazy and the convergence aggregate's `head()`
-    * materialises it. Returns the final state (flags dropped), checkpointed. */
+    * neither builds, counts nor releases it.
+    *
+    * The step and its aggregate are planned ONCE per run (`compile`), over
+    * the state `ctx.restoreOrInit` returns; each superstep re-executes the
+    * compiled plans with the state leaf's RDD swapped (`StatePlan.over`),
+    * after `bind` has set the step's params. Each superstep is ONE Spark
+    * job: the step's output goes through the lazy `ctx.checkpoint` and the
+    * aggregate materialises it. Returns the final state (flags dropped),
+    * checkpointed. */
   def dataFrame(algo: String, ctx: RunContext, table: Static)(
       program: (DataFrame, Long) => Dense): DataFrame = {
     val spark = table.df.sparkSession
     IterativeConf.withStablePartitioning(spark) {
-      val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
       val d = program(table.df, table.rows)
-      val init = ctx.restoreOrInit(d.init.repartition(p, col(d.init.columns.head)))
-      var last: Option[Row] = None
-      loop(algo, ctx, table.rows, ctx.startStep + 1, d.maxSteps, init) { (state, step) =>
-        val ck = ctx.checkpoint(d.step(state, step, last), step)
-        val row = ck.agg(d.aggs.head, d.aggs.tail: _*).head()
-        last = Some(row)
-        state.unpersist()
-        Next(ck.drop(d.flags: _*), if (row.isNullAt(0)) 0.0 else row.getAs[Number](0).doubleValue,
-          d.halt(row, step))
+      val init = start(ctx, d)
+      lazy val plans = compile(init, d)
+      // the carry row the next step binds; the first step's comes from the
+      // job that materialises the restored or init state
+      var carry: Row = null
+      val last = loop(algo, ctx, table.rows, ctx.startStep + 1, d.maxSteps, init) { (state, step) =>
+        if (carry == null)
+          carry = if (d.carry.isEmpty) Row.empty else state.agg(d.carry.head, d.carry.tail: _*).head()
+        d.bind(carry, step)
+        val ck = ctx.checkpoint(plans.step.run(StatePlan.rddOf(state)), step)
+        val row = plans.agg.over(StatePlan.rddOf(ck)).executeCollectPublic().head
+        carry = Row.fromSeq(row.toSeq.drop(d.aggs.size))
+        Next(ck, if (row.isNullAt(0)) 0.0 else row.getAs[Number](0).doubleValue, d.halt(row, step))
       }
+      last.drop(d.flags: _*)
     }
   }
+
+  /** The state a run of `d` starts from: the restored state, or the init
+    * hash-partitioned on its key column, checkpointed by `ctx`. */
+  def start(ctx: RunContext, d: Dense): DataFrame = {
+    val p = d.init.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    ctx.restoreOrInit(d.init.repartition(p, col(d.init.columns.head)))
+  }
+
+  /** A program's step and aggregate, each planned once over `state`. */
+  final case class Compiled(step: StatePlan, agg: StatePlan)
+
+  /** Plans `d`'s step over `state` (a checkpointed frame) and its
+    * aggregates (`aggs` then `carry`) over the step's output. The step
+    * must keep the state's columns first and its key partitioning, since
+    * each later step reads the previous output through the same leaf. */
+  def compile(state: DataFrame, d: Dense): Compiled = {
+    val step = new StatePlan(state, d.step)
+    val in = state.queryExecution.logical.asInstanceOf[LogicalRDD]
+    val out = step.plan.output
+    def shape(as: Seq[Attribute]) = as.map(a => a.name -> a.dataType)
+    require(shape(out.take(in.output.size)) == shape(in.output),
+      s"a step must keep its state's columns first: ${shape(in.output)} -> ${shape(out)}")
+    require(StatePlan.samePartitioning(in.outputPartitioning, in.output, step.plan.outputPartitioning, out),
+      s"a step must keep its state's key partitioning: ${in.outputPartitioning} -> ${step.plan.outputPartitioning}")
+    val aggs = d.aggs ++ d.carry
+    Compiled(step, new StatePlan(step.outputLeaf, _.agg(aggs.head, aggs.tail: _*)))
+  }
+
+  /** Drops the executor copy of a checkpointed frame that nothing reads any
+    * more (`Dataset.unpersist` does not reach a checkpoint's RDD). */
+  def release(state: DataFrame): Unit = StatePlan.rddOf(state).unpersist(blocking = false)
 
   /** The loop both engines share: steps `first`, `first + 1`, ... up to
     * `last` inclusive, stopping early when a step halts. Each step is

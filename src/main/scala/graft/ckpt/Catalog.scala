@@ -117,13 +117,6 @@ final class Catalog(rootDir: String) extends Serializable {
   def append(df: DataFrame, table: String): Unit =
     writeSnapshot(df, table, latestSnapshot(table).getOrElse(-1L) + 1L)
 
-  /** Read the union of all committed snapshots of a log-style table. */
-  def readAll(spark: SparkSession, table: String): Option[DataFrame] = {
-    val ids = snapshots(table)
-    if (ids.isEmpty) None
-    else Some(ids.map(readSnapshot(spark, table, _)).reduce(_ unionByName _))
-  }
-
   /** Read the union of all committed JSONL snapshots (appendJsonRows) with
     * an explicit schema — one multi-path scan, not a per-snapshot union. */
   def readAllJson(spark: SparkSession, table: String,

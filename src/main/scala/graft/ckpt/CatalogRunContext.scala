@@ -58,8 +58,8 @@ final class CatalogRunContext(
         resumedFrom = step
         val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
         catalog.readSnapshot(spark, stateTable, step)
-          .repartition(p, col(init.columns.head)).localCheckpoint(true)
-      case None => init.localCheckpoint(true)
+          .repartition(p, col(init.columns.head)).localCheckpoint(false)
+      case None => init.localCheckpoint(false)
     }
 
   // Durable writes run on a single background thread, one in flight at a

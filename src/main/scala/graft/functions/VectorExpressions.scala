@@ -112,10 +112,4 @@ object VectorFunctions {
     import org.apache.spark.sql.functions.call_function
     call_function(FnName, a, b)
   }
-
-  /** Cosine similarity built from the native dot product. */
-  def cosine_sim(a: Column, b: Column): Column = {
-    import org.apache.spark.sql.functions.sqrt
-    dot_product(a, b) / (sqrt(dot_product(a, a)) * sqrt(dot_product(b, b)))
-  }
 }

@@ -3,12 +3,16 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import graft.graph.LinkGraph
 import graft.algo.PageRank
+import graft.bsp.{IterativeConf, RunContext, Superstep}
 
-/** Diagnostic: print the physical plan of one DF-PageRank superstep — the
-  * production step builder on a checkpointed state over the graph's own
-  * `dedupEdges`, under the loop driver's AQE-off scope — to check that the
-  * state⋈edges join and the state-update join reuse the hash partitioning
-  * (no extra Exchange). */
+/** Diagnostic: print the two physical plans a DF-PageRank run re-executes
+  * every superstep — the step and its convergence aggregate, compiled by
+  * `Superstep.compile` from the production program over the run's start
+  * state and the graph's own `dedupEdges`, under the loop driver's AQE-off
+  * scope — to check that the state⋈edges join and the state-update join
+  * reuse the hash partitioning (one Exchange, none over the cached table).
+  *
+  *   sbt "runMain graft.tools.PlanCheck" */
 object PlanCheck {
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder().master("local[8]")
@@ -24,10 +28,14 @@ object PlanCheck {
     }.toDF("src", "dst")
     val g = LinkGraph.fromRawEdges(edges)
 
-    graft.bsp.IterativeConf.withStablePartitioning(spark) {
-      val e = g.dedupEdges
-      val state = PageRank.initState(g.nodes, e, n).repartition(8, $"vid").localCheckpoint(true)
-      PageRank.superstep(state, e, 0.85, 0.15 / n, 0.0).explain("formatted")
+    IterativeConf.withStablePartitioning(spark) {
+      val e = g.dedupTable
+      val d = PageRank.dfProgram(g, PageRank.Config())(e.df, e.rows)
+      val plans = Superstep.compile(Superstep.start(RunContext.none, d), d)
+      println("== step plan (re-executed every superstep, state leaf swapped) ==")
+      println(plans.step.plan.treeString)
+      println("== aggregate plan (delta + carried sink mass, over the step's checkpoint) ==")
+      println(plans.agg.plan.treeString)
     }
     spark.stop()
   }

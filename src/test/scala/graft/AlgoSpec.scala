@@ -397,6 +397,17 @@ class AlgoSpec extends AnyFunSuite {
     assert(ResultOps.median(res, "value").head().getDouble(0) == 2.0)
   }
 
+  test("result ops: sort_by_node both ways, min_by breaks value ties by vid") {
+    val res = Seq((3L, "c", 2.0), (0L, "d", 1.0), (2L, "a", 2.0), (1L, "b", 1.0))
+      .toDF("vid", "name", "value")
+    def names(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.getAs[String]("name")).toSeq
+    assert(names(ResultOps.sortByNode(res)) == Seq("a", "b", "c", "d"))
+    assert(names(ResultOps.sortByNode(res, reverse = true)) == Seq("d", "c", "b", "a"))
+    // "d" (vid 0) and "b" (vid 1) share the least value: the lesser vid
+    // wins, though "b" sorts first by name
+    assert(names(ResultOps.minBy(res, "value")) == Seq("d"))
+  }
+
   test("betweenness fixture (betweenness.rs:120-163)") {
     val edges = Seq(
       (1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (2L, 5L),

@@ -147,6 +147,98 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
+  /** The nodes of `pl` that run inside a WholeStageCodegen stage. */
+  def inCodegen(pl: SparkPlan, codegen: Boolean = false): Seq[SparkPlan] = pl match {
+    case w: org.apache.spark.sql.execution.WholeStageCodegenExec => inCodegen(w.child, codegen = true)
+    case a: org.apache.spark.sql.execution.InputAdapter => inCodegen(a.child)
+    case other => (if (codegen) Seq(other) else Nil) ++ other.children.flatMap(inCodegen(_, codegen))
+  }
+
+  test("compiled DF supersteps: the plans the driver re-executes keep the superstep locks") {
+    import org.apache.spark.sql.execution.SortExec
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
+    import graft.algo.{Hits, Lpa, PageRank, Wcc}
+    import graft.bsp.{IterativeConf, RunContext, Superstep}
+    withoutAutoBroadcast {
+      val n = 20000L
+      val edges0 = spark.range(0, n, 1, 4).flatMap { i =>
+        graft.io.Corpus.linkTargets(i, 8, 29L).map(j => (i, j))
+      }.toDF("src", "dst")
+      val ids = spark.range(0, n).select($"id".as("vid"), $"id".cast("string").as("name"))
+      val g = new LinkGraph(edges0, ids, namesAreNumeric = true)
+      val (e, pairs) = (g.dedupTable, g.pairTable)
+      Superstep.withStatic(Hits.scatterRows(g), "from") { scatter =>
+        IterativeConf.withStablePartitioning(spark) {
+          for ((name, d) <- Seq(
+              "pagerank" -> PageRank.dfProgram(g, PageRank.Config())(e.df, e.rows),
+              "hashmin" -> Wcc.hashMinProgram(g.nodes.select($"vid"), "label", 20)(pairs.df, pairs.rows),
+              "lpa" -> Lpa.dfProgram(g, 10)(pairs.df, pairs.rows),
+              "hits" -> Hits.dfProgram(g, 20, 0.01)(scatter.df, scatter.rows))) {
+            val c = Superstep.compile(Superstep.start(RunContext.none, d), d)
+            val step = c.step.plan
+            val s = step.toString
+            val exchanges = step.collect { case x: ShuffleExchangeExec => x }
+            assert(exchanges.length == (if (name == "lpa") 2 else 1),
+              s"$name: ${exchanges.length} exchanges per superstep:\n$s")
+            exchanges.foreach(x => assert(!readsCache(x.child), s"$name: exchange over the cached table:\n$s"))
+            val shj = step.collect { case j: ShuffledHashJoinExec => j }
+            assert(shj.length == 2, s"$name: superstep joins are not both SHJ:\n$s")
+            assert(shj.forall(j => inCodegen(step).exists(_ eq j)), s"$name: a join left codegen:\n$s")
+            if (name != "lpa") assert(step.collect { case x: SortExec => x }.isEmpty, s"$name: sort:\n$s")
+            // the aggregate: partial + final hash aggregates, both codegen'd
+            val agg = c.agg.plan
+            val aggs = agg.collect { case a: HashAggregateExec => a }
+            assert(aggs.length == 2 && aggs.forall(a => inCodegen(agg).exists(_ eq a)),
+              s"$name: aggregate plan:\n$agg")
+          }
+        }
+      }
+      g.unpersist()
+    }
+  }
+
+  test("a DF superstep run plans its step and its aggregate once, however many steps it runs") {
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, LogicalPlan}
+    import org.apache.spark.sql.execution.SparkStrategy
+    import graft.algo.{PageRank, Wcc}
+    // a strategy that plans nothing but counts the joins and aggregates
+    // Catalyst plans while a run goes
+    def plannings(body: => Unit): (Int, Int) = {
+      val joins = new AtomicInteger
+      val aggs = new AtomicInteger
+      spark.experimental.extraStrategies = Seq(new SparkStrategy {
+        override def apply(plan: LogicalPlan): Seq[SparkPlan] = {
+          plan match {
+            case _: Join => joins.incrementAndGet()
+            case _: Aggregate => aggs.incrementAndGet()
+            case _ =>
+          }
+          Nil
+        }
+      })
+      try body finally spark.experimental.extraStrategies = Nil
+      (joins.get, aggs.get)
+    }
+    // a path 0-1-...-29: HashMin needs 29 steps to converge on it
+    val edges = (0L until 29L).map(i => (i, i + 1, i))
+    val g = LinkGraph.fromNumericEdgeList(spark, edges)
+    g.dedupTable; g.pairTable; g.nodeFacts
+    def pagerank(steps: Int) = plannings {
+      PageRank.run(g, PageRank.Config(iterCount = steps, tol = 0.0, mode = "df"))
+    }
+    def hashMin(steps: Int) = plannings {
+      Wcc.hashMin("wcc", g.nodes.select($"vid"), "label", g.pairTable, steps, graft.bsp.RunContext.none)
+    }
+    for ((name, run) <- Seq("pagerank" -> (pagerank _), "hashmin" -> (hashMin _))) {
+      val (two, five) = (run(2), run(5))
+      assert(two._1 > 0 && two._2 > 0, s"$name planned no join or aggregate: $two")
+      assert(five == two, s"$name: (joins, aggregates) planned in 2 steps $two, in 5 steps $five")
+    }
+    g.unpersist()
+  }
+
   test("sssp + temporal-reachability supersteps: SHJ against the cached big table, no sort, no window") {
     // the round-3 sssp picked its min-vid parent with a row_number window
     // (a sort per superstep) and carried name-path arrays in state; the
