@@ -43,13 +43,6 @@ object Metrics {
     d.crossJoin(o).crossJoin(i)
   }
 
-  /** E / (N·(N-1)) over deduped directed edges (f32 in the reference). */
-  def directedDensity(g: LinkGraph): Double = {
-    val n = g.nodeCount.toDouble
-    val e = g.edgeCount.toDouble
-    (e.toFloat / (n.toFloat * (n.toFloat - 1.0f))).toDouble
-  }
-
   /** Σ_v C(d_v, 2) where d_v = distinct undirected neighbours excluding
     * self (triplet_count.rs:83-113). */
   def tripletCount(g: LinkGraph): Long = {

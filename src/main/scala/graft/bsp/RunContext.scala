@@ -57,11 +57,26 @@ trait RunContext {
   * step never reads an earlier step's shuffle output. */
 class LocalRunContext extends RunContext {
   private val buf = ArrayBuffer.empty[StepStat]
+  private val live = new LiveCheckpoints
   override def startStep: Int = 0
-  override def restoreOrInit(init: DataFrame): DataFrame = init.localCheckpoint(false)
-  override def checkpoint(state: DataFrame, step: Int): DataFrame = state.localCheckpoint(false)
+  override def restoreOrInit(init: DataFrame): DataFrame = live.start(init.localCheckpoint(false))
+  override def checkpoint(state: DataFrame, step: Int): DataFrame = live.add(state.localCheckpoint(false))
   override def record(stat: StepStat): Unit = buf.synchronized { buf += stat }
   override def stats: Seq[StepStat] = buf.toSeq
+  override def finish(): Unit = live.finish()
+}
+
+/** The checkpoints of one loop that may still be read, oldest first. A
+  * loop's step k reads step k-1's checkpoint, so `add` (step k's) releases
+  * step k-2's: its step's job has run, and a durable context has finished
+  * writing it. `finish` releases all but the last, which is the loop's
+  * result; `start` begins the next loop. */
+private[graft] final class LiveCheckpoints {
+  private val states = scala.collection.mutable.Queue.empty[DataFrame]
+  def start(state: DataFrame): DataFrame = { states.clear(); states += state; state }
+  def add(state: DataFrame): DataFrame = { states += state; keep(2); state }
+  def finish(): Unit = { keep(1); states.clear() }
+  private def keep(n: Int): Unit = while (states.size > n) Superstep.release(states.dequeue())
 }
 
 object RunContext {

@@ -59,10 +59,17 @@ object Superstep {
     * the count alone is two). The caller releases `df`. */
   def staticTable(rows: DataFrame, key: String): Static =
     IterativeConf.withStablePartitioning(rows.sparkSession) {
-      val p = rows.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-      val df = rows.repartition(p, col(key)).distinct().sortWithinPartitions(col(key))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      val df = staticFrame(rows, key)
       Static(df, df.count()) // the count also materialises the cache
+    }
+
+  /** `staticTable`'s frame, persisted but not yet materialised, for a job
+    * that builds it with other tables (`LinkGraph.fromPages`). */
+  def staticFrame(rows: DataFrame, key: String): DataFrame =
+    IterativeConf.withStablePartitioning(rows.sparkSession) {
+      val p = rows.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+      rows.repartition(p, col(key)).distinct().sortWithinPartitions(col(key))
+        .persist(StorageLevel.MEMORY_AND_DISK)
     }
 
   /** `body` over a transient static table, released when `body` returns:

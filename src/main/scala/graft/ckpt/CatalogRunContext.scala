@@ -52,7 +52,9 @@ final class CatalogRunContext(
   override def startStep: Int =
     catalog.latestSnapshot(stateTable).getOrElse(0L).toInt
 
-  override def restoreOrInit(init: DataFrame): DataFrame =
+  private val live = new graft.bsp.LiveCheckpoints
+
+  override def restoreOrInit(init: DataFrame): DataFrame = live.start(
     catalog.latestSnapshot(stateTable) match {
       case Some(step) =>
         resumedFrom = step
@@ -60,7 +62,7 @@ final class CatalogRunContext(
         catalog.readSnapshot(spark, stateTable, step)
           .repartition(p, col(init.columns.head)).localCheckpoint(false)
       case None => init.localCheckpoint(false)
-    }
+    })
 
   // Durable writes run on a single background thread, one in flight at a
   // time (double buffering): the snapshot write + manifest commit + metric
@@ -79,6 +81,7 @@ final class CatalogRunContext(
     writerPool
   }
   private var inflight: java.util.concurrent.Future[_] = null
+  private var inflightStep = 0
 
   private var pendingCommit: Option[(DataFrame, Int)] = None
   private val asyncError = new java.util.concurrent.atomic.AtomicReference[Throwable](null)
@@ -87,6 +90,7 @@ final class CatalogRunContext(
 
   private def submitCommit(ck: DataFrame, step: Int): Unit = {
     awaitInflight()
+    inflightStep = step
     inflight = writer.submit(new Runnable {
       override def run(): Unit = {
         // per-partition lineage comes from the write itself: the
@@ -118,7 +122,10 @@ final class CatalogRunContext(
       pendingCommit.foreach { case (df, st) => submitCommit(df, st) } // defensive
       pendingCommit = Some((ck, step))
     }
-    ck
+    // live.add releases step-2's state: a write still reading it (every > 1)
+    // finishes first
+    if (inflight != null && inflightStep <= step - 2) awaitInflight()
+    live.add(ck)
   }
 
   override def record(stat: StepStat): Unit = {
@@ -155,6 +162,7 @@ final class CatalogRunContext(
       pendingCommit.foreach { case (df, st) => submitCommit(df, st) } // defensive
       pendingCommit = None
       awaitInflight()
+      live.finish()
     } finally if (writerPool != null) {
       // shutdown() still runs the queued metric flushes before the thread exits
       writerPool.shutdown()

@@ -251,13 +251,13 @@ class LinkGraph(
     * under `dedupEdges`' contract: callers must not re-partition it. */
   def undirectedPairs: DataFrame = pairTable.df
   private[graft] def pairTable: graft.bsp.Superstep.Static = synchronized {
-    if (undirectedCache == null) {
-      val d = edges.select("src", "dst")
-      undirectedCache = graft.bsp.Superstep.staticTable(d.select(col("src").as("a"), col("dst").as("b"))
-        .union(d.select(col("dst").as("a"), col("src").as("b"))), "a")
-    }
+    if (undirectedCache == null) undirectedCache = graft.bsp.Superstep.staticTable(LinkGraph.pairRows(edges), "a")
     undirectedCache
   }
+
+  /** Sets the static tables a minted graph's build job made. */
+  private def withStatic(dedup: graft.bsp.Superstep.Static, pairs: graft.bsp.Superstep.Static): LinkGraph =
+    synchronized { dedupCache = dedup; undirectedCache = pairs; this }
 
   /** Max vid and node count in one pass over the node table's `vid`
     * column — the facts every CSR/DF dispatch (CsrGraph.useCsr), CSR build
@@ -332,9 +332,9 @@ class LinkGraph(
   /** Exploded temporal event count (`count_temporal_edges`). */
   def edgeEventCount: Long = edges.count()
 
+  /** Caches both tables; a minted graph's already are. */
   def cache(): LinkGraph = {
-    edges.persist(StorageLevel.MEMORY_AND_DISK)
-    nodes.persist(StorageLevel.MEMORY_AND_DISK)
+    Seq(edges, nodes).filter(_.storageLevel == StorageLevel.NONE).foreach(_.persist(StorageLevel.MEMORY_AND_DISK))
     this
   }
 
@@ -353,30 +353,39 @@ final case class NodeFacts(maxVid: Long, count: Long)
 
 object LinkGraph {
 
-  /** Full ingestion pipeline: pages table → hrefs → edge events → vids. */
+  /** Full ingestion pipeline: pages table → hrefs → edge events → vids.
+    * The graph's tables are cached and materialised when it returns, so
+    * the extraction and sort caches are released. */
   def fromPages(pages: DataFrame): LinkGraph = {
-    // manage the raw-extraction cache here: fromEdgeEvents counts its own
-    // persisted event table, after which the raw cache is dead weight —
-    // release it instead of leaking one MEMORY_AND_DISK copy per ingest
-    val raw = Ingest.rawLinks(pages)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val g = fromEdgeEvents(Ingest.edgeEventsFromRaw(raw))
-    raw.unpersist()
-    g
+    val raw = Ingest.rawLinks(pages).persist(StorageLevel.MEMORY_AND_DISK)
+    val s = Ingest.sequenced(raw)
+    val m = Ingest.mintOrdered(pages.sparkSession, s.sorted, s.numbered, staticFrames)
+      .getOrElse(throw new IllegalStateException("the counted sort left its rows out of seq order"))
+    raw.unpersist(); s.sorted.unpersist()
+    minted(m)
   }
 
-  def fromEdgeEvents(events: org.apache.spark.sql.Dataset[EdgeEvent]): LinkGraph = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val ev = events.toDF().persist(StorageLevel.MEMORY_AND_DISK)
-    ev.count() // materialise before vid minting re-scans the event table
-    val nodesByUrl = Ingest.mintVids(ev.as[EdgeEvent]).persist(StorageLevel.MEMORY_AND_DISK)
-    val e = ev
-      .join(nodesByUrl.withColumnRenamed("url", "src_url").withColumnRenamed("vid", "src"), Seq("src_url"))
-      .join(nodesByUrl.withColumnRenamed("url", "dst_url").withColumnRenamed("vid", "dst"), Seq("dst_url"))
-      .select($"src", $"dst", $"ts", $"seq", $"layer")
-    val numeric = nodesByUrl.filter(!col("url").rlike("^[0-9]+$")).isEmpty
-    new LinkGraph(e, nodesByUrl.select($"vid", $"url".as("name")), numeric)
+  /** Graph over an edge-event table: vids by first appearance in seq
+    * order, the edges over them and the graph's static tables, cached and
+    * materialised by one Spark job (`Ingest.mint`; a second one when the
+    * rows need sorting first). */
+  def fromEdgeEvents(events: org.apache.spark.sql.Dataset[EdgeEvent]): LinkGraph =
+    minted(Ingest.mint(events, staticFrames))
+
+  /** `dedupEdges` and `undirectedPairs` over `edges`, for the mint job. */
+  private def staticFrames(edges: DataFrame): Seq[DataFrame] = Seq(
+    graft.bsp.Superstep.staticFrame(edges.select("src", "dst"), "src"),
+    graft.bsp.Superstep.staticFrame(pairRows(edges), "a"))
+
+  private def minted(m: Ingest.Minted): LinkGraph = {
+    val Seq(dedup, pairs) = m.derived.map { case (df, rows) => graft.bsp.Superstep.Static(df, rows) }
+    new LinkGraph(m.edges, m.nodes, m.namesAreNumeric).withStatic(dedup, pairs)
+  }
+
+  /** Both orientations of each edge as (a, b): the undirected pair rows. */
+  private def pairRows(edges: DataFrame): DataFrame = {
+    val d = edges.select("src", "dst")
+    d.select(col("src").as("a"), col("dst").as("b")).union(d.select(col("dst").as("a"), col("src").as("b")))
   }
 
   /** Graph over raw numeric ids: vid = the id itself (no dense minting).

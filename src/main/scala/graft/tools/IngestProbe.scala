@@ -1,11 +1,13 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import graft.graph.LinkGraph
 import graft.io.{Corpus, Ingest}
 
 /** Break the corpus_ingest bench leg into its pipeline phases: page
-  * synthesis + href parse, seq sort, vid mint, vid joins. Env: PAGES. */
+  * synthesis + href parse, the seq sort's range sampling, then the one
+  * mint job (counted sort, seq, first-seen ranks, each appearance's vid
+  * back in seq order, both graph tables cached, the numeric-name flag).
+  * Env: PAGES. */
 object IngestProbe {
   def main(args: Array[String]): Unit = {
     val cores = sys.env.getOrElse("CORES", "32").toInt
@@ -32,29 +34,18 @@ object IngestProbe {
       r
     }
     val p = Corpus.pages(spark, pages, 4).toDF()
-    val raw = time("rawLinks(parse+persist)") {
+    val raw = time("extract(parse+persist)") {
       val r = Ingest.rawLinks(p).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       r.count(); r
     }
-    val ev = time("withSeq(sort+zip)") {
-      val e = Ingest.edgeEventsFromRaw(raw).toDF()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      e.count(); e
+    // the counted sort samples its ranges now; the sort, its counts, the
+    // seq numbering, the vid ranks and both graph tables are one job
+    val s = time("seq(range sampling)")(Ingest.sequenced(raw))
+    val m = time("mint(sort+seq+vids+edges, one job)")(Ingest.mintOrdered(spark, s.sorted, s.numbered, _ => Nil).get)
+    raw.unpersist(); s.sorted.unpersist()
+    time("count(cached edges + nodes)") {
+      println(s"edges=${m.edges.count()} nodes=${m.nodes.count()} numericNames=${m.namesAreNumeric}")
     }
-    import spark.implicits._
-    val nodes = time("mintVids") {
-      val n = Ingest.mintVids(ev.as[graft.io.EdgeEvent])
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      n.count(); n
-    }
-    time("vid joins + count") {
-      val e = ev
-        .join(nodes.withColumnRenamed("url", "src_url").withColumnRenamed("vid", "src"), Seq("src_url"))
-        .join(nodes.withColumnRenamed("url", "dst_url").withColumnRenamed("vid", "dst"), Seq("dst_url"))
-        .select($"src", $"dst", $"ts", $"seq", $"layer")
-      e.count()
-    }
-    println(s"nodes=${nodes.count()}")
     spark.stop()
   }
 }

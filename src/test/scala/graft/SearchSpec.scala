@@ -47,6 +47,14 @@ class SearchSpec extends AnyFunSuite {
     assert(hits.values.forall(_ <= 2L))
   }
 
+  test("searchNodes / searchEdges: a Catalyst predicate over the node and unique-edge tables") {
+    val g = graft.graph.LinkGraph.fromEdgeList(spark,
+      Seq(("a", "b", 1L), ("a", "b", 2L), ("b", "c", 3L), ("c", "a", 4L)))
+    assert(Search.searchNodes(g, col("name").isin("a", "c")).select("vid").as[Long].collect().sorted.toSeq == Seq(0L, 2L))
+    // the multi-edge a->b is one unique edge
+    assert(Search.searchEdges(g, col("src") === 0L).select("src", "dst").as[(Long, Long)].collect().toSeq == Seq((0L, 1L)))
+  }
+
   test("standing index: searchIndexed == search, and the scan partition-prunes to the query buckets") {
     val docs = spark.read.parquet(docsPath)
     val n = docs.count()

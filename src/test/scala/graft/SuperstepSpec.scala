@@ -110,4 +110,22 @@ class SuperstepSpec extends AnyFunSuite {
     }
     g.unpersist()
   }
+
+  test("DF PageRank (6 steps) and catalog WCC keep only the checkpoints their results read") {
+    val g = graph(3000, 3, 47L)
+    g.nodes.count(); g.dedupTable; g.pairTable; g.nodeFacts
+    val sc = spark.sparkContext
+    val cat = new graft.ckpt.Catalog(java.nio.file.Files.createTempDirectory("graft-ckpt-release").toString)
+    for ((name, run) <- Seq[(String, () => DataFrame)](
+        "pagerank" -> (() => PageRank.run(g, PageRank.Config(iterCount = 6, tol = 0.0, mode = "df"))),
+        "wcc" -> (() => Wcc.run(g, ctx = new graft.ckpt.CatalogRunContext(cat, "release", spark), mode = "df")))) {
+      val before = sc.getPersistentRDDs.keySet
+      val res = run()
+      assert(res.count() > 1, name)
+      val left = sc.getPersistentRDDs.keySet -- before
+      val read = rddsRead(res)
+      assert(left.subsetOf(read), s"$name left ${(left -- read).size} persisted RDDs its result does not read")
+    }
+    g.unpersist()
+  }
 }
