@@ -106,8 +106,8 @@ object Bench {
       val (_, tWcc1) = time { Wcc.run(g).count() }
       val (_, tWcc2) = time { Wcc.run(g).count() }
       results("corpus_wcc") = math.min(tWcc1, tWcc2)
-      val (tri, tTri1) = time { Triangles.count(g, useKCore = false) }
-      val (_, tTri2) = time { Triangles.count(g, useKCore = false) }
+      val (tri, tTri1) = time { Triangles.count(g) }
+      val (_, tTri2) = time { Triangles.count(g) }
       results("corpus_triangles") = math.min(tTri1, tTri2)
       fullOnly("corpus_triangle_count") = tri.toString
       g.unpersist()

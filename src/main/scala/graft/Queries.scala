@@ -51,7 +51,7 @@ object Queries {
   private val prCache =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
 
-  private[graft] def pagerank20(spark: SparkSession, dir: String): DataFrame =
+  private def pagerank20(spark: SparkSession, dir: String): DataFrame =
     prCache.getOrElseUpdate((spark, dir), {
       val r = PageRank.run(graph(spark, dir), PageRank.Config(iterCount = 20, tol = 0.0))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -71,7 +71,7 @@ object Queries {
   private val wccCache =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
 
-  private[graft] def wccRun(spark: SparkSession, dir: String): DataFrame =
+  private def wccRun(spark: SparkSession, dir: String): DataFrame =
     wccCache.getOrElseUpdate((spark, dir), {
       val r = Wcc.run(graph(spark, dir))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -368,7 +368,7 @@ object Queries {
 
   /** Same, over any prelude that defines `edges(src, dst)` (distinct
     * directed) and `nodes(id)` CTEs — used for the aux-dumped crawl graph. */
-  private[graft] def pagerankSqlOver(prelude: String, finalSelect: String): String =
+  private def pagerankSqlOver(prelude: String, finalSelect: String): String =
     s"""WITH RECURSIVE $prelude,
        |outdeg AS (SELECT src, CAST(count(*) AS DOUBLE) AS od FROM edges GROUP BY src),
        |nn AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM nodes),

@@ -19,7 +19,7 @@ object Verify {
     * the gate spuriously red. */
   def isVerifyRun: Boolean = sys.props.get("graft.isVerify").contains("1")
 
-  def dumpAux(spark: SparkSession): Unit = {
+  private def dumpAux(spark: SparkSession): Unit = {
     val g = Queries.crawlGraphCache.getOrElseUpdate(spark,
       graft.graph.LinkGraph.fromPages(graft.io.Corpus.tiny(spark).toDF()).cache())
     g.edges.coalesce(1).write.mode("overwrite").parquet(s"$AuxDir/crawl_edges.parquet")

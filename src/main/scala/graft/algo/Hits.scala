@@ -133,7 +133,6 @@ object Hits {
       aggs = Seq(greatest(max(col("dh")), max(col("da"))), max(col("dh")), max(col("da"))),
       // tol = 0 disables early stopping
       halt = (r, _) => tol > 0 && r.getDouble(1) <= tol && r.getDouble(2) <= tol,
-      flags = Seq("dh", "da"),
       carry = Seq(sum(col("hub") * col("out_deg")), sum(col("auth") * col("in_deg"))),
       bind = (c, _) => { totH.set(orZero(c, 0)); totA.set(orZero(c, 1)) })
   }

@@ -183,11 +183,6 @@ object Lpa {
       .join(g.nodes, Seq("vid")).select(col("vid"), col("name"), col("label"))
   }
 
-  /** One colour phase with the colour fixed. */
-  private[graft] def lpaPhase(state: DataFrame, pairs: DataFrame, color: Int,
-                              numericNames: Boolean): DataFrame =
-    lpaPhase(state, pairs, lit(color), numericNames)
-
   /** The DataFrame program: one colour phase per superstep, the colour a
     * step param, so both colours run one compiled plan. */
   private[graft] def dfProgram(g: LinkGraph, maxSweeps: Int)(pairs: DataFrame, m: Long): Superstep.Dense = {
@@ -199,7 +194,6 @@ object Lpa {
       step = lpaPhase(_, pairs, colour.col.cast("long"), g.namesAreNumeric),
       aggs = Seq(coalesce(sum(when(col("changed"), 1L).otherwise(0L)), lit(0L))),
       halt = (r, _) => halt(r.getLong(0)),
-      flags = Seq("changed"),
       // phases count from 1 on this engine: colour = (phase - 1) % 2
       bind = (_, phase) => colour.set((phase - 1) % 2))
   }

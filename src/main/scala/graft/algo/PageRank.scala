@@ -127,11 +127,6 @@ object PageRank {
         state("score").as("prev_score"))
   }
 
-  /** One superstep with the dangling-mass term fixed. */
-  private[graft] def superstep(state: DataFrame, edges: DataFrame, damping: Double,
-                               teleport: Double, sinkContrib: Double): DataFrame =
-    superstep(state, edges, damping, teleport, lit(sinkContrib))
-
   /** The DataFrame program (PlanSpec and tools.PlanCheck compile it as the
     * driver does): state and edges are co-hash-partitioned on the vertex
     * id; the per-step aggregate is the delta, and the carried sink mass
@@ -149,7 +144,6 @@ object PageRank {
       step = superstep(_, edges, cfg.damping, teleport, sinkContrib.col),
       aggs = Seq(if (cfg.useL2Norm) sqrt(sum(pow(diff, 2.0))) else sum(abs(diff))),
       halt = (r, _) => orZero(r, 0) <= cfg.tol * n,
-      flags = Seq("prev_score"),
       carry = Seq(sum(when(col("out_degree") === 0, col("score")).otherwise(lit(0.0)))),
       bind = (c, _) => sinkContrib.set(factor * orZero(c, 0)))
   }

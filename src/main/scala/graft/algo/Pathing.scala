@@ -204,7 +204,6 @@ object Pathing {
     val spark = g.spark
     import spark.implicits._
     graft.bsp.IterativeConf.withStablePartitioning(spark) {
-    val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val w0 = weightCol.map(c => col(c).cast("double")).getOrElse(lit(1.0))
     val dir0 = g.edges.select($"src", $"dst", w0.as("w"))
     val dirEdges = direction match {
@@ -222,19 +221,15 @@ object Pathing {
     val d0 = if (delta > 0) delta
              else if (stats.isNullAt(0) || stats.getDouble(0) <= 0.0) 1.0
              else stats.getDouble(0)
-    val light = edges.filter($"w" <= d0).repartition(p, $"src")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val heavy = edges.filter($"w" > d0).repartition(p, $"src")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val heavyCount = heavy.count()
-    light.count()
+    // transient static tables: the result below reads only the state's
+    // checkpoints, each materialised by the job that follows it
+    Superstep.withStatic(edges.filter($"w" <= d0), "src") { light =>
+    Superstep.withStatic(edges.filter($"w" > d0), "src") { heavy =>
     edges.unpersist()
-
     var state = g.nodes.filter($"name" === source)
       .select($"vid", lit(0.0).as("dist")).localCheckpoint(false)
     var bucket = if (state.count() == 0) -1L else 0L
     var outer = 0L
-    try {
     while (bucket >= 0) {
       outer += 1
       var inner = 0L
@@ -258,11 +253,11 @@ object Pathing {
         // state sides, halving the actions and checkpoint churn of long
         // light-edge cascades (measured 17% off the degenerate
         // one-bucket sf0.1 leg, 13 rounds -> 7 actions).
-        val m1 = deltaRelax(frontier, light, state).localCheckpoint(false)
+        val m1 = deltaRelax(frontier, light.df, state).localCheckpoint(false)
         val merged = if (inner == 0) m1 else {
           inner += 1
           val f1 = m1.filter($"improved" && $"dist" < hi).select($"vid", $"dist")
-          deltaRelax(f1, light, m1.select($"vid", $"dist")).localCheckpoint(false)
+          deltaRelax(f1, light.df, m1.select($"vid", $"dist")).localCheckpoint(false)
         }
         inner += 1
         frontier = merged.filter($"improved" && $"dist" < hi)
@@ -272,18 +267,16 @@ object Pathing {
       }
       // heavy edges fire once per settled bucket; then jump to the next
       // non-empty bucket (one agg job also materialises the heavy merge)
-      if (heavyCount > 0) {
+      if (heavy.rows > 0) {
         val bNodes = state.filter($"dist" >= lo && $"dist" < hi)
-        state = deltaRelax(bNodes, heavy, state).select($"vid", $"dist").localCheckpoint(false)
+        state = deltaRelax(bNodes, heavy.df, state).select($"vid", $"dist").localCheckpoint(false)
       }
       val nextRow = state.agg(min(when($"dist" >= hi, floor($"dist" / d0).cast("long")))).head()
       // max(_, bucket+1): dist/d0 can round down across the hi boundary
       bucket = if (nextRow.isNullAt(0)) -1L else math.max(nextRow.getLong(0), bucket + 1)
     }
-    // finally: the maxBuckets guard throws mid-loop — don't leak the
-    // persisted edge splits into the rest of the session
-    } finally { light.unpersist(); heavy.unpersist() }
     state.join(g.nodes, Seq("vid")).select($"vid", $"name", $"dist")
+    }}
     }
   }
 
@@ -312,11 +305,10 @@ object Pathing {
     val spark = g.spark
     import spark.implicits._
     graft.bsp.IterativeConf.withStablePartitioning(spark) {
-    val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    // exploded out-edge events (multi-edges each count)
-    val events = g.edges.select($"src", $"dst", $"ts")
-      .repartition(p, $"src").persist(StorageLevel.MEMORY_AND_DISK)
-    val m = events.count()
+    // exploded out-edge events (multi-edges each count; identical
+    // (src, dst, ts) rows merge, as each batch's distinct() merges them)
+    Superstep.withStatic(g.edges.select($"src", $"dst", $"ts"), "src") {
+      case Superstep.Static(events, m) =>
     val stopVids = g.nodes.filter($"name".isin(stops: _*)).select($"vid")
       .as[Long].collect().toSeq
     val seedRows = g.nodes.filter($"name".isin(seeds: _*))
@@ -371,14 +363,13 @@ object Pathing {
             when($"is_new", lit(null).cast("long")).otherwise($"old_earliest").as("prev"))),
         pending.toDouble, pending == 0)
     }
-    events.unpersist()
     val hist = batches.reduce(_ union _)
       .groupBy($"vid").agg(sort_array(collect_list(struct($"t", $"src_name"))).as("sorted"))
       .select($"vid", expr("transform(sorted, x -> concat(cast(x.t as string), ':', x.src_name))").as("history"))
     g.nodes.join(hist, Seq("vid"), "left")
       .select($"vid", $"name",
         coalesce($"history", array().cast("array<string>")).as("history"))
-    }
+    }}
   }
 
   /** One taint superstep's scatter: the frontier's out-edge events inside

@@ -11,11 +11,10 @@ import graft.graph.{CsrBlock, CsrGraph, LinkGraph}
   * (raphtory/src/algorithms/motifs/triangle_count.rs:64-127): undirected,
   * multi-edge-collapsed, self-loops never count, each triangle counted once.
   * The reference restricts to the 2-core first (an optimisation, not a
-  * semantic change) — kept as a flag, default OFF: the iterative peel
-  * costs several full-graph shuffle rounds while the degree-ordered
-  * enumeration below already bounds the wedge join at O(m^1.5), and
-  * non-core edges close no wedges so they fall out of the equi-joins
-  * on their own.
+  * semantic change); this does not: the iterative peel costs several
+  * full-graph shuffle rounds while the degree-ordered enumeration below
+  * already bounds the wedge join at O(m^1.5), and non-core edges close no
+  * wedges so they fall out of the equi-joins on their own.
   *
   * Graphs within the CSR fit rule are counted by sorted-list intersection
   * on the graph's shared undirected CSR (countCsr). The DataFrame shape,
@@ -31,14 +30,7 @@ object Triangles {
   /** Dispatches by the shared CSR/DF fit rule: a graph that fits is counted
     * on its shared undirected CSR (countCsr), a larger one by the
     * DataFrame wedge join (enumerate). Both give the same exact count. */
-  def count(g: LinkGraph, useKCore: Boolean = false): Long =
-    if (!useKCore) countOn(g)
-    else {
-      val core = g.subgraph(KCore.coreSet(g, 2))
-      try countOn(core) finally core.unpersist()
-    }
-
-  private def countOn(g: LinkGraph): Long =
+  def count(g: LinkGraph): Long =
     if (g.nodeFacts.maxVid < 0) 0L
     else if (CsrGraph.useCsr(g, "auto")) countCsr(g.undirectedCsr)
     else triangleCountOf(undirectedSimple(g))

@@ -86,8 +86,7 @@ object Wcc {
       // sum() over an EMPTY state is NULL (ids can be empty while pairs
       // reference absent ids): coalesce keeps the exit exact
       aggs = Seq(coalesce(sum(when(col("changed"), 1L).otherwise(0L)), lit(0L))),
-      halt = (r, _) => r.getLong(0) == 0,
-      flags = Seq("changed"))
+      halt = (r, _) => r.getLong(0) == 0)
 
   /** HashMin init state: (key, `label` = least(key, min neighbour key));
     * joined shuffled-hash like PageRank's init, so it is one job. */

@@ -112,9 +112,9 @@ object Counters {
     private val preSum = new Array[Long](8)   // same-nb ordered pairs, both pre
     private val midSum = new Array[Long](8)   // same-nb pairs straddling current
     private val postSum = new Array[Long](8)  // same-nb ordered pairs, both post
-    val countPre = new Array[Long](8)
-    val countMid = new Array[Long](8)
-    val countPost = new Array[Long](8)
+    private val countPre = new Array[Long](8)
+    private val countMid = new Array[Long](8)
+    private val countPost = new Array[Long](8)
 
     protected def expirePre(i: Int): Unit = {
       val nb = nbs(i); val d = dirs(i)
@@ -224,9 +224,9 @@ object Counters {
     private val preSum = new Array[Long](8)
     private val midSum = new Array[Long](8)
     private val postSum = new Array[Long](8)
-    val countPre = new Array[Long](8)
-    val countMid = new Array[Long](8)
-    val countPost = new Array[Long](8)
+    private val countPre = new Array[Long](8)
+    private val countMid = new Array[Long](8)
+    private val countPost = new Array[Long](8)
 
     private val nbIndex = new java.util.HashMap[Long, Int]()
     private var preNodes = new Array[Long](32)  // (nbIdx*2 + dir)

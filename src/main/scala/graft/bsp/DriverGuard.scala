@@ -11,7 +11,7 @@ import graft.graph.LinkGraph
   * `graft.driver.maxElements` Spark conf (elements ≈ rows collected). */
 object DriverGuard {
 
-  val DefaultMaxElements: Long = 200L * 1000 * 1000 // ~3-6 GiB of driver heap
+  private val DefaultMaxElements: Long = 200L * 1000 * 1000 // ~3-6 GiB of driver heap
 
   def maxElements(g: LinkGraph): Long =
     g.spark.conf.getOption("graft.driver.maxElements").map(_.toLong)

@@ -23,8 +23,8 @@ import org.apache.spark.sql.functions.udf
   * no exchange (PlanSpec).
   *
   * A state swapped in must carry the leaf's columns first, in order:
-  * extra trailing columns (a step's flags) are never read, since the scan
-  * reads fields by ordinal. */
+  * extra trailing columns (those only a step's aggregates read) are never
+  * read, since the scan reads fields by ordinal. */
 final class StatePlan(leaf: DataFrame, build: DataFrame => DataFrame) {
   private val leafRdd = StatePlan.rddOf(leaf)
   private val frame = build(leaf)

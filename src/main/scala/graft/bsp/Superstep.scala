@@ -27,14 +27,13 @@ object Superstep {
     *                 driver hash-partitions on it)
     * @param maxSteps last step number to run (steps count from 1)
     * @param step     the step over a state frame, built ONCE per run: the
-    *                 next state, the state's columns first, then any `flags`
-    *                 columns for the aggregates; per-step scalars are
-    *                 `StatePlan.Param` columns
+    *                 next state, the state's columns first, then any columns
+    *                 only the aggregates read (the run returns the init's
+    *                 columns); per-step scalars are `StatePlan.Param` columns
     * @param aggs     convergence aggregates over the next state; the first
     *                 is the delta recorded in the step's StepStat
     * @param halt     (aggregate row, step) => stop after this step; the row
     *                 is `aggs` followed by `carry`
-    * @param flags    columns dropped from the state the run returns
     * @param carry    aggregates over a state that the NEXT step needs: taken
     *                 with `aggs` in each step's job, and over the restored or
     *                 init state in the job that materialises it
@@ -45,7 +44,6 @@ object Superstep {
       step: DataFrame => DataFrame,
       aggs: Seq[Column],
       halt: (Row, Int) => Boolean,
-      flags: Seq[String],
       carry: Seq[Column] = Nil,
       bind: (Row, Int) => Unit = (_, _) => ())
 
@@ -90,8 +88,8 @@ object Superstep {
     * compiled plans with the state leaf's RDD swapped (`StatePlan.over`),
     * after `bind` has set the step's params. Each superstep is ONE Spark
     * job: the step's output goes through the lazy `ctx.checkpoint` and the
-    * aggregate materialises it. Returns the final state (flags dropped),
-    * checkpointed. */
+    * aggregate materialises it. Returns the final state's init columns,
+    * checkpointed (a restored snapshot carries the same names). */
   def dataFrame(algo: String, ctx: RunContext, table: Static)(
       program: (DataFrame, Long) => Dense): DataFrame = {
     val spark = table.df.sparkSession
@@ -111,7 +109,7 @@ object Superstep {
         carry = Row.fromSeq(row.toSeq.drop(d.aggs.size))
         Next(ck, if (row.isNullAt(0)) 0.0 else row.getAs[Number](0).doubleValue, d.halt(row, step))
       }
-      last.drop(d.flags: _*)
+      last.select(d.init.columns.map(col): _*)
     }
   }
 

@@ -215,7 +215,7 @@ object CatalogRunContext {
     (b += '"').toString
   }
 
-  val metricsSchema: StructType = StructType(Seq(
+  private val metricsSchema: StructType = StructType(Seq(
     StructField("run_id", StringType), StructField("algo", StringType),
     StructField("step", IntegerType), StructField("partition", IntegerType),
     StructField("rows", LongType), StructField("edges_scattered", LongType),

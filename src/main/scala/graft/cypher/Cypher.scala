@@ -772,7 +772,7 @@ object Cypher {
     /** Top level: query [UNION [ALL] query]...; returns the branches and
       * whether they combine with ALL (openCypher rejects mixing UNION and
       * UNION ALL in one query, and so do we). */
-    def queryList(): (Seq[Query], Boolean) = {
+    private[cypher] def queryList(): (Seq[Query], Boolean) = {
       val qs = Seq.newBuilder[Query]
       qs += query()
       var all = Option.empty[Boolean]

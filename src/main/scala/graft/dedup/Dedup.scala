@@ -15,7 +15,7 @@ object Dedup {
   /** Default bound on all-pairs cosine comparisons (embeddingNearDups):
     * ~10^8 codegen dots ≈ a few seconds on one box; anything bigger is
     * IVF-cell territory. Override: `graft.dedup.maxPairs` Spark conf. */
-  val DefaultMaxPairs: Long = 100L * 1000 * 1000
+  private val DefaultMaxPairs: Long = 100L * 1000 * 1000
 
   /** Exact duplicate groups: (text_hash, n_docs, first_doc). */
   def exactGroups(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame =

@@ -98,7 +98,7 @@ case class DotProduct(left: Expression, right: Expression)
 }
 
 object VectorFunctions {
-  val FnName = "graft_dot_product"
+  private val FnName = "graft_dot_product"
 
   /** Register the expression in the session's function registry (Spark 4
     * keeps Column↔Expression internal, so the Column API goes through

@@ -109,7 +109,7 @@ object CsrGraph {
 
   /** The dense id-space bound of the CSR fast path: 32M ids keep the
     * per-superstep dense state arrays within driver and executor memory. */
-  val InMemMaxIds: Long = 32L * 1000 * 1000
+  private val InMemMaxIds: Long = 32L * 1000 * 1000
 
   /** The CSR/DF dispatch rule shared by PageRank, WCC, HITS, sync-LPA and
     * triangles: "csr" / "df" force an engine; "auto" takes CSR when the

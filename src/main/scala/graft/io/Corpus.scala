@@ -55,7 +55,7 @@ object Corpus {
 
   def url(i: Long): String = f"https://site${i % 1000}%04d.example/p/$i"
 
-  def warcMillis(i: Long): Long = BaseMillis + i * 1000L
+  private def warcMillis(i: Long): Long = BaseMillis + i * 1000L
 
   /** Render the page per the FIXTURES.md §A template (byte-exact). */
   def renderHtml(i: Long, k: Int, seed: Long): String = {

@@ -116,7 +116,7 @@ object Html {
     * root-relative (`/`), and relative references; strips the fragment;
     * returns None unless the final scheme is http/https or the value is
     * empty/fragment-only. */
-  def resolve(rawHref: String, baseUrl: String): Option[String] = {
+  private def resolve(rawHref: String, baseUrl: String): Option[String] = {
     val href0 = rawHref.trim
     if (href0.isEmpty) return None
     val noFrag = { val h = href0.indexOf('#'); if (h >= 0) href0.substring(0, h) else href0 }
@@ -206,7 +206,7 @@ object Html {
   }
 
   /** Decode exactly the five spec'd entities (FIXTURES.md §A). */
-  def decodeEntities(s: String): String = {
+  private def decodeEntities(s: String): String = {
     if (s.indexOf('&') < 0) return s
     val sb = new java.lang.StringBuilder(s.length)
     var i = 0
@@ -268,7 +268,7 @@ object Html {
     n
   }
 
-  def collapseWhitespace(s: String): String = {
+  private def collapseWhitespace(s: String): String = {
     val sb = new java.lang.StringBuilder(s.length)
     var pendingSpace = false
     var started = false

@@ -44,18 +44,19 @@ object Ingest {
     // HTML parsing is the expensive part: cache it for the sort's two
     // scans (range sampling, then the shuffle)
     val raw = rawLinks(pages).persist(StorageLevel.MEMORY_AND_DISK)
+    try edgeEventsFromRaw(raw) finally raw.unpersist()
+  }
+
+  /** Seq assignment over an already-persisted raw-links table (edgeEvents
+    * = rawLinks + this): the result is cached and materialised, and the
+    * sort cache it was built from is released; `raw` stays the caller's. */
+  private[graft] def edgeEventsFromRaw(raw: DataFrame): Dataset[EdgeEvent] = {
     val s = sequenced(raw)
     val events = s.events.persist(StorageLevel.MEMORY_AND_DISK)
     events.queryExecution.toRdd.foreachPartition(_ => ())
-    raw.unpersist(); s.sorted.unpersist()
+    s.sorted.unpersist()
     events
   }
-
-  /** Seq assignment over an already-persisted raw-links table (probe /
-    * reuse entry; edgeEvents = rawLinks + this). Runs only the sort's
-    * sampling job; the first job that reads the result sorts, caches and
-    * numbers the rows. */
-  private[graft] def edgeEventsFromRaw(raw: DataFrame): Dataset[EdgeEvent] = sequenced(raw).events
 
   /** One page's href rows: (src_url, dst_url, ts, link_idx) — the single
     * extraction body shared by the batch (rawLinks) and streaming

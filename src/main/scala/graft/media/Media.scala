@@ -55,7 +55,7 @@ object Media {
     }
     /** First 15 hex digits (60 bits) of md5 of the uppercase hex rendering:
       * positive in a signed 64-bit lane on both engines. */
-    def md5Meta(bytes: Array[Byte]): Long = {
+    private def md5Meta(bytes: Array[Byte]): Long = {
       val hex = bytes.map(b => f"$b%02X").mkString
       val md = java.security.MessageDigest.getInstance("MD5")
       val digest = md.digest(hex.getBytes("UTF-8")).map(b => f"$b%02x").mkString

@@ -66,7 +66,7 @@ object Rand08 {
     /** `gen_range(0..ubound)` for u32 bounds — rand 0.8.5
       * UniformInt::sample_single: zone = (range << clz(range)) − 1; draw
       * u32, widening-multiply, reject while lo > zone. */
-    def genIndexU32(ubound: Int): Int = {
+    private[rng] def genIndexU32(ubound: Int): Int = {
       require(ubound > 0)
       val range = ubound.toLong & 0xffffffffL
       val zone = ((range << java.lang.Long.numberOfLeadingZeros(range) - 32) - 1) & 0xffffffffL

@@ -61,7 +61,7 @@ object Ann {
   /** Deterministic hyperplane weight for (plane, dim): first 8 md5 hex
     * digits of "plane:p:d" as u32, scaled to [-1, 1) — the portable hash
     * shared with the DuckDB oracle (TextOps.md5u32). */
-  def planeWeight(plane: Int, dim: Int): Double = {
+  private def planeWeight(plane: Int, dim: Int): Double = {
     val md = java.security.MessageDigest.getInstance("MD5")
     val hex = md.digest(s"plane:$plane:$dim".getBytes("UTF-8"))
       .take(4).map(b => f"$b%02x").mkString

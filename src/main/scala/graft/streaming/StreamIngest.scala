@@ -21,7 +21,7 @@ object StreamIngest {
     * Exactly the batch extraction (graft.io.Ingest) lifted to readStream —
     * the event `seq` becomes (ts, link_idx) ordering scoped per micro-batch
     * (global dense seq is a batch-compaction concern). */
-  def edgeEventStream(spark: SparkSession, pagesDir: String): DataFrame = {
+  private def edgeEventStream(spark: SparkSession, pagesDir: String): DataFrame = {
     import spark.implicits._
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("url", org.apache.spark.sql.types.StringType),

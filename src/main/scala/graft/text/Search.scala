@@ -29,7 +29,7 @@ object Search {
       .agg(count(lit(1)).as("tf"))
 
   /** Document frequency per term: (term, df). */
-  def docFrequencies(index: DataFrame): DataFrame =
+  private def docFrequencies(index: DataFrame): DataFrame =
     index.groupBy(col("term")).agg(count(lit(1)).as("df"))
 
   /** Disjunctive TF-IDF top-k: (doc_id, score, n_terms_hit), score rounded
@@ -60,7 +60,7 @@ object Search {
 
   /** Stable term-bucket id, recomputable at query time (Murmur3 — the same
     * hash on write and read paths). */
-  def termBucket(term: Column, buckets: Int): Column =
+  private def termBucket(term: Column, buckets: Int): Column =
     pmod(hash(term), lit(buckets)).cast("int")
 
   /** Write the inverted index as a STANDING index, hash-bucketed by term

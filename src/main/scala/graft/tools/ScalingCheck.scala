@@ -46,7 +46,7 @@ object ScalingCheck {
     * graph; per-superstep wall only (setup/codegen warm after round 1);
     * returns the best round's edges-scattered/sec. SCALE_MODE=csr measures
     * the CSR gather path instead of the shuffle path. */
-  def measure(cores: Int, nodes: Long, k: Int, iters: Int, rounds: Int,
+  private def measure(cores: Int, nodes: Long, k: Int, iters: Int, rounds: Int,
               mode: String = sys.env.getOrElse("SCALE_MODE", "df")): Double =
     measureRounds(cores, nodes, k, iters, rounds, mode).max
 

@@ -26,12 +26,6 @@ import graft.sim.Ann
   */
 object Vectors {
 
-  /** Document table schema: one row per rendered entity document.
-    * kind: "graph" | "node" | "edge"; vid set for nodes, src/dst for
-    * edges; ts = the entity's earliest event time (window filters use it,
-    * mirroring the reference's Lifespan). */
-  val DocColumns = Seq("kind", "vid", "src", "dst", "name", "content", "ts", "embedding")
-
   /** Templates are plain strings with `{column}` placeholders resolved
     * against the entity frame (nodes: vid, name + any node prop columns;
     * edges: src, dst, src_name, dst_name, n_events, first_ts, last_ts;
@@ -160,14 +154,14 @@ object Vectors {
     VectorisedGraph(g, docs, embedder)
   }
 
-  /** The vectorised graph: the source graph + its document table. All
-    * searches return (rank, kind, vid, src, dst, name, score) ordered by
-    * descending cosine score with deterministic (kind, vid, src, dst)
-    * tie-breaks. */
+  /** The vectorised graph: the source graph + its document table, one
+    * (kind, vid, src, dst, name, content, ts, embedding) row per rendered
+    * entity. kind: "graph" | "node" | "edge"; vid set for nodes, src/dst
+    * for edges; ts = the entity's earliest event time (window filters use
+    * it, mirroring the reference's Lifespan). All searches return (rank,
+    * kind, vid, src, dst, name, score) ordered by descending cosine score
+    * with deterministic (kind, vid, src, dst) tie-breaks. */
   case class VectorisedGraph(g: LinkGraph, documents: DataFrame, embedder: Embedder) {
-
-    def embedQuery(text: String): DataFrame =
-      documents.sparkSession.range(1).select(embedder.embed(lit(text)).as("qe"))
 
     private def windowed(window: Option[(Long, Long)]): DataFrame = window match {
       case Some((start, end)) =>
@@ -201,13 +195,6 @@ object Vectors {
     def documentsBySimilarity(query: Array[Double], k: Int,
                               window: Option[(Long, Long)] = None): DataFrame =
       topK(scored(typedLit(query), windowed(window)), k)
-
-    /** Top `k` entities, each scored by its best document
-      * (vectorised_graph.rs:185-206 — one document per entity here, so
-      * group-max == the document score). */
-    def entitiesBySimilarity(query: Array[Double], k: Int,
-                             window: Option[(Long, Long)] = None): DataFrame =
-      documentsBySimilarity(query, k, window)
 
     def nodesBySimilarity(query: Array[Double], k: Int,
                           window: Option[(Long, Long)] = None): DataFrame =

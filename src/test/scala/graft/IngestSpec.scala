@@ -125,4 +125,16 @@ class IngestSpec extends AnyFunSuite {
     ev.unpersist()
     assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
   }
+
+  test("edgeEventsFromRaw releases the sort: only its own cache and the caller's raw stay") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val raw = Ingest.rawLinks(Corpus.pages(spark, 40L, 2).toDF())
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val ev = Ingest.edgeEventsFromRaw(raw)
+    assert((sc.getPersistentRDDs.keySet -- before).size == 2)
+    assert(ev.count() == 77)
+    ev.unpersist(); raw.unpersist()
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
+  }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.functions.lit
 import graft.graph.LinkGraph
 import graft.algo.Lpa
 import graft.rng.Rand08
@@ -95,7 +96,7 @@ class LpaSpec extends AnyFunSuite {
     assert(dfCtx.stats.takeRight(2).forall(_.delta == 0.0))
     // one more phase (the colour after the last one) changes nothing
     val state = df.toSeq.toDF("vid", "label")
-    val next = Lpa.lpaPhase(state, g.undirectedPairs, phases % 2, numericNames = true)
+    val next = Lpa.lpaPhase(state, g.undirectedPairs, lit(phases % 2), numericNames = true)
     assert(next.filter($"changed").count() == 0)
     assert(next.collect().map(r => r.getLong(0) -> r.getString(1)).toMap == df)
   }

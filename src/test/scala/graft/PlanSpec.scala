@@ -70,7 +70,7 @@ class PlanSpec extends AnyFunSuite {
         val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
         val state = graft.algo.PageRank.initState(g.nodes, e, n)
           .repartition(p, $"vid").localCheckpoint(true)
-        val step = graft.algo.PageRank.superstep(state, e, 0.85, 0.15 / n, 0.0)
+        val step = graft.algo.PageRank.superstep(state, e, 0.85, 0.15 / n, lit(0.0))
         val exec = step.queryExecution.executedPlan
         val s = exec.toString
         val exchanges = exec.collect { case x: ShuffleExchangeExec => x }
@@ -98,7 +98,7 @@ class PlanSpec extends AnyFunSuite {
       val e = g.dedupEdges
       val state = graft.algo.PageRank.initState(g.nodes, e, n)
         .repartition(p, $"vid").localCheckpoint(true)
-      val newState = graft.algo.PageRank.superstep(state, e, 0.85, 0.15 / n, 0.0)
+      val newState = graft.algo.PageRank.superstep(state, e, 0.85, 0.15 / n, lit(0.0))
       // tree collect: the cached dedupEdges BUILD lineage (embedded in the
       // InMemoryRelation string) ran once, not per superstep
       import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -374,7 +374,7 @@ class PlanSpec extends AnyFunSuite {
         val pairs = g.undirectedPairs
         val state = ids.select($"vid", $"name".as("label"))
           .repartition(p, $"vid").localCheckpoint(true)
-        val phase = graft.algo.Lpa.lpaPhase(state, pairs, 0, numericNames = true)
+        val phase = graft.algo.Lpa.lpaPhase(state, pairs, lit(0), numericNames = true)
         val exec = phase.queryExecution.executedPlan
         val s = exec.toString
         assert(exec.collect { case x: WindowExec => x }.isEmpty,

@@ -42,7 +42,7 @@ class SuperstepSpec extends AnyFunSuite {
     val e = g.dedupEdges
     val want = replanned(PageRank.initState(g.nodes, e, n), 4) { (state, _) =>
       val sink = state.agg(sum(when($"out_degree" === 0, $"score").otherwise(0.0))).head().getDouble(0)
-      PageRank.superstep(state, e, 0.85, 0.15 / n, 0.85 / n * sink).drop("prev_score")
+      PageRank.superstep(state, e, 0.85, 0.15 / n, lit(0.85 / n * sink)).drop("prev_score")
     }.select($"vid", $"score").as[(Long, Double)].collect().toMap
     val got = PageRank.run(g, PageRank.Config(iterCount = 4, tol = 0.0, mode = "df"))
       .select($"vid", $"score").as[(Long, Double)].collect().toMap
@@ -74,7 +74,7 @@ class SuperstepSpec extends AnyFunSuite {
     // 2 sweeps = colour phases 0, 1, 0, 1 (the run halts early only after
     // two quiet phases; the check below sees that it ran all four)
     val lpa = replanned(g.nodes.select($"vid", $"name".as("label")), 4) { (state, phase) =>
-      Lpa.lpaPhase(state, pairs, (phase - 1) % 2, numericNames = true).drop("changed")
+      Lpa.lpaPhase(state, pairs, lit((phase - 1) % 2), numericNames = true).drop("changed")
     }.as[(Long, String)].collect().toMap
     val ctx = new graft.bsp.LocalRunContext
     val gotLpa = Lpa.runSync(g, maxSweeps = 2, mode = "df", ctx = ctx)

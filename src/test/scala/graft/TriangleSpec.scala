@@ -32,7 +32,6 @@ class TriangleSpec extends AnyFunSuite {
   test("11-edge graph has 4 triangles (triangle_count.rs:139-168)") {
     val g = LinkGraph.fromNumericEdgeList(spark, eleven)
     assert(Triangles.count(g) == 4L)
-    assert(Triangles.count(g, useKCore = false) == 4L)
   }
 
   test("23-edge motif graph has 8 triangles (triangle_count.rs:170-208)") {
@@ -68,7 +67,8 @@ class TriangleSpec extends AnyFunSuite {
     for ((edges, want) <- Seq(eleven -> 4L, motif23 -> 8L)) {
       val g = LinkGraph.fromNumericEdgeList(spark, edges)
       assertParity(g, want)
-      assert(Triangles.count(g, useKCore = true) == want)
+      val core = g.subgraph(KCore.coreSet(g, 2))
+      try assert(Triangles.count(core) == want) finally core.unpersist()
     }
   }
 

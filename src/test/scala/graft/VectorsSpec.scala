@@ -98,6 +98,16 @@ class VectorsSpec extends AnyFunSuite {
     assert(top.forall(_.getAs[String]("kind") == "node"))
   }
 
+  test("edgesBySimilarity ranks an edge's own document first and returns only edges") {
+    val v = Vectors.vectorise(g, tpl)
+    val q = v.documents.filter(col("kind") === "edge" && col("src") === 0L && col("dst") === 2L)
+      .select("embedding").collect().head.getSeq[Double](0).toArray
+    val top = v.edgesBySimilarity(q, 10).collect()
+    assert((top.head.getAs[Long]("src"), top.head.getAs[Long]("dst")) == (0L, 2L))
+    assert(math.abs(top.head.getAs[Double]("score") - 1.0) < 1e-9)
+    assert(top.length == 4 && top.forall(_.getAs[String]("kind") == "edge"))
+  }
+
   test("similarity top-k is a distributed TakeOrdered, not a global window sort") {
     // the ranked search must compile to TakeOrderedAndProject (partial
     // per-partition top-k + one k-row merge); the rank window may only
