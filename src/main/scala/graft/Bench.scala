@@ -76,11 +76,7 @@ object Bench {
         g0
       }
       results("corpus_ingest") = tIngest
-      val p = cpus
-      val (csr, tCsr) = time {
-        val c = CsrGraph.fromLinkGraph(g, p)
-        c.blocks.count(); c
-      }
+      val (csr, tCsr) = time(g.inCsr)
       results("corpus_csr_pack") = tCsr
       val outDeg = CsrGraph.outDegrees(csr)
       // best-of-2: a single shot caught a ~23x host-noise phase in the r2
@@ -101,7 +97,6 @@ object Bench {
       extra("pagerank_edges_scattered_per_sec") = f"${scattered / tPr}%.0f"
       extra("corpus_nodes") = csr.nPresent.toString
       extra("corpus_edges") = csr.edgeCount.toString
-      csr.unpersist()
 
       val (_, tWcc1) = time { Wcc.run(g).count() }
       val (_, tWcc2) = time { Wcc.run(g).count() }

@@ -2006,7 +2006,7 @@ object Queries2 {
   /** MinHash → 4-band buckets → candidate pairs (optionally with exact
     * shingle Jaccard) in portable SQL. Band bucket = md5 of the
     * lexicographically sorted "seed:minhash" entries, comma-joined —
-    * byte-identical to Dedup.lshBuckets. */
+    * byte-identical to Dedup.lshBucketsWide. */
   /** Shared shingle CTE (`sh`) for the minhash oracles. */
   private val minhashShSql =
     """sh AS (

@@ -38,13 +38,11 @@ object Hits {
     else runDf(g, iterCount, tol, ctx)
   }
 
-  /** Forward CSR (in-neighbours per dst, gathers hub→recv_hub) and
-    * reversed CSR (out-neighbours per src, gathers auth→recv_auth): both
+  /** The graph's in-CSR (in-neighbours per dst, gathers hub→recv_hub)
+    * and out-CSR (out-neighbours per src, gathers auth→recv_auth): both
     * gathers run in the same superstep, one broadcast each. */
   private def runCsr(g: LinkGraph, iterCount: Int, tol: Double, ctx: RunContext): DataFrame = {
-    val p = g.spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val fwd = CsrGraph.fromLinkGraph(g, p)             // in-nbrs per dst
-    val rev = CsrGraph.reversedFromLinkGraph(g, p)     // out-nbrs per src
+    val (fwd, rev) = (g.inCsr, g.outCsr)
     val n = fwd.n
     val present = fwd.present
     val ones = Array.tabulate(n)(v => if (present(v)) 1.0 else 0.0)
@@ -78,7 +76,6 @@ object Hits {
       // tol = 0 disables early stopping
       Superstep.Next((newHub, newAuth), math.max(dH, dA), tol > 0 && dH <= tol && dA <= tol)
     }
-    fwd.unpersist(); rev.unpersist()
     CsrGraph.results(g, (hub, auth), "hub DOUBLE, auth DOUBLE") { case ((h, a), v) => Seq(h(v), a(v)) }
   }
 

@@ -8,7 +8,8 @@ import graft.bsp.{RunContext, Superstep}
 /** k-core: iteratively drop nodes whose count of surviving undirected
   * distinct neighbours is < k (raphtory/src/algorithms/cores/k_core.rs:40-101;
   * `deg >= k` survives). The alive-set shrinks monotonically, so the loop
-  * converges when the count stops changing. */
+  * converges when the count stops changing. Each level releases the set
+  * it replaced, so a run leaves only the returned set persisted. */
 object KCore {
 
   /** Returns the surviving node set as a DataFrame (vid). */
@@ -31,6 +32,7 @@ object KCore {
           .filter($"d" >= k).select($"a".as("vid"))
           .localCheckpoint(true)
         val c = next.count()
+        Superstep.release(alive) // the eager checkpoint no longer reads it
         Superstep.Next((next, c), (aliveCount - c).toDouble, c == aliveCount)
     }._1
     }

@@ -43,12 +43,11 @@ object PageRank {
     if (CsrGraph.useCsr(g, cfg.mode)) runCsr(g, cfg, ctx) else runDf(g, cfg, ctx)
   }
 
-  /** One Spark job per superstep: broadcast state, gather over dst-range
-    * CSR blocks (graft.graph.CsrGraph), stitch segments. */
+  /** One Spark job per superstep: broadcast state, gather over the
+    * graph's dst-range in-CSR blocks (LinkGraph.inCsr), stitch segments. */
   private def runCsr(g: LinkGraph, cfg: Config, ctx: RunContext): DataFrame = {
-    val csr = CsrGraph.fromLinkGraph(g, g.spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    val csr = g.inCsr
     val score = csrScores(csr, CsrGraph.outDegrees(csr), cfg, ctx)
-    csr.unpersist()
     CsrGraph.results(g, score, "score DOUBLE")((s, v) => Seq(s(v)))
   }
 

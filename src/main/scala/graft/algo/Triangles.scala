@@ -6,6 +6,7 @@ import org.apache.spark.sql.{functions}
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.HashPartitioner
 import graft.graph.{CsrBlock, CsrGraph, LinkGraph}
+import graft.bsp.CsrSuperstep
 
 /** Global triangle count with the reference's semantics
   * (raphtory/src/algorithms/motifs/triangle_count.rs:64-127): undirected,
@@ -38,8 +39,9 @@ object Triangles {
   /** Triangle count by sorted-adjacency intersection (HERO, SIGMOD'24)
     * over the undirected gather CSR, instead of materialising wedges:
     *
-    *  - the simple degree of every vertex (self-loop excluded) is stitched
-    *    from the blocks and broadcast (4n bytes);
+    *  - the simple degree of every vertex (self-loop excluded) is one
+    *    gather over the blocks (CsrSuperstep.gather), then broadcast (4n
+    *    bytes);
     *  - each block orients its lists u -> v iff (deg u, u) < (deg v, v),
     *    dropping self-loops; a filtered CsrBlock list stays ascending;
     *  - every out-list with two or more entries is shipped once to each
@@ -53,17 +55,15 @@ object Triangles {
     * vertices than partitions) own no vertex and receive nothing. */
   private[graft] def countCsr(csr: CsrGraph): Long = {
     val (n, parts) = (csr.n, csr.blocks.getNumPartitions)
-    val deg = new Array[Int](n)
-    csr.blocks.map { b =>
-      val d = new Array[Int](b.hi - b.lo)
+    val (deg, _) = CsrSuperstep.gather(csr, (), new Array[Int](_)) { (b, _, d) =>
       var i = 0
       while (i < d.length) {
         var j = b.offsets(i)
         while (j < b.offsets(i + 1)) { if (b.srcs(j) != b.lo + i) d(i) += 1; j += 1 }
         i += 1
       }
-      (b.lo, d)
-    }.collect().foreach { case (lo, d) => System.arraycopy(d, 0, deg, lo, d.length) }
+      0L
+    }
     val degB = csr.blocks.sparkContext.broadcast(deg)
     val oriented = csr.blocks.map(b => orient(b, degB.value))
     val shipped = oriented.flatMap { o =>

@@ -123,7 +123,8 @@ object Dedup {
   /** LSH band buckets from the wide signature form: (id, band, bucket),
     * `bands` bands of nHashes/bands rows — a pure projection (no shuffle).
     * Bucket id = md5 of the lexicographically sorted "seed:minhash"
-    * entries, comma-joined (byte-identical to the long-form definition). */
+    * entries, comma-joined (the encoding the d_lsh_candidates oracle SQL
+    * replays). */
   def lshBucketsWide(wide: DataFrame, idCol: String = "doc_id",
                      bands: Int = 4, nHashes: Int = 16): DataFrame = {
     // ONE canonical bucket-id encoding: delegate to bandBucketArray so
@@ -131,19 +132,6 @@ object Dedup {
     val sig = array((0 until nHashes).map(s => col(s"mh$s")): _*)
     wide.select(col(idCol),
       posexplode(bandBucketArray(sig, bands, nHashes)).as(Seq("band", "bucket")))
-  }
-
-  /** LSH band buckets over a long-form minhash signature table. */
-  def lshBuckets(signatures: DataFrame, idCol: String = "doc_id",
-                 bands: Int = 4, nHashes: Int = 16): DataFrame = {
-    val rows = nHashes / bands
-    signatures
-      .withColumn("band", (col("seed") / rows).cast("int"))
-      .groupBy(col(idCol), col("band"))
-      // band bucket id: md5 of the ordered minhash list
-      .agg(md5(concat_ws(",",
-        sort_array(collect_list(concat_ws(":", col("seed"), col("minhash"))))).cast("binary"))
-        .as("bucket"))
   }
 
   /** Candidate near-duplicate pairs: ids sharing any band bucket (a < b).

@@ -33,7 +33,7 @@ case class CsrBlock(lo: Int, hi: Int, offsets: Array[Int], srcs: Array[Int])
   * Beyond that, the shuffle-based DataFrame supersteps (PageRank.run /
   * Wcc.run DF path) take over; both modes share exact semantics.
   */
-class CsrGraph(
+class CsrGraph private[graph] (
     val n: Int,                       // id space size (max vid + 1)
     val nPresent: Int,                // actual node count
     val present: Array[Boolean],
@@ -153,7 +153,7 @@ object CsrGraph {
     * block, one Array[Long] per (input partition, block) crosses the
     * shuffle, and each block is one in-place sort of its longs
     * (DirectedAdjacency.csr) — so every list comes out ascending. */
-  def pack(pairs: DataFrame, n: Int, parts: Int): RDD[CsrBlock] =
+  private[graph] def pack(pairs: DataFrame, n: Int, parts: Int): RDD[CsrBlock] =
     pairs.rdd.mapPartitions { it =>
       val bufs = Array.fill(parts)(new scala.collection.mutable.ArrayBuilder.ofLong)
       it.foreach { r =>
@@ -168,13 +168,12 @@ object CsrGraph {
       Iterator(CsrBlock(lo, hi, offsets, srcs))
     }.persist(StorageLevel.MEMORY_AND_DISK)
 
-  /** Shared builder body: vid bound check, present bitmap, pack, edge
-    * count. One implementation — the three public builders differ only in
-    * the (gatherKey, neighbour) pair projection. An empty graph (no nodes,
-    * e.g. a window view over a dead time range) packs to a valid
-    * zero-vertex CsrGraph. Dense vids (node count = max vid + 1, every
-    * minted graph) need no bitmap collect. */
-  private def build(g: LinkGraph, parts: Int, pairs: DataFrame): CsrGraph = {
+  /** The one CSR builder (LinkGraph's three CSR memos call it): vid bound
+    * check, present bitmap, pack of the (gather key, neighbour) `pairs`,
+    * edge count. An empty graph (no nodes, e.g. a window view over a dead
+    * time range) packs to a valid zero-vertex CsrGraph. Dense vids (node
+    * count = max vid + 1, every minted graph) need no bitmap collect. */
+  private[graph] def build(g: LinkGraph, parts: Int, pairs: DataFrame): CsrGraph = {
     val spark = g.spark
     import spark.implicits._
     val f = g.nodeFacts
@@ -191,21 +190,6 @@ object CsrGraph {
     val m = blocks.map(_.srcs.length.toLong).fold(0L)(_ + _)
     new CsrGraph(n, f.count.toInt, present, blocks, m)
   }
-
-  /** Directed gather CSR (in-neighbours per dst) from deduped edges. */
-  def fromLinkGraph(g: LinkGraph, parts: Int): CsrGraph =
-    build(g, parts, g.dedupEdges.select(col("dst"), col("src")))
-
-  /** Reversed gather CSR: out-neighbours per src (= in-neighbours of the
-    * reversed graph). Used by gathers that pull along out-edges (HITS
-    * hub-from-auth). */
-  def reversedFromLinkGraph(g: LinkGraph, parts: Int): CsrGraph =
-    build(g, parts, g.dedupEdges.select(col("src"), col("dst")))
-
-  /** Undirected gather CSR (distinct BOTH-neighbours per vertex). Built
-    * once per graph by LinkGraph.undirectedCsr. */
-  private[graph] def undirectedFromLinkGraph(g: LinkGraph, parts: Int): CsrGraph =
-    build(g, parts, g.undirectedPairs.select(col("a"), col("b")))
 
   /** Per-source distinct out-degree as a dense array (gather blocks count
     * each (dst, src) once, so counting srcs across blocks gives the

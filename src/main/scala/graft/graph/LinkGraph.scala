@@ -226,11 +226,13 @@ class LinkGraph(
   // shuffle); nearly every structural algorithm starts from them, so each
   // is built once per graph instance as a `Superstep.staticTable` and kept
   // until unpersist() — the analogue of the reference's materialised
-  // per-node adjacency lists (node_store.rs:176-199).
+  // per-node adjacency lists (node_store.rs:176-199). The gather CSRs
+  // packed from them are memoized the same way: each lives until
+  // unpersist() or, once the graph is dropped, the context cleaner.
   @transient private var dedupCache: graft.bsp.Superstep.Static = _
   @transient private var undirectedCache: graft.bsp.Superstep.Static = _
   @transient private var factsCache: NodeFacts = _
-  @transient private var csrCache: CsrGraph = _
+  @transient private lazy val csrCache = scala.collection.mutable.Map.empty[String, CsrGraph]
   @transient private var adjCache: DirectedAdjacency = _
 
   /** Distinct directed (src, dst) pairs — the adjacency after multi-edge
@@ -272,14 +274,23 @@ class LinkGraph(
     factsCache
   }
 
-  /** The undirected gather CSR (one block per shuffle partition at the
-    * first call) that WCC, CSR sync-LPA and the triangle count share.
-    * Packed once per graph; released by unpersist(). */
-  def undirectedCsr: CsrGraph = synchronized {
-    if (csrCache == null)
-      csrCache = CsrGraph.undirectedFromLinkGraph(this,
-        spark.conf.get("spark.sql.shuffle.partitions").toInt)
-    csrCache
+  /** The directed gather CSR: each vertex's distinct in-neighbours, which
+    * CSR PageRank and HITS's authority gather read. */
+  def inCsr: CsrGraph = csrMemo("in", dedupEdges.select(col("dst"), col("src")))
+
+  /** The reversed gather CSR: each vertex's distinct out-neighbours, which
+    * HITS's hub gather reads. */
+  def outCsr: CsrGraph = csrMemo("out", dedupEdges.select(col("src"), col("dst")))
+
+  /** The undirected gather CSR (distinct BOTH-neighbours per vertex) that
+    * WCC, CSR sync-LPA and the triangle count share. */
+  def undirectedCsr: CsrGraph = csrMemo("undirected", undirectedPairs.select(col("a"), col("b")))
+
+  /** The CSR of the (gather key, neighbour) `pairs`, packed at the first
+    * call into one block per shuffle partition; released by unpersist(). */
+  private def csrMemo(kind: String, pairs: => DataFrame): CsrGraph = synchronized {
+    csrCache.getOrElseUpdate(kind,
+      CsrGraph.build(this, spark.conf.get("spark.sql.shuffle.partitions").toInt, pairs))
   }
 
   /** The driver-side directed adjacency, collected once per graph (callers
@@ -342,7 +353,7 @@ class LinkGraph(
     edges.unpersist(); nodes.unpersist()
     if (dedupCache != null) { dedupCache.df.unpersist(); dedupCache = null }
     if (undirectedCache != null) { undirectedCache.df.unpersist(); undirectedCache = null }
-    if (csrCache != null) { csrCache.unpersist(); csrCache = null }
+    csrCache.values.foreach(_.unpersist()); csrCache.clear()
     adjCache = null
     factsCache = null
   }

@@ -58,33 +58,17 @@ object ScalingCheck {
     val edges = s.range(0, nodes, 1, cores * 4).flatMap { i =>
       graft.io.Corpus.linkTargets(i, k, 42L).map(j => (i, j))
     }.toDF("src", "dst")
-    val best: Seq[Double] =
-      if (mode == "csr") {
-        val csr = graft.graph.CsrGraph.pack(edges.select($"dst", $"src"), nodes.toInt, cores)
-        val m = csr.map(_.srcs.length.toLong).fold(0L)(_ + _)
-        val present = Array.fill(nodes.toInt)(true)
-        val cg = new graft.graph.CsrGraph(nodes.toInt, nodes.toInt, present, csr, m)
-        val outDeg = graft.graph.CsrGraph.outDegrees(cg)
-        (1 to rounds).map { r =>
-          val ctx = new graft.bsp.LocalRunContext
-          PageRank.csrScores(cg, outDeg, PageRank.Config(iterCount = iters, tol = 0.0), ctx)
-          val stepsSec = ctx.stats.map(_.wallMs).sum / 1e3
-          val rate = m.toDouble * iters / stepsSec
-          println(f"SCALING mode=csr cores=$cores round=$r steps=$stepsSec%.1f rate=$rate%.0f")
-          rate
-        }
-      } else {
-        val g = LinkGraph.fromRawEdges(edges)
-        val m = g.edgeCount
-        (1 to rounds).map { r =>
-          val ctx = new graft.bsp.LocalRunContext
-          PageRank.run(g, PageRank.Config(iterCount = iters, tol = 0.0, mode = "df"), ctx).count()
-          val stepsSec = ctx.stats.map(_.wallMs).sum / 1e3
-          val rate = m.toDouble * iters / stepsSec
-          println(f"SCALING cores=$cores round=$r steps=$stepsSec%.1f rate=$rate%.0f")
-          rate
-        }
-      }
+    val g = LinkGraph.fromRawEdges(edges)
+    val m = g.edgeCount
+    val label = if (mode == "csr") "mode=csr " else ""
+    val best = (1 to rounds).map { r =>
+      val ctx = new graft.bsp.LocalRunContext
+      PageRank.run(g, PageRank.Config(iterCount = iters, tol = 0.0, mode = mode), ctx).count()
+      val stepsSec = ctx.stats.map(_.wallMs).sum / 1e3
+      val rate = m.toDouble * iters / stepsSec
+      println(f"SCALING ${label}cores=$cores round=$r steps=$stepsSec%.1f rate=$rate%.0f")
+      rate
+    }
     s.stop()
     best
   }

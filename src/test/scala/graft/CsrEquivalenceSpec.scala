@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.graph.{CsrGraph, LinkGraph}
+import graft.graph.LinkGraph
 import graft.io.Corpus
 import graft.algo.{Hits, Lpa, PageRank, Wcc}
 
@@ -97,12 +97,26 @@ class CsrEquivalenceSpec extends AnyFunSuite {
   }
 
   test("every CSR block lists strictly ascending srcs") {
-    for (graph <- Seq(g, gap)) {
-      val directed = CsrGraph.fromLinkGraph(graph, 4)
-      for ((what, csr) <- Seq("undirectedCsr" -> graph.undirectedCsr, "fromLinkGraph" -> directed);
-           b <- csr.blocks.collect(); i <- 0 until b.hi - b.lo; k <- b.offsets(i) + 1 until b.offsets(i + 1))
-        assert(b.srcs(k - 1) < b.srcs(k), s"$what: the list of vertex ${b.lo + i} is not ascending")
-      directed.unpersist()
-    }
+    for (graph <- Seq(g, gap);
+         (what, csr) <- Seq("undirectedCsr" -> graph.undirectedCsr, "inCsr" -> graph.inCsr,
+           "outCsr" -> graph.outCsr);
+         b <- csr.blocks.collect(); i <- 0 until b.hi - b.lo; k <- b.offsets(i) + 1 until b.offsets(i + 1))
+      assert(b.srcs(k - 1) < b.srcs(k), s"$what: the list of vertex ${b.lo + i} is not ascending")
+  }
+
+  test("a second CSR PageRank or HITS run on a graph packs no CSR again") {
+    import spark.implicits._
+    val edges = spark.range(0, 200, 1, 4).flatMap { i =>
+      Corpus.linkTargets(i, 4, 11L).map(j => (i, j))
+    }.toDF("src", "dst")
+    val fresh = LinkGraph.fromRawEdges(edges)
+    fresh.nodeFacts; fresh.dedupEdges
+    def jobs(run: => org.apache.spark.sql.DataFrame) = TestSpark.jobsIn(run.collect())._2
+    val cfg = PageRank.Config(mode = "csr")
+    val (pr1, pr2) = (jobs(PageRank.run(fresh, cfg)), jobs(PageRank.run(fresh, cfg)))
+    assert(pr2 < pr1, s"PageRank ran $pr1 then $pr2 jobs")
+    val (h1, h2) = (jobs(Hits.run(fresh, mode = "csr")), jobs(Hits.run(fresh, mode = "csr")))
+    assert(h2 < h1, s"HITS ran $h1 then $h2 jobs")
+    fresh.unpersist()
   }
 }

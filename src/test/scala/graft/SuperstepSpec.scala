@@ -6,7 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
-import graft.algo.{Components, Lpa, PageRank, Pathing, Wcc}
+import graft.algo.{Components, KCore, Lpa, PageRank, Pathing, Wcc}
 import graft.bsp.IterativeConf
 import graft.graph.LinkGraph
 
@@ -14,7 +14,7 @@ import graft.graph.LinkGraph
   * once; these runs of 3+ steps must equal a loop that plans every step
   * afresh from the same fragments (a compiled plan that reused an earlier
   * step's shuffle output would repeat that step's messages). The sparse
-  * BFS loops release each level's replaced checkpoints. */
+  * BFS loops and the k-core peel release each level's replaced checkpoints. */
 class SuperstepSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -96,11 +96,18 @@ class SuperstepSpec extends AnyFunSuite {
   test("sssp and outComponentOf leave persisted only the RDDs their results read") {
     val g = graph(3000, 3, 47L)
     g.nodes.count(); g.dedupTable; g.pairTable
+    // a 5-clique with a 20-node path tail: the 2-core peels the tail one
+    // node per level, so the run replaces 20 alive sets (many, so that
+    // the context cleaner cannot have dropped every leaked one)
+    val clique = for (a <- 0L to 4L; b <- a + 1 to 4L) yield (a, b, 0L)
+    val tailed = LinkGraph.fromNumericEdgeList(spark, clique ++ (4L to 23L).map(i => (i, i + 1, 0L)))
+    tailed.pairTable
     val sc = spark.sparkContext
     for ((name, run) <- Seq[(String, () => DataFrame)](
         "sssp" -> (() => Pathing.sssp(g, "0", cutoff = 6)),
         "sssp(no paths)" -> (() => Pathing.sssp(g, "0", withPaths = false)),
-        "outComponentOf" -> (() => Components.outComponentOf(g, "2999")))) {
+        "outComponentOf" -> (() => Components.outComponentOf(g, "2999")),
+        "kcore" -> (() => KCore.coreSet(tailed, 2)))) {
       val before = sc.getPersistentRDDs.keySet
       val res = run()
       assert(res.count() > 1, name)
@@ -108,7 +115,7 @@ class SuperstepSpec extends AnyFunSuite {
       val read = rddsRead(res)
       assert(left.subsetOf(read), s"$name left ${(left -- read).size} persisted RDDs its result does not read")
     }
-    g.unpersist()
+    g.unpersist(); tailed.unpersist()
   }
 
   test("DF PageRank (6 steps) and catalog WCC keep only the checkpoints their results read") {

@@ -115,7 +115,19 @@ class TriangleSpec extends AnyFunSuite {
     assert(sc.getPersistentRDDs.contains(csr.blocks.id))
     assert(Triangles.count(g) == 8L)
     assert(g.undirectedCsr eq csr)
+    // CSR PageRank reads the in-CSR, HITS the in- and out-CSRs: each is
+    // packed once and read again on reuse
+    graft.algo.PageRank.run(g, graft.algo.PageRank.Config(mode = "csr")).collect()
+    val in = g.inCsr
+    graft.algo.Hits.run(g, mode = "csr").collect()
+    val out = g.outCsr
+    graft.algo.PageRank.run(g, graft.algo.PageRank.Config(mode = "csr")).collect()
+    graft.algo.Hits.run(g, mode = "csr").collect()
+    assert((g.inCsr eq in) && (g.outCsr eq out) && (g.undirectedCsr eq csr))
+    val blocks = Seq(csr, in, out).map(_.blocks.id)
+    assert(blocks.forall(sc.getPersistentRDDs.contains), "a CSR memo is not persisted")
     g.unpersist()
+    assert(!blocks.exists(sc.getPersistentRDDs.contains), "a CSR memo survived unpersist()")
     val left = sc.getPersistentRDDs.keySet -- before
     assert(left.isEmpty, s"persisted RDDs left after unpersist: $left")
   }
