@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.graph.{CsrGraph, LinkGraph}
 import graft.bsp.LocalRunContext
 import graft.algo.{PageRank, Triangles, Wcc}
@@ -35,22 +34,6 @@ import graft.io.Corpus
   */
 object Bench {
 
-  private def session(cores: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-bench-$cores")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // tmpfs shuffle dirs: /tmp is a spinning disk here and serialises
-      // concurrent shuffle writers (cluster analogue: per-node NVMe)
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
   private def time[T](f: => T): (T, Double) = {
     val t0 = System.nanoTime()
     val r = f
@@ -68,7 +51,7 @@ object Bench {
     val fullOnly = scala.collection.mutable.LinkedHashMap.empty[String, String]
 
     // ---- part 1: corpus pipeline at the reference bench scale ----
-    val spark = session(cpus)
+    val spark = SparkEntry.session(s"local[$cpus]", cpus)
     locally {
       val (g, tIngest) = time {
         val g0 = LinkGraph.fromPages(Corpus.pages(spark, benchPages, 4).toDF()).cache()

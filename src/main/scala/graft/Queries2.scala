@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.graph.LinkGraph
-import graft.algo.{Components, Hits, Lpa, Metrics, PageRank, Pathing, ResultOps, RichClub, Wcc}
+import graft.algo.{Components, Hits, Lpa, Metrics, PageRank, Pathing, RichClub, Wcc}
 import graft.dedup.Dedup
 import graft.sim.Ann
 import graft.text.TextOps

@@ -28,4 +28,24 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Queries.all ++ Queries2.all
 
   def oracleSql: Map[String, String] = Queries.oracles ++ Queries2.oracles
+
+  /** The session every main and the test suite run on: `master` with
+    * `partitions` shuffle partitions, UTC, no UI, AQE on (the superstep
+    * loops scope it off), WARN logging; `extra` confs are set last. */
+  def session(master: String, partitions: Int, extra: (String, String)*): SparkSession = {
+    val b = SparkSession.builder().master(master)
+      .config("spark.sql.shuffle.partitions", partitions.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      // tmpfs shuffle dirs: concurrent shuffle writers serialise on a
+      // spinning-disk /tmp (cluster analogue: per-node NVMe)
+      .config("spark.local.dir", "/dev/shm/graft-spark")
+      .config("spark.sql.adaptive.enabled", "true")
+      // the default 100 entries evict the compiled superstep stages between
+      // steps: 106 recompiles in a steady superstep_df run at 100, 0 at 200
+      .config("spark.sql.codegen.cache.maxEntries", "200")
+    val s = extra.foldLeft(b) { case (b, (k, v)) => b.config(k, v) }.getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
 }

@@ -35,14 +35,7 @@ object Verify {
     val Array(sfDir, outDir) = args
     System.setProperty("graft.isVerify", "1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session(s"local[$cpus]", cpus.toInt)
     new java.io.File(outDir).mkdirs()
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     var nFailed = 0

@@ -15,7 +15,7 @@ import graft.bsp.{DriverGuard, RunContext, Superstep}
   *    emission-order indices — partition-equal, label-arbitrary).
   *  - `inComponentOf` / `outComponentOf` — the ancestor / descendant set of
   *    one node (components/in_components.rs:106, out_components.rs:109) as
-  *    a distributed frontier closure (the same step as sssp's).
+  *    a distributed frontier closure (the same program as sssp's).
   *  - `inComponents` / `outComponents` — per-node ancestor/descendant sets
   *    for all nodes (in_components.rs:36-105). Output is O(n²) — guard
   *    bounded like the reference's single-process BFS-per-node, but the
@@ -105,7 +105,7 @@ object Components {
                   "pivot rounds; raise graft.driver.maxElements or pre-partition the graph")
             val pv = alive.agg(min($"vid")).head().getLong(0)
             val pivot = Seq(pv).toDF("vid")
-            def reach(e: DataFrame) = Superstep.withStatic(e, "src")(closure(_, pivot))
+            def reach(e: DataFrame) = Superstep.withStatic(e, "src")(closure(_, alive, pivot))
             val comp = reach(eA)
               .join(reach(eA.select($"dst".as("src"), $"src".as("dst"))), Seq("vid"), "left_semi")
               .localCheckpoint(true)
@@ -191,23 +191,17 @@ object Components {
   private def componentOf(g: LinkGraph, source: String, e: Superstep.Static): DataFrame = {
     val src = g.nodes.filter(col("name") === source).select(col("vid"))
     val seeds = src.join(e.df, src("vid") === e.df("src")).select(col("dst").as("vid")).distinct()
-    closure(e, seeds).join(g.nodes, Seq("vid")).select(col("vid"), col("name"))
+    closure(e, g.nodes.select(col("vid")), seeds).join(g.nodes, Seq("vid")).select(col("vid"), col("name"))
   }
 
-  /** BFS closure: every node reachable from `seeds` (vid) in zero or more
-    * hops over the static (src, dst) table `edges`, seeds included —
-    * `Pathing.bfs` with the frontier step. One job per level: the frontier
-    * count materialises its lazy checkpoint, and the lazy visited union
-    * materialises inside the next level's job (so the result never reads
-    * `edges` after the last level). */
-  private def closure(edges: Superstep.Static, seeds: DataFrame): DataFrame =
-    graft.bsp.IterativeConf.withStablePartitioning(edges.df.sparkSession) {
-      val p = edges.df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-      val init = seeds.repartition(p, col("vid")).localCheckpoint(false)
-      Pathing.bfs("closure", edges.rows, Long.MaxValue, init, eager = false) { (frontier, visited, _) =>
-        Pathing.frontierStep(frontier, visited, edges.df).select(col("vid"))
-      }
-    }
+  /** BFS closure: every key of `keys` reachable from the distinct `seeds`
+    * (vid) in zero or more hops over the static (src, dst) table `edges`,
+    * seeds included — the frontier program on the superstep driver, one
+    * job per level. Returns (vid). */
+  private def closure(edges: Superstep.Static, keys: DataFrame, seeds: DataFrame): DataFrame =
+    Superstep.dataFrame("closure", RunContext.none, edges)(
+      Pathing.frontierProgram(keys, seeds, Long.MaxValue, "src", "dst"))
+      .filter(col("dist").isNotNull).select(col("vid"))
 
   /** All-nodes ancestor (dir="in") or descendant (dir="out") sets:
     * (vid, name, members: array of member names, sorted by vid). */

@@ -1,6 +1,7 @@
 package graft.algo
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.graph.LinkGraph
@@ -29,30 +30,19 @@ object Pathing {
 
   /** Returns (vid, name, dist, path) for reached nodes only.
     *
-    * Superstep state is (vid, dist, parent) — O(1) per node, no name-path
-    * arrays shuffled per level — and each level is one `frontierStep`
-    * (shared with Components' closures). Paths materialise once at the
-    * end: level-by-level parent joins over the result set only (≤ depth
-    * joins total). */
+    * The levels are the frontier program over the undirected pair table:
+    * O(1) state per node (no name-path arrays shuffled per level). Paths
+    * materialise once at the end: level-by-level parent joins over the
+    * result set only (≤ depth joins total). */
   def sssp(g: LinkGraph, source: String, cutoff: Long = Long.MaxValue,
            withPaths: Boolean = true): DataFrame = {
     val spark = g.spark
     import spark.implicits._
     graft.bsp.IterativeConf.withStablePartitioning(spark) {
-    val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val pairs = g.pairTable
-    val src = g.nodes.filter($"name" === source)
-      .select($"vid", lit(0L).as("dist"), lit(null).cast("long").as("parent"))
-      .repartition(p, $"vid").localCheckpoint(true)
-    // NOTE: this loop deliberately keeps EAGER checkpoints. The lazy-
-    // checkpoint fusion that pays off in Components.closure and
-    // temporallyReachableNodes was measured here too (interleaved sf0.1
-    // probes) and came out ~15% SLOWER: the lazy union materialises
-    // inside the next level's anti-join build side, serialising the
-    // checkpoint write into the critical join job, while the eager trio's
-    // two extra actions (a count of the cached level + a union copy of
-    // two cached RDDs) are near-free at any frontier size.
-    val reached = bfs("sssp", pairs.rows, cutoff, src, eager = true)(ssspStep(_, _, pairs.df, _))
+    val seeds = g.nodes.filter($"name" === source).select($"vid")
+    val state = Superstep.dataFrame("sssp", RunContext.none, g.pairTable)(
+      frontierProgram(g.nodes.select($"vid"), seeds, cutoff, "a", "b"))
+    val reached = state.filter($"dist".isNotNull).select($"vid", $"dist", $"parent")
     if (!withPaths) reached.join(g.nodes, Seq("vid")).select($"vid", $"name", $"dist")
     else {
       // path reconstruction: each reached node has exactly one (min-vid)
@@ -60,7 +50,11 @@ object Pathing {
       val named = reached.join(g.nodes, Seq("vid"))
         .select($"vid", $"name", $"dist", $"parent").localCheckpoint(false)
       val maxRow = named.agg(max($"dist")).head() // materialises the checkpoint
-      Superstep.release(reached)
+      // nothing reads the final state's checkpoint any more
+      state.queryExecution.logical.collectLeaves().foreach {
+        case l: LogicalRDD => l.rdd.unpersist(blocking = false)
+        case _ =>
+      }
       val maxDist = if (maxRow.isNullAt(0)) -1L else maxRow.getLong(0)
       val root = named.filter($"dist" === 0L).select($"vid", array($"name").as("path"))
       // lazy: each level's checkpoint materialises inside the next
@@ -77,57 +71,44 @@ object Pathing {
     }
   }
 
-  /** One sssp level: `frontierStep` with `dist = level`. */
-  private[graft] def ssspStep(frontier: DataFrame, reached: DataFrame,
-                              pairs: DataFrame, level: Long): DataFrame =
-    frontierStep(frontier, reached, pairs.select(col("a").as("src"), col("b").as("dst")))
-      .select(col("vid"), lit(level).as("dist"), col("parent"))
+  /** The frontier program (sssp and Components' closures): level-
+    * synchronous BFS from `seeds` over the static table `edges`, read as
+    * (`src`, `dst`). The state is one frame over every key of `keys`,
+    * (vid, dist, parent, fresh): a reached row holds its level and its
+    * least-vid parent (null for a seed, at dist 0), an unreached row null
+    * dist and parent, and `fresh` marks the rows the last step reached
+    * (the seeds before the first). A step scatters from the fresh rows
+    * only, so each row scatters once; the run halts when a step reaches
+    * no row, or after `maxSteps` levels. `seeds` must be distinct. */
+  private[graft] def frontierProgram(keys: DataFrame, seeds: DataFrame, maxSteps: Long,
+                                     src: String, dst: String)(edges: DataFrame, m: Long): Superstep.Dense =
+    Superstep.Dense(
+      // joined shuffled-hash (no broadcast job): the first step's job builds it
+      init = keys.join(seeds.select(col("vid"), lit(true).as("seed")).hint("shuffle_hash"),
+          Seq("vid"), "left")
+        .select(col("vid"), when(col("seed"), lit(0L)).as("dist"), lit(null).cast("long").as("parent"),
+          coalesce(col("seed"), lit(false)).as("fresh")),
+      maxSteps = maxSteps,
+      step = frontierStep(_, edges, src, dst),
+      aggs = Seq(count(when(col("fresh"), 1))),
+      halt = (r, _) => r.getLong(0) == 0)
 
-  /** Level-synchronous BFS on the superstep driver (sssp and
-    * Components.closure): `init` is the visited set and first frontier,
-    * level l is `step(frontier, visited, l)`, checkpointed eagerly or
-    * lazily; an empty level halts. Returns the visited set.
-    *
-    * Each level's count materialises its frontier and the visited set it
-    * read, after which nothing reads the previous visited set nor this
-    * level's input frontier: both are released then, so a run leaves only
-    * the returned set (and `init`, which the caller owns when it is the
-    * result) persisted. */
-  private[graft] def bfs(algo: String, m: Long, maxLevel: Long, init: DataFrame, eager: Boolean)(
-      step: (DataFrame, DataFrame, Int) => DataFrame): DataFrame = {
-    var replaced = Option.empty[DataFrame] // read only by the visited set not yet materialised
-    val (visited, frontier) =
-      Superstep.loop(algo, RunContext.none, m, 1, maxLevel, (init, init)) { case ((visited, frontier), l) =>
-        val next = step(frontier, visited, l).localCheckpoint(eager)
-        val n = next.count()
-        replaced.foreach(Superstep.release)
-        if (frontier ne visited) Superstep.release(frontier)
-        if (n == 0) {
-          replaced = None
-          Superstep.release(next)
-          Superstep.Next((visited, next), 0.0, halt = true)
-        } else {
-          replaced = Some(visited)
-          Superstep.Next((visited.union(next).localCheckpoint(eager), next), n.toDouble, halt = false)
-        }
-      }
-    // stopped by maxLevel: an eager last union no longer reads its inputs
-    if (eager) (replaced.toSeq :+ frontier).filter(_ ne visited).foreach(Superstep.release)
-    visited
+  /** One frontier level (PlanSpec audits this fragment): the fresh rows
+    * join `edges` on `src` (co-partitioned and shuffled-hash, so no
+    * exchange), one hash aggregate per `dst` takes the least-vid parent
+    * and the frontier's dist + 1 (the step's one exchange; a hash
+    * aggregate, not a window), and the state left-joins it shuffled-hash
+    * on vid: an unreached row with a candidate takes it and turns fresh,
+    * every other row keeps its values with fresh = false. */
+  private[graft] def frontierStep(state: DataFrame, edges: DataFrame, src: String, dst: String): DataFrame = {
+    val fresh = state.filter(col("fresh"))
+    val cand = fresh.hint("shuffle_hash").join(edges, fresh("vid") === edges(src))
+      .groupBy(edges(dst)).agg(min(fresh("vid")).as("from"), (min(fresh("dist")) + 1).as("level"))
+    val reached = state("dist").isNull && cand("level").isNotNull
+    state.join(cand.hint("shuffle_hash"), state("vid") === cand(dst), "left")
+      .select(state("vid"), coalesce(state("dist"), cand("level")).as("dist"),
+        when(reached, cand("from")).otherwise(state("parent")).as("parent"), reached.as("fresh"))
   }
-
-  /** The frontier (sparse BFS) step: frontier ⋈ edges → least-vid
-    * parent per target (a hash aggregate, not a window) → anti-join with
-    * the visited set; returns (vid, parent) for the newly reached.
-    * `edges` is the static (src, dst) table hash-partitioned on src. Both
-    * joins are shuffled-hash, so the cached table is never re-sorted, and
-    * the anti-join runs above the aggregate: below it, it re-shuffled the
-    * whole table per level (PlanSpec-locked). */
-  private[graft] def frontierStep(frontier: DataFrame, visited: DataFrame,
-                                  edges: DataFrame): DataFrame =
-    frontier.hint("shuffle_hash").join(edges, frontier("vid") === edges("src"))
-      .groupBy(edges("dst").as("vid")).agg(min(frontier("vid")).as("parent"))
-      .join(visited.select("vid").hint("shuffle_hash"), Seq("vid"), "left_anti")
 
   /** Driver-side Dijkstra. direction: "out" | "in" | "both". Returns
     * (target, cost, path). Weight column defaults to 1.0 per event. */
@@ -229,8 +210,15 @@ object Pathing {
     var state = g.nodes.filter($"name" === source)
       .select($"vid", lit(0.0).as("dist")).localCheckpoint(false)
     var bucket = if (state.count() == 0) -1L else 0L
+    var stateCk = state // the checkpoint `state` reads
     var outer = 0L
     while (bucket >= 0) {
+      // this bucket's checkpoints and the state it starts from: a count
+      // cuts the lineage of only the first lazily checkpointed frame it
+      // reaches, so the inner loop's counts cut their frontiers alone and
+      // the state reads every earlier relaxation until the bucket's last
+      // job cuts it; then all of them but the state's are released
+      val made = scala.collection.mutable.ArrayBuffer(stateCk)
       outer += 1
       var inner = 0L
       if (outer > maxBuckets) throw new IllegalStateException(
@@ -242,6 +230,7 @@ object Pathing {
       // buckets are settled), so the frontier filter is dist < hi
       var frontier = state.filter($"dist" >= lo && $"dist" < hi).localCheckpoint(false)
       var fCount = frontier.count()
+      made += frontier
       while (fCount > 0) {
         // Adaptive batching: the FIRST relaxation of a bucket runs alone —
         // most buckets settle in one round (default delta = mean weight),
@@ -263,15 +252,19 @@ object Pathing {
         frontier = merged.filter($"improved" && $"dist" < hi)
           .select($"vid", $"dist").localCheckpoint(false)
         fCount = frontier.count() // one job: materialises m1 + merged + frontier
+        made ++= Seq(m1, merged, frontier)
+        stateCk = merged
         state = merged.select($"vid", $"dist")
       }
       // heavy edges fire once per settled bucket; then jump to the next
       // non-empty bucket (one agg job also materialises the heavy merge)
       if (heavy.rows > 0) {
         val bNodes = state.filter($"dist" >= lo && $"dist" < hi)
-        state = deltaRelax(bNodes, heavy.df, state).select($"vid", $"dist").localCheckpoint(false)
+        stateCk = deltaRelax(bNodes, heavy.df, state).select($"vid", $"dist").localCheckpoint(false)
+        state = stateCk
       }
       val nextRow = state.agg(min(when($"dist" >= hi, floor($"dist" / d0).cast("long")))).head()
+      made.filter(_ ne stateCk).foreach(Superstep.release)
       // max(_, bucket+1): dist/d0 can round down across the hi boundary
       bucket = if (nextRow.isNullAt(0)) -1L else math.max(nextRow.getLong(0), bucket + 1)
     }

@@ -10,10 +10,6 @@ import org.apache.spark.sql.functions._
   * (SURVEY §2.5). */
 object ResultOps {
 
-  /** get(name) — the value row for one node. */
-  def get(res: DataFrame, name: String): DataFrame =
-    res.filter(col("name") === name)
-
   /** sort_by_node_name / sort_by_value. */
   def sortByNode(res: DataFrame, reverse: Boolean = false): DataFrame =
     res.orderBy(if (reverse) desc("name") else asc("name"))
@@ -31,12 +27,9 @@ object ResultOps {
     sortByValue(res, valueCol, reverse).limit(limit)
   }
 
-  /** min_by / max_by / median (by value). */
+  /** min_by / median (by value). */
   def minBy(res: DataFrame, valueCol: String): DataFrame =
     sortByValue(res, valueCol, reverse = false).limit(1)
-
-  def maxBy(res: DataFrame, valueCol: String): DataFrame =
-    sortByValue(res, valueCol, reverse = true).limit(1)
 
   def median(res: DataFrame, valueCol: String): DataFrame =
     res.agg(percentile_approx(col(valueCol), lit(0.5), lit(100000)).as("median"))

@@ -787,12 +787,6 @@ object Cypher {
     }
   }
 
-  def parse(text: String): Query = {
-    val (qs, _) = new Parser(tokenize(text)).queryList()
-    require(qs.length == 1, "parse() is single-query; use run() for UNION queries")
-    qs.head
-  }
-
   // ---------- planner: Query -> DataFrame ----------
 
   def run(g: LinkGraph, text: String): DataFrame = run(g, text, Map.empty[String, Any])
@@ -812,7 +806,7 @@ object Cypher {
     if (qs.length > 1 && !all) combined.dropDuplicates() else combined
   }
 
-  def plan(g: LinkGraph, q: Query, params: Map[String, Any] = Map.empty): DataFrame = {
+  private def plan(g: LinkGraph, q: Query, params: Map[String, Any]): DataFrame = {
     var fresh = 0
     val synth = scala.collection.mutable.Set.empty[String]
     def freshEdge(): String = { fresh += 1; val n = s"_e$fresh"; synth += n; n }

@@ -85,8 +85,6 @@ object Corpus {
     spark.range(0, n, 1, parts).map(i => page(i, k, seed))
   }
 
-  /** Named sizes from FIXTURES.md §A. */
-  def tiny(spark: SparkSession): Dataset[Page]  = pages(spark, 120L, 2)
-  def small(spark: SparkSession): Dataset[Page] = pages(spark, 5000L, 4)
-  def bench(spark: SparkSession): Dataset[Page] = pages(spark, 500000L, 4)
+  /** The unit-test size from FIXTURES.md §A. */
+  def tiny(spark: SparkSession): Dataset[Page] = pages(spark, 120L, 2)
 }

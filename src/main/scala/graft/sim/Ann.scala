@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   *
   *  - `bruteForceTopK` — exact cosine top-k: the correctness baseline.
   *    Query×candidate join, codegen'd higher-order-function dot products.
-  *  - `lshBuckets` / `annTopK` — random-hyperplane LSH: deterministic
+  *  - `lshTableBuckets` / `annTopK` — random-hyperplane LSH: deterministic
   *    md5-derived hyperplanes, `planes`-bit bucket signatures, search
   *    restricted to same-bucket candidates (multi-probe over Hamming-1
   *    neighbours optional). The scale path: bucketing is one hash
@@ -22,7 +22,7 @@ object Ann {
     * identical to the HOF formulation, so results are bit-equal. Callers
     * must have VectorFunctions.register'd the session (the public entry
     * points below do). */
-  def dot(a: Column, b: Column): Column =
+  private def dot(a: Column, b: Column): Column =
     graft.functions.VectorFunctions.dot_product(a, b)
 
   def cosine(a: Column, b: Column): Column =
@@ -71,23 +71,14 @@ object Ann {
   private def vecDims(emb: DataFrame, vecCol: String): Int =
     emb.select(size(col(vecCol))).head().getInt(0)
 
-  /** LSH bucket per vector: `planes`-bit signature of hyperplane signs.
-    * Returns (id, bucket).
-    *
-    * Each projection is a codegen'd sequential dot product against a
-    * literal plane vector — a pure per-row projection (NO shuffle, unlike
-    * an explode+groupBy formulation) whose float summation order is fixed
-    * (index order), so bucket assignment is deterministic and
-    * oracle-reproducible. */
-  def lshBuckets(emb: DataFrame, planes: Int = 12,
-                 idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    lshTableBuckets(emb, planes, 1, idCol, vecCol).drop("table")
-
   /** Multi-table LSH buckets: `tables` independent `planes`-bit signatures
-    * per vector, one row per (id, table, bucket). Plane (t, p) uses the
-    * global plane index t·planes + p, so tables = 1 reproduces the
-    * single-table weights exactly. Still a pure projection + one narrow
-    * explode — no shuffle.
+    * of hyperplane signs per vector, one row per (id, table, bucket). Plane
+    * (t, p) uses the global plane index t·planes + p. Each projection is a
+    * codegen'd sequential dot product against a literal plane vector — a
+    * pure per-row projection plus one narrow explode (NO shuffle, unlike an
+    * explode+groupBy formulation) whose float summation order is fixed
+    * (index order), so bucket assignment is deterministic and
+    * oracle-reproducible.
     *
     * The plane matrix ships as ONE array-of-arrays literal indexed with
     * element_at (constant-folded to one ArrayData constant per plane) —

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.graph.LinkGraph
 import graft.algo.PageRank
 import graft.bsp.{IterativeConf, RunContext, Superstep}
@@ -15,11 +14,7 @@ import graft.bsp.{IterativeConf, RunContext, Superstep}
   *   sbt "runMain graft.tools.PlanCheck" */
 object PlanCheck {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.session("local[8]", 8)
     import spark.implicits._
 
     val n = 200000L

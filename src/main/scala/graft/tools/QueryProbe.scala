@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Run one driver query N times against an sf dir and print per-run wall —
   * the quick feedback loop for leg-level optimisation without a full Bench
   * pass. Usage: runMain graft.tools.QueryProbe <sfDir> <name> [runs=3]. */
@@ -11,14 +9,7 @@ object QueryProbe {
     val name = args(1)
     val runs = if (args.length > 2) args(2).toInt else 3
     val cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.session(s"local[$cores]", cores.toInt)
     val q = graft.SparkEntry.queries(name)
     for (i <- 1 to runs) {
       val t0 = System.nanoTime()

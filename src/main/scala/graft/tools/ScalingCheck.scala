@@ -6,7 +6,7 @@ import graft.algo.PageRank
 
 /** Measure DF-path PageRank throughput at two core counts. */
 object ScalingCheck {
-  def session(cores: Int): SparkSession = {
+  private def session(cores: Int): SparkSession = {
     // SCALE_CLUSTER=1: `cores` total cores as SEPARATE executor JVMs
     // (local-cluster[workers, coresPerWorker, memMB]) — a closer analogue
     // of N -> 4N executors than threads in one JVM: per-executor heaps and
@@ -22,24 +22,15 @@ object ScalingCheck {
     // SCALE_PARTS_MULT: shuffle partitions = cores × mult (mult > 1 trades
     // per-task fixed cost for finer load balance on the skewed tail)
     val partsMult = sys.env.getOrElse("SCALE_PARTS_MULT", "1").toInt
-    val b = SparkSession.builder().master(master)
-      .appName(s"scale-$cores")
-      .config("spark.sql.shuffle.partitions", (cores * partsMult).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // spinning-disk /tmp serialises 32 concurrent shuffle writers;
-      // tmpfs restores per-core shuffle bandwidth (cluster analogue: NVMe)
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      // shuffle buffers off-heap: superstep state churn is the dominant
-      // allocation; keeping it out of the GC'd heap stabilises the
-      // high-core legs (SCALE_OFFHEAP=0 disables)
-      .config("spark.memory.offHeap.enabled",
-        (sys.env.getOrElse("SCALE_OFFHEAP", if (cluster) "0" else "1") == "1").toString)
-      .config("spark.memory.offHeap.size", sys.env.getOrElse("SCALE_OFFHEAP_SIZE", "16g"))
-    val s = (if (cluster) b.config("spark.executor.memory", s"${memMb - 512}m") else b)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+    // shuffle buffers off-heap: superstep state churn is the dominant
+    // allocation; keeping it out of the GC'd heap stabilises the
+    // high-core legs (SCALE_OFFHEAP=0 disables)
+    val offHeap = Seq(
+      "spark.memory.offHeap.enabled" ->
+        (sys.env.getOrElse("SCALE_OFFHEAP", if (cluster) "0" else "1") == "1").toString,
+      "spark.memory.offHeap.size" -> sys.env.getOrElse("SCALE_OFFHEAP_SIZE", "16g"))
+    val executor = if (cluster) Seq("spark.executor.memory" -> s"${memMb - 512}m") else Nil
+    graft.SparkEntry.session(master, cores * partsMult, offHeap ++ executor: _*)
   }
 
   /** One measurement leg: `rounds` PageRank runs in one session on a cached

@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.Row
 import graft.graph.LinkGraph
 import graft.algo.PageRank
 import graft.ckpt.{Catalog, CatalogRunContext}
@@ -135,6 +136,52 @@ class CkptSpec extends AnyFunSuite {
     assert(ctx2.stats.nonEmpty && ctx2.stats.forall(_.step > 2),
       "resume recomputed pre-crash supersteps")
     assert(resumed == full)
+  }
+
+  /** Runs `program` over `table` through the DataFrame driver to its halt
+    * under one catalog run, then again under a second run whose snapshots
+    * after step `k` are deleted (a crash during step k + 1), and checks
+    * that the resumed run starts after step k and ends in the same state. */
+  def killAfter(name: String, k: Long, table: graft.bsp.Superstep.Static)(
+      program: (org.apache.spark.sql.DataFrame, Long) => graft.bsp.Superstep.Dense): Set[Row] = {
+    val root = Files.createTempDirectory(s"graft-ckpt-$name").toString
+    val cat = new Catalog(root)
+    def run(ctx: graft.bsp.RunContext) = graft.bsp.Superstep.dataFrame(name, ctx, table)(program).collect().toSet
+    val full = run(new CatalogRunContext(cat, s"$name-a", spark))
+    val committed = cat.snapshots(s"state/$name-a")
+    assert(committed.max > k + 1, s"$name: need more than ${k + 1} supersteps, got $committed")
+    run(new CatalogRunContext(cat, s"$name-b", spark))
+    for (s <- k + 1 to committed.max)
+      Files.delete(Paths.get(root, s"state/$name-b/meta", s"manifest-$s.json"))
+    val ctx2 = new CatalogRunContext(cat, s"$name-b", spark)
+    val resumed = run(ctx2)
+    assert(ctx2.resumedFromStep == k, name)
+    assert(ctx2.stats.nonEmpty && ctx2.stats.forall(_.step > k), s"$name: resume recomputed pre-crash supersteps")
+    assert(resumed == full, name)
+    full
+  }
+
+  test("frontier (sssp) and k-core programs kill/resume: one-frame state holds all a resume needs") {
+    import spark.implicits._
+    // sssp from node 1: levels 1-3 reach, step 4 reaches nothing; the
+    // crash drops steps 3 and 4, so the resumed run must scatter from the
+    // rows the restored `fresh` flag marks
+    val g = LinkGraph.fromNumericEdgeList(spark, edges)
+    val seeds = g.nodes.filter($"name" === "1").select($"vid")
+    val sssp = killAfter("sssp", 2, g.pairTable)(
+      graft.algo.Pathing.frontierProgram(g.nodes.select($"vid"), seeds, Long.MaxValue, "a", "b"))
+    val names = g.nodes.as[(Long, String)].collect().toMap
+    assert(sssp.map(r => names(r.getLong(0)) -> r.getLong(1)).toMap ==
+      Map("1" -> 0L, "2" -> 1L, "3" -> 1L, "4" -> 1L, "9" -> 1L, "5" -> 2L, "6" -> 2L, "8" -> 2L,
+        "7" -> 3L, "10" -> 3L))
+    // a 4-clique with a 6-node path tail: the 2-core peels one tail node
+    // per step, and the crash falls mid-peel
+    val clique = for (a <- 0L to 3L; b <- a + 1 to 3L) yield (a, b, 0L)
+    val tailed = LinkGraph.fromNumericEdgeList(spark, clique ++ (3L to 8L).map(i => (i, i + 1, 0L)))
+    val core = killAfter("kcore", 3, tailed.pairTable)(graft.algo.KCore.peelProgram(tailed, 2, Long.MaxValue))
+    val tailedNames = tailed.nodes.as[(Long, String)].collect().toMap
+    assert(core.collect { case r if r.getBoolean(1) => tailedNames(r.getLong(0)) } == Set("0", "1", "2", "3"))
+    g.unpersist(); tailed.unpersist()
   }
 
   test("async metric-flush failures surface at the finish() barrier, not silently") {

@@ -158,7 +158,8 @@ class PlanSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.SortExec
     import org.apache.spark.sql.execution.aggregate.HashAggregateExec
     import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
-    import graft.algo.{Hits, Lpa, PageRank, Wcc}
+    import org.apache.spark.sql.execution.window.WindowExec
+    import graft.algo.{Hits, KCore, Lpa, PageRank, Pathing, Wcc}
     import graft.bsp.{IterativeConf, RunContext, Superstep}
     withoutAutoBroadcast {
       val n = 20000L
@@ -168,13 +169,19 @@ class PlanSpec extends AnyFunSuite {
       val ids = spark.range(0, n).select($"id".as("vid"), $"id".cast("string").as("name"))
       val g = new LinkGraph(edges0, ids, namesAreNumeric = true)
       val (e, pairs) = (g.dedupTable, g.pairTable)
+      val (keys, seeds) = (g.nodes.select($"vid"), g.nodes.filter($"vid" < 100).select($"vid"))
       Superstep.withStatic(Hits.scatterRows(g), "from") { scatter =>
         IterativeConf.withStablePartitioning(spark) {
           for ((name, d) <- Seq(
               "pagerank" -> PageRank.dfProgram(g, PageRank.Config())(e.df, e.rows),
               "hashmin" -> Wcc.hashMinProgram(g.nodes.select($"vid"), "label", 20)(pairs.df, pairs.rows),
               "lpa" -> Lpa.dfProgram(g, 10)(pairs.df, pairs.rows),
-              "hits" -> Hits.dfProgram(g, 20, 0.01)(scatter.df, scatter.rows))) {
+              "hits" -> Hits.dfProgram(g, 20, 0.01)(scatter.df, scatter.rows),
+              // the frontier program on both table shapes it runs over:
+              // sssp's (a, b) pairs and a closure's (src, dst) edges
+              "frontier(pairs)" -> Pathing.frontierProgram(keys, seeds, 20, "a", "b")(pairs.df, pairs.rows),
+              "frontier(edges)" -> Pathing.frontierProgram(keys, seeds, 20, "src", "dst")(e.df, e.rows),
+              "kcore" -> KCore.peelProgram(g, 3, 20)(pairs.df, pairs.rows))) {
             val c = Superstep.compile(Superstep.start(RunContext.none, d), d)
             val step = c.step.plan
             val s = step.toString
@@ -186,6 +193,7 @@ class PlanSpec extends AnyFunSuite {
             assert(shj.length == 2, s"$name: superstep joins are not both SHJ:\n$s")
             assert(shj.forall(j => inCodegen(step).exists(_ eq j)), s"$name: a join left codegen:\n$s")
             if (name != "lpa") assert(step.collect { case x: SortExec => x }.isEmpty, s"$name: sort:\n$s")
+            assert(step.collect { case x: WindowExec => x }.isEmpty, s"$name: window:\n$s")
             // the aggregate: partial + final hash aggregates, both codegen'd
             val agg = c.agg.plan
             val aggs = agg.collect { case a: HashAggregateExec => a }
@@ -244,8 +252,8 @@ class PlanSpec extends AnyFunSuite {
     // (a sort per superstep) and carried name-path arrays in state; the
     // rebuilt step must be a hash aggregate over (vid, parent) rows with
     // both joins SHJ so the persisted pairs/events tables are never
-    // re-sorted per level. Frontier/reached are localCheckpoint'ed to
-    // reproduce the unknown-stats regime of a real loop iteration.
+    // re-sorted per level. The state is localCheckpoint'ed to reproduce
+    // the unknown-stats regime of a real loop iteration.
     import org.apache.spark.sql.execution.SortExec
     import org.apache.spark.sql.execution.window.WindowExec
     import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
@@ -258,10 +266,10 @@ class PlanSpec extends AnyFunSuite {
         }.toDF("src", "dst").withColumn("ts", col("src") % 97)
         val g = LinkGraph.fromRawEdges(edges0)
         val pairs = g.undirectedPairs
-        val frontier = g.nodes.filter($"vid" < 100)
-          .select($"vid", lit(0L).as("dist"), lit(null).cast("long").as("parent"))
-          .localCheckpoint(true)
-        val step = graft.algo.Pathing.ssspStep(frontier, frontier, pairs, 1L)
+        val state = g.nodes.select($"vid", when($"vid" < 100, 0L).as("dist"),
+            lit(null).cast("long").as("parent"), ($"vid" < 100).as("fresh"))
+          .repartition(p, $"vid").localCheckpoint(true)
+        val step = graft.algo.Pathing.frontierStep(state, pairs, "a", "b")
         val exec = step.queryExecution.executedPlan
         val s = exec.toString
         assert(exec.collect { case x: SortExec => x }.isEmpty, s"per-level sort in sssp step:\n$s")
@@ -288,11 +296,11 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("frontier step (sssp + closures): SHJ joins, no sort, no window, no exchange over the cached edge table") {
-    // the anti-join against the visited set must run ABOVE the min-parent
-    // aggregate: pushed below the frontier join it re-shuffled the whole
-    // persisted edge table on every level. Checked on both static-table
-    // shapes the step runs on: sssp's (a, b) pairs (through ssspStep) and
-    // a closure's (src, dst) edges.
+    // the join against the state must run ABOVE the min-parent aggregate:
+    // an anti-join against the visited set pushed below the frontier join
+    // re-shuffled the whole persisted edge table on every level. Checked on both static-table
+    // shapes the step runs on: sssp's (a, b) pairs and a closure's (src,
+    // dst) edges.
     import org.apache.spark.sql.execution.SortExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
@@ -304,13 +312,16 @@ class PlanSpec extends AnyFunSuite {
           graft.io.Corpus.linkTargets(i, 8, 11L).map(j => (i, j))
         }.toDF("src", "dst")
         val g = LinkGraph.fromRawEdges(edges0)
-        val frontier = g.nodes.filter($"vid" < 100).select($"vid").localCheckpoint(true)
-        val visited = g.nodes.filter($"vid" < 300).select($"vid").localCheckpoint(true)
+        val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
+        // the first 300 vids reached, the first 100 of them at the last level
+        val state = g.nodes.select($"vid", when($"vid" < 300, 1L).as("dist"),
+            lit(null).cast("long").as("parent"), ($"vid" < 100).as("fresh"))
+          .repartition(p, $"vid").localCheckpoint(true)
         val pairs = g.undirectedPairs
         val dedup = g.dedupEdges
         for (step <- Seq(
-            graft.algo.Pathing.ssspStep(frontier, visited, pairs, 1L),
-            graft.algo.Pathing.frontierStep(frontier, visited, dedup))) {
+            graft.algo.Pathing.frontierStep(state, pairs, "a", "b"),
+            graft.algo.Pathing.frontierStep(state, dedup, "src", "dst"))) {
           val exec = step.queryExecution.executedPlan
           val s = exec.toString
           assert(exec.collect { case x: SortExec => x }.isEmpty, s"per-level sort in frontier step:\n$s")

@@ -13,8 +13,8 @@ import graft.graph.LinkGraph
 /** The DataFrame superstep driver runs each program's step plan compiled
   * once; these runs of 3+ steps must equal a loop that plans every step
   * afresh from the same fragments (a compiled plan that reused an earlier
-  * step's shuffle output would repeat that step's messages). The sparse
-  * BFS loops and the k-core peel release each level's replaced checkpoints. */
+  * step's shuffle output would repeat that step's messages). Every loop,
+  * dense or sparse, releases the checkpoints it replaced. */
 class SuperstepSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -102,11 +102,16 @@ class SuperstepSpec extends AnyFunSuite {
     val clique = for (a <- 0L to 4L; b <- a + 1 to 4L) yield (a, b, 0L)
     val tailed = LinkGraph.fromNumericEdgeList(spark, clique ++ (4L to 23L).map(i => (i, i + 1, 0L)))
     tailed.pairTable
+    // a 30-edge path: deltaStepping settles one bucket per node
+    val path = LinkGraph.fromNumericEdgeList(spark, (0L until 30L).map(i => (i, i + 1, i)))
+    path.edges.count()
     val sc = spark.sparkContext
     for ((name, run) <- Seq[(String, () => DataFrame)](
         "sssp" -> (() => Pathing.sssp(g, "0", cutoff = 6)),
         "sssp(no paths)" -> (() => Pathing.sssp(g, "0", withPaths = false)),
         "outComponentOf" -> (() => Components.outComponentOf(g, "2999")),
+        "inComponentOf" -> (() => Components.inComponentOf(g, "0")),
+        "deltaStepping" -> (() => Pathing.deltaStepping(path, "0", direction = "out")),
         "kcore" -> (() => KCore.coreSet(tailed, 2)))) {
       val before = sc.getPersistentRDDs.keySet
       val res = run()
@@ -115,7 +120,24 @@ class SuperstepSpec extends AnyFunSuite {
       val read = rddsRead(res)
       assert(left.subsetOf(read), s"$name left ${(left -- read).size} persisted RDDs its result does not read")
     }
-    g.unpersist(); tailed.unpersist()
+    g.unpersist(); tailed.unpersist(); path.unpersist()
+  }
+
+  test("sssp and outComponentOf on a 30-edge path: one job per level plus a fixed few") {
+    val path = LinkGraph.fromNumericEdgeList(spark, (0L until 30L).map(i => (i, i + 1, i)))
+    path.nodes.count(); path.dedupTable; path.pairTable
+    // 30 levels reach a node each and a 31st reaches none; the fixed jobs
+    // are the broadcasts of the small test tables' joins, the path
+    // reconstruction's max and the result's count
+    val (levels, fixed) = (31, 6)
+    val (n, jobs) = TestSpark.jobsIn(Pathing.sssp(path, "0").count())
+    assert(n == 31)
+    assert(jobs <= levels + fixed, s"sssp issued $jobs Spark jobs for $levels levels")
+    // 34: the closure's count as a hand-checkpointed level loop
+    val (m, closureJobs) = TestSpark.jobsIn(Components.outComponentOf(path, "0").count())
+    assert(m == 30)
+    assert(closureJobs <= 34, s"outComponentOf issued $closureJobs Spark jobs")
+    path.unpersist()
   }
 
   test("DF PageRank (6 steps) and catalog WCC keep only the checkpoints their results read") {

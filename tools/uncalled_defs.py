@@ -10,8 +10,12 @@ entry points are skipped. A member is
              perfbench/src names it, and
   test-only  when only files under src/test name it.
 
-Names are matched as whole identifiers in code with comments removed, so a
-member that shares its name with another file's identifier counts as
+Names are matched as whole identifiers in code with comments removed. A
+member of an `object` counts as named in another file only where that file
+writes `Owner.name` or imports it (`Owner._`, `Owner.{..., name, ...}`,
+`Owner.name`); members of classes and traits, whose instance calls carry no
+owner, and top-level declarations count wherever their name appears. So a
+class member that shares its name with another file's identifier counts as
 named: the lists can miss dead code, but what they list is unreferenced.
 
 Usage: python3 tools/uncalled_defs.py [repo_root]
@@ -33,9 +37,13 @@ UNCALLED_OK = {
 }
 # (file stem, member name) -> why it stays although only tests name it.
 TEST_ONLY_OK = {
+    ("ResultOps", "ResultOps"): "the reference AlgorithmResult surface; AlgoSpec covers it",
     ("ResultOps", "sortByNode"): "reference AlgorithmResult.sort_by_node; AlgoSpec covers it",
     ("ResultOps", "minBy"): "reference AlgorithmResult.min; AlgoSpec covers it",
     ("ResultOps", "groupByValue"): "reference AlgorithmResult.group_by; AlgoSpec covers it",
+    ("ResultOps", "topK"): "reference AlgorithmResult.top_k; AlgoSpec covers it",
+    ("ResultOps", "median"): "reference AlgorithmResult.median; AlgoSpec covers it",
+    ("Louvain", "modularity"): "the modularity Louvain maximises (community_detection/modularity.rs); LouvainSpec covers it",
     ("Bench", "stdoutLine"): "Bench's capped stdout line, split out so BenchSpec can check the cap",
     ("BipartiteProjection", "projectByNames"): "library API over names; AlgoSpec covers it",
     ("Metrics", "globalClusteringCoefficient"): "reference global_clustering_coefficient; AlgoSpec covers it",
@@ -44,7 +52,11 @@ TEST_ONLY_OK = {
     ("Hits", "scatterRows"): STEP,
     ("Lpa", "lpaPhase"): STEP,
     ("PageRank", "initState"): STEP,
-    ("Pathing", "ssspStep"): STEP,
+    ("Pathing", "frontierStep"): STEP,
+    ("KCore", "peelProgram"): STEP,
+    ("Hits", "dfProgram"): STEP,
+    ("Lpa", "dfProgram"): STEP,
+    ("PageRank", "superstep"): STEP,
     ("Pathing", "deltaRelax"): STEP,
     ("Pathing", "reachScatter"): STEP,
     ("Wcc", "hashMinProgram"): STEP,
@@ -98,6 +110,7 @@ SEARCH_DIRS = ("src/main", "src/test", "perfbench/src")
 MODIFIERS = r"(?:(?:private|protected)(?:\[\w+\])?|final|override|implicit|lazy|sealed|case|abstract)"
 DECL = re.compile(r"^\s*((?:" + MODIFIERS + r"\s+)*)(def|val|var|object)\s+([A-Za-z_]\w*)")
 TEMPLATE_KW = re.compile(r"\b(object|class|trait|def|val|var|new)\b")
+TEMPLATE_NAME = re.compile(r"\b(?:object|class|trait)\s+([A-Za-z_]\w*)")
 VISIBILITY = re.compile(r"\b(private|protected)(?:\[(\w+)\])?")
 
 
@@ -160,13 +173,16 @@ def drop_parens(text):
 
 
 def members(code):
-    """(name, line) of each listed member declared in one file's `code`."""
+    """(name, line, owner) of each listed member declared in one file's
+    `code`; owner is the enclosing object's name, or None in a class, trait
+    or at the top level."""
     found, entry_points = [], set()
-    # per open brace: (is_template, hidden, line of the object it opens)
+    # per open brace: (is_template, hidden, line of the object it opens,
+    # the object's name)
     stack, header, object_line = [], [], None
     for idx, ln in enumerate(code.split("\n")):
         in_template = not stack or stack[-1][0]
-        hidden = any(h for _, h, _ in stack)
+        hidden = any(h for _, h, _, _ in stack)
         in_params = "".join(header).count("(") > "".join(header).count(")")
         m = DECL.match(ln)
         if m and in_template and not in_params:
@@ -178,15 +194,17 @@ def members(code):
             if name == "main" and stack:
                 entry_points.add(stack[-1][2])
             elif public and not hidden and "override" not in mods:
-                found.append((name, idx + 1))
+                found.append((name, idx + 1, stack[-1][3] if stack else None))
         for ch in ln + "\n":
             if ch == "{":
                 head = drop_parens("".join(header))
                 kws = TEMPLATE_KW.findall(head)
                 is_template = bool(kws) and kws[-1] in ("object", "class", "trait")
                 vis = VISIBILITY.search(head) if is_template else None
+                is_object = is_template and kws[-1] == "object"
                 stack.append((is_template, vis is not None and vis.group(2) != "graft",
-                              object_line if is_template and kws[-1] == "object" else None))
+                              object_line if is_object else None,
+                              TEMPLATE_NAME.findall(head)[-1] if is_object else None))
                 header = []
             elif ch in "};":
                 if ch == "}" and stack:
@@ -195,7 +213,17 @@ def members(code):
             else:
                 header.append(ch)
     # an object that declares `main` is an entry point, run by name
-    return [(n, line) for n, line in found if line not in entry_points]
+    return [(n, line, owner) for n, line, owner in found if line not in entry_points]
+
+
+def names_member(code, owner, name):
+    """Whether `code` writes `owner.name` or imports `name` from `owner`."""
+    o, n = re.escape(owner), re.escape(name)
+    if re.search(r"\b%s\s*\.\s*%s\b" % (o, n), code) or \
+            re.search(r"\bimport\s[^\n;]*\b%s\s*\.\s*_(?!\w)" % o, code):
+        return True
+    return any(name in re.findall(r"[A-Za-z_]\w*", sel)
+               for sel in re.findall(r"\bimport\s[^\n;]*\b%s\s*\.\s*\{([^}]*)\}" % o, code))
 
 
 def scala_files(root):
@@ -219,8 +247,9 @@ def main(argv):
     for path in sorted(code):
         if not path.startswith("src/main/"):
             continue
-        for name, line in members(blank_strings(code[path])):
-            users = [p for p in code if p != path and name in names[p]]
+        for name, line, owner in members(blank_strings(code[path])):
+            users = [p for p in code if p != path and name in names[p]
+                     and (owner is None or names_member(code[p], owner, name))]
             entry = (path, line, name)
             if not users:
                 uncalled.append(entry)
